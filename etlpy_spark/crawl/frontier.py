@@ -850,8 +850,8 @@ class SparkCrawler:
         # materializes the fetch) — the r2.0 separate log.append cost a full
         # Spark job per round just to materialize the fetch cache. Part
         # files are named by partition id and land via atomic rename, so a
-        # re-computed partition (cache race under ETLPY_CRAWL_OVERLAP, task
-        # retry) overwrites its own identical output instead of duplicating.
+        # re-computed partition (evicted cache block, task retry)
+        # overwrites its own identical output instead of duplicating.
         v_log, log_dir = self.log.begin_external()
 
         def fetch_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -923,13 +923,8 @@ class SparkCrawler:
         fetched = n_selected
 
         # the log append above materialized the `extracted` cache, so the
-        # link path and the image path below read it without re-fetching —
-        # and being independent until the frontier commit, the image
-        # fetch/decode/append runs CONCURRENTLY (its own driver thread;
-        # Spark schedules jobs from multiple threads freely). This overlaps
-        # the two largest per-round jobs instead of paying them serially.
-        from concurrent.futures import ThreadPoolExecutor
-
+        # link path and the image path (run after the seen commit below)
+        # read it without re-fetching.
         def image_path() -> int:
             refs = (
                 extracted.filter(F.col("kind") == "img")
@@ -1148,16 +1143,6 @@ class SparkCrawler:
             _, n_imgs = self.images.append_counted(img_rows, meta={"round": rnd})
             return int(n_imgs)
 
-        # job-level overlap of the image and link paths: helps only when
-        # executors are NOT already saturated (both stages are Python-CPU
-        # heavy; on a saturated local[N] the overlap doubles the resident
-        # pyspark workers and measured 2x SLOWER). Opt-in for clusters
-        # with idle capacity.
-        overlap = os.environ.get("ETLPY_CRAWL_OVERLAP", "0") == "1"
-        if overlap:
-            pool = ThreadPoolExecutor(max_workers=1)
-            img_future = pool.submit(image_path)
-
         # -- link path: canonicalize, dedup, bloom, anti-join, sequence.
         # Extracted links are well-formed, so the JVM rlike fast path keeps
         # ~the whole multi-GB link stream out of the Python UDF entirely —
@@ -1231,11 +1216,7 @@ class SparkCrawler:
         if fetched < 0:
             fetched = n_logged
         _t = _tlog("seen_commit+log", _t)
-        if overlap:
-            n_new_images = img_future.result()
-            pool.shutdown()
-        else:
-            n_new_images = image_path()
+        n_new_images = image_path()
         _t = _tlog("image_path", _t)
         m = {
             "round": rnd,

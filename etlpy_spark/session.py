@@ -59,15 +59,10 @@ def get_spark(
             b.config("spark.io.compression.codec", codec)
             .config("spark.sql.parquet.compression.codec", codec)
         )
-    if os.environ.get("ETLPY_DAEMON_PRELOAD", "0") == "1":
-        # OPT-IN: fork Python workers from a daemon that has already
-        # imported numpy/pandas/pyarrow. Measured NIL locally (the Arrow
-        # serializer imports pandas before any UDF body runs) — it only
-        # shaves first-wave latency on a real cluster, and on a cluster
-        # where the package ships solely via --py-files the preload module
-        # may not be importable at daemon launch, failing workers with an
-        # obscure daemon error. Hence default-off.
-        b = b.config("spark.python.daemon.module", "etlpy_spark.spark_daemon")
+    # Fork Python workers from a daemon that stops every task re-reading
+    # pyspark.zip's directory (see spark_daemon.py); the package root is on
+    # the workers' PYTHONPATH above, so the module imports at daemon start.
+    b = b.config("spark.python.daemon.module", "etlpy_spark.spark_daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

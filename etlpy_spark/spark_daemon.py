@@ -1,50 +1,77 @@
-"""Python-worker daemon with pre-warmed heavy imports.
+"""Python-worker daemon that keeps zip archives' directories across tasks.
 
-Spark forks one Python worker per concurrent task slot from a single
-daemon process (``pyspark/daemon.py``; selected via the
-``spark.python.daemon.module`` conf, see Spark's PythonWorkerFactory).
-The stock daemon only imports pyspark core, so every FRESHLY FORKED
-worker pays the numpy+pandas import (~0.4 s on this host) before its
-first Arrow-UDF batch.  Importing the heavy modules HERE, in the
-daemon parent, before ``manager()`` starts forking means every child
-inherits them already-initialized via copy-on-write fork — the import
-cost is paid once per executor instead of once per worker.
+Spark forks every Python worker from one daemon process
+(``pyspark/daemon.py``; :func:`etlpy_spark.session.get_spark` selects this
+module through ``spark.python.daemon.module``). Before each task runs, the
+worker calls ``importlib.invalidate_caches()`` (``setup_spark_files`` in
+``pyspark/worker_util.py``). Before CPython 3.13 that makes every cached
+``zipimporter`` re-read its archive's central directory — on a stock
+install a dozen-plus importers of ``pyspark.zip`` (~1.3k entries each
+time) per task, most of a small task's Python CPU.
 
-Measured effect, honestly: on the local bench it is NIL — the untimed
-warm-up round forks and warms the whole pool, and in-UDF probes show
-0.000 s import time in every worker (the Arrow serializer imports
-pandas before the UDF body even runs, so reused workers never pay it
-again).  The win is confined to each executor's FIRST task wave — a
-real concern on a 1000-executor cluster with dynamic allocation
-(every ramp-up forks cold pools on new executors), a non-event on a
-long-lived local[N] session.  Kept because it is ~free and
-production-shaped; not claimed as a local speedup.
+:func:`install` makes ``zipimporter.invalidate_caches`` re-read an archive
+only when its ``(st_mtime_ns, st_size, st_ino)`` stamp differs from the
+one taken before its directory was last read, so a changed, replaced or
+removed archive is still picked up. The daemon installs it before it
+forks, so every worker inherits it. CPython 3.13 made
+``invalidate_caches`` lazy (it only drops the cache entry); there the
+patch is not installed.
 
-Enabled by default in :func:`etlpy_spark.session.get_spark`
-(``spark.python.daemon.module = etlpy_spark.spark_daemon``); set
-``ETLPY_DAEMON_PRELOAD=0`` to fall back to the stock daemon.
+Sessions not built by ``get_spark`` (``tools/submit_crawl.py`` ships the
+package with ``spark-submit --py-files``) keep the stock daemon: this
+module must be importable when the daemon starts.
 """
 
-import importlib
+from __future__ import annotations
 
-for _m in (
-    "numpy",
-    "pandas",
-    "pyarrow",
-    "pyarrow.parquet",
-    # lazily imported by the worker on the first Arrow-UDF task:
-    "pyspark.sql.pandas.serializers",
-    "pyspark.sql.pandas.types",
-    # hot package modules used inside crawl/dedup UDFs (pure-python,
-    # no SparkSession/UDF construction at module scope):
-    "etlpy_spark.crawl.seen",
-):
+import os
+import sys
+import zipimport
+
+
+def _stamp(path: str):
     try:
-        importlib.import_module(_m)
-    except Exception:  # pragma: no cover - preload is best-effort
-        pass
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size, st.st_ino
 
-from pyspark.daemon import manager  # noqa: E402
+
+def install() -> None:
+    """Patch :mod:`zipimport` so invalidating caches skips unchanged archives."""
+    if sys.version_info >= (3, 13):
+        return
+    read = zipimport._read_directory
+    reread = zipimport.zipimporter.invalidate_caches
+    cache = zipimport._zip_directory_cache
+    stamps: dict[str, tuple] = {}
+
+    def read_directory(archive):
+        stamp = _stamp(archive)  # taken first: a write during the read re-reads next time
+        files = read(archive)
+        stamps[archive] = stamp
+        return files
+
+    def invalidate_caches(self):
+        files = cache.get(self.archive)
+        stamp = _stamp(self.archive)
+        if files is None or stamp is None or stamps.get(self.archive) != stamp:
+            reread(self)
+        else:
+            self._files = files
+
+    zipimport._read_directory = read_directory
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
 
 if __name__ == "__main__":
+    import importlib
+
+    install()
+    # pyspark.zip's importers were created before install() (importing this
+    # package imports pyspark): stamp their archives once here, not per worker
+    importlib.invalidate_caches()
+
+    from pyspark.daemon import manager
+
     manager()
