@@ -23,7 +23,7 @@ persisted table the filter authority instead:
 The driver keeps GEOMETRY ONLY (spec tuple, shard/sub counts, byte totals
 from snapshot meta). In steady state it neither collects nor retains any
 filter bytes; the transient broadcast-mode read is gated by
-``filter_broadcast_max_bytes`` and at the design point the auto mode is
+``FILTER_BROADCAST_MAX_BYTES`` and at the design point the auto mode is
 sharded, where the driver handles zero filter bytes.
 
 Key routing: a key belongs to pair ``(pmod(xxhash64(key), n_shards),
@@ -96,17 +96,11 @@ class PairFolder:
     writes every touched pair. Memory = the task's own pairs' filters —
     O(pairs per partition), which the (shard, sub) partitioner makes ~1."""
 
-    def __init__(self, prev_dir: str | None, new_dir: str | None, spec: tuple):
+    def __init__(self, prev_dir: str | None, new_dir: str, spec: tuple):
         self.prev_dir, self.new_dir, self.spec = prev_dir, new_dir, spec
         self.filters: dict = {}
 
-    @property
-    def active(self) -> bool:
-        return self.new_dir is not None
-
     def add(self, shard: int, sub: int, keys) -> None:
-        if not self.active:
-            return
         from etlpy_spark.crawl.seen import new_filter
 
         f = self.filters.get((shard, sub))
@@ -227,7 +221,7 @@ class FilterState:
     def collect_blobs(self) -> dict:
         """{(shard, sub): bits} read driver-side with pyarrow — plain
         file IO, not a Spark job. Broadcast-mode only; callers gate on
-        ``total_bytes() <= filter_broadcast_max_bytes`` so this is the
+        ``total_bytes() <= FILTER_BROADCAST_MAX_BYTES`` so this is the
         small case by construction. Transient: the caller broadcasts and
         drops the dict — nothing is retained across rounds."""
         d = self.latest_dir()

@@ -11,11 +11,23 @@ Shape of one round (all DataFrame ops; Python only inside Arrow batches):
            fetch order) ──Bloom prefilter──▶ bloom-negative = new;
            bloom-positive ──anti-join seen──▶ survivors = new
      new urls ──row_number over fetch order──▶ discovered_seq; → frontier
-     image refs ──dedup keep-first, anti-join image table──▶ fetch bytes /
-           decode / pHash (Arrow batches) ──▶ MERGE INTO images
-     commit: frontier overwrite, seen append (+bloom), images merge,
-           crawl-log append, metrics append — one snapshot per table per
-           round; resume = continue from the last committed round.
+     image refs ──dedup keep-first──▶ image-filter prefilter ──▶ anti-join
+           image table (filter-positive residue only) ──▶ fetch bytes /
+           decode / pHash, part files written by the task (pyarrow) ──▶
+           manifest commit of the images table (+ image filter fold)
+     commit: seen append (+ seen filter fold, one fused job), crawl-log
+           manifest commit (parts written by the fetch tasks), images
+           manifest commit, frontier merge-on-read append of the new urls
+           + equality-delete tombstones of the consumed ones, metrics row
+           — one snapshot per table per round; resume = continue from the
+           last committed round.
+
+run_round sequences one private method per phase: _schedule (robots +
+politeness), _fetch (fetch_rank + fetch + crawl-log write), _new_links
+(canon/dedup/filter/anti-join/rank), _commit_seen_and_log, _image_path,
+_commit_round (frontier + metrics). Executor-side closures capture plain
+locals (web config, round, dirs, filter spec), never ``self``, which holds
+the SparkSession.
 
 Scale notes (the 1000-executor story):
   - every join against `seen` is key-sharded (pmod(xxhash64(url), S));
@@ -39,7 +51,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -49,18 +61,6 @@ from etlpy_spark.crawl.filterstate import FilterState, PairFolder
 from etlpy_spark.crawl.seen import filter_spec
 from etlpy_spark.sources.catalog import SnapshotTable
 from etlpy_spark.sources.synthetic_web import WebConfig
-
-_TIMING = os.environ.get("ETLPY_CRAWL_TIMING", "") == "1"
-
-
-def _tlog(label: str, t0: float) -> float:
-    import time
-
-    t = time.time()
-    if _TIMING:
-        print(f"    [crawl-timing] {label}: {t - t0:.2f}s", flush=True)
-    return t
-
 
 # Storage schemas are DERIVABLE-COLUMN-FREE: host and priority are pure
 # functions of the url (synthetic_web.host_expr / priority_expr), and the
@@ -78,6 +78,11 @@ _URL_ENC = {"url": "DELTA_BYTE_ARRAY"}
 IMAGES_DDL = "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long, decode_error string, first_round int, lineage_part int"
 LOG_DDL = "fetch_seq long, url string, round int, lineage_part int"
 METRICS_DDL = "round int, scheduled long, robots_blocked long, fetched long, deferred long, new_urls long, new_images long"
+# target false-positive rate of each (shard, sub) seen/image filter unit
+BLOOM_FPP = 0.01
+# filter_delivery="auto" switches from broadcast to sharded delivery once
+# the serialized filter set exceeds this many bytes
+FILTER_BROADCAST_MAX_BYTES = 64 << 20
 
 
 @dataclass
@@ -85,8 +90,6 @@ class CrawlConfig:
     web: WebConfig = field(default_factory=WebConfig)
     n_shards: int = 8  # seen-set shards
     n_buckets: int = 8  # politeness fetch buckets
-    use_bloom: bool = True
-    bloom_fpp: float = 0.01
     bloom_capacity: int = 1 << 16  # per (shard, sub) filter unit, sandbox-sized
     # below this row count a single-partition window rank is cheaper than
     # the two-phase ranged rank (extra shuffle + counts job)
@@ -94,18 +97,6 @@ class CrawlConfig:
     # metrics land in the frontier snapshot meta either way; the separate
     # metrics table commit can be skipped for benchmark runs
     write_metrics: bool = True
-    # write image part files with pyarrow INSIDE the fetch/decode UDF and
-    # manifest-commit them, so image bytes never cross the Python→Arrow→
-    # JVM→parquet row path (they go Python→pyarrow→disk); False = classic
-    # Spark writer
-    images_direct_write: bool = True
-    # sharded Bloom prefilter for the image-table MERGE anti-join (same
-    # pattern as the URL seen set): bloom-negative image refs are
-    # definitely new and skip the join, so the growing image table's
-    # image_id column is NOT re-scanned every round for the common case.
-    # Maintained only on the direct-write path (the shard write job
-    # returns the bitsets); exact either way — positives still anti-join.
-    use_image_bloom: bool = True
     # seen-set fast-path structure: "bloom" (OR-mergeable bitsets) or
     # "cuckoo" (cuckoo filter — supports delete_many for recrawl
     # scheduling, ~30-40% less space at <=1% fpp under load; merged by
@@ -113,13 +104,6 @@ class CrawlConfig:
     # seen table remains the authority either way (north_star: "sharded
     # Bloom/cuckoo-filter URL-seen set").
     seen_filter: str = "bloom"
-    # merge-on-read frontier commits: append new URLs + equality-delete
-    # tombstones for consumed ones instead of rewriting the whole pending
-    # frontier every round. O(round) per commit instead of O(pending) —
-    # the difference between a 10^10-URL frontier being writable and not.
-    # Tombstones auto-compact past the threshold fraction of live rows.
-    frontier_mor: bool = True
-    frontier_compact_threshold: float = 0.3
     # starvation protection: each deferred round improves a URL's
     # effective priority by this amount (0 = off, reference-exact order).
     # eff = max(0, priority - aging * rounds_deferred) — deterministic,
@@ -137,9 +121,8 @@ class CrawlConfig:
     #       not O(all shards) — the only shape that survives the 10^10-URL
     #       design point where the full filter set is tens of GB.
     #   "auto"      — sharded once the serialized filter set exceeds
-    #       filter_broadcast_max_bytes, else broadcast.
+    #       FILTER_BROADCAST_MAX_BYTES, else broadcast.
     filter_delivery: str = "auto"
-    filter_broadcast_max_bytes: int = 64 << 20
     # archive replay: a glob of WARC segments (sources/warc.py). When set,
     # page HTML and image bytes come from the archive (joined by URL /
     # image id) instead of the live fetcher — the Common Crawl workflow,
@@ -174,6 +157,45 @@ def _fail_once(fail_dir: str | None, tag: str, pid: int) -> None:
         with open(sentinel, "w") as f:
             f.write("1")
         raise RuntimeError(f"injected one-shot task failure ({tag}, pid={pid})")
+
+
+def _image_rows(sub: pd.DataFrame, web: WebConfig, rnd: int) -> dict:
+    """IMAGES_DDL columns for one chunk of new image refs: the bytes come
+    from the archive's ``abytes`` column when present (replay), else from
+    the live fetcher. Skip-with-reason: a blob this engine refuses
+    (progressive JPEG, garbage) becomes a decode_error row — dims/phash
+    need decoded pixels, fmt is sniffed."""
+    from etlpy_spark.functions.imagecodec import (
+        decode_or_error,
+        image_spec,
+        phash64,
+        sniff_format,
+    )
+    from etlpy_spark.sources.synthetic_web import fetch_image
+
+    rows = {k: [] for k in ("image_id", "bytes", "w", "h", "fmt", "caption", "phash", "decode_error", "first_round", "lineage_part")}
+    ab = sub["abytes"] if "abytes" in sub.columns else None
+    for j, (iid, cap, part) in enumerate(
+        zip(sub["image_id"], sub["caption"], sub["part"])
+    ):
+        if ab is not None:
+            v = ab.iloc[j]
+            data = bytes(v) if v is not None else b""
+        else:
+            data = fetch_image(iid, web)
+        px, err = decode_or_error(data)
+        if err is None:
+            w_, h_, fmt = image_spec(iid, web.seed, web.dim_scale, web.force_fmt)
+            w_, h_, ph = int(w_), int(h_), int(phash64(px))
+        else:
+            w_ = h_ = ph = None
+            fmt = sniff_format(data)
+        rows["image_id"].append(iid); rows["bytes"].append(data)
+        rows["w"].append(w_); rows["h"].append(h_); rows["fmt"].append(fmt)
+        rows["caption"].append(cap); rows["phash"].append(ph)
+        rows["decode_error"].append(err)
+        rows["first_round"].append(rnd); rows["lineage_part"].append(int(part))
+    return rows
 
 
 def global_rank(
@@ -420,7 +442,7 @@ class SparkCrawler:
         cuckoo per ``cfg.seen_filter``) — captured by executor closures and
         broadcasts instead of a class reference."""
         cfg = self.cfg
-        return filter_spec(cfg.seen_filter, cfg.bloom_capacity, cfg.bloom_fpp)
+        return filter_spec(cfg.seen_filter, cfg.bloom_capacity, BLOOM_FPP)
 
     def _commit_seen(self, urls_round: DataFrame) -> int:
         """Commit this round's new URLs to the seen table and fold them
@@ -451,18 +473,12 @@ class SparkCrawler:
             "url",
             "round",
         )
-        if not cfg.use_bloom:
-            _, n = self.seen.append_counted(rows.drop("shard", "__sub__"))
-            return n
-        import time as _time
-        _t = _time.time()
         self._ensure_seen_bits()
         spec = state.spec
         v, data_dir = self.seen.begin_external()
         bv, bits_dir = state.begin()
         prev_dir = state.latest_dir()
         fail_dir = os.environ.get("ETLPY_FAIL_ONCE_DIR")
-        _t = _tlog("    seen.ensure_bits+begin", _t)
 
         # explicit repartition, NOT groupBy: AQE would coalesce the
         # groupBy shuffle by input bytes and serialize the write+filter
@@ -506,10 +522,8 @@ class SparkCrawler:
             write_parts, schema="n long"
         )
         parts = job.collect()
-        _t = _tlog("    seen.write_job", _t)
         state.finish(bv, bits_dir, prev_dir)
         self.seen.commit_external(v, data_dir)
-        _t = _tlog("    seen.link+commit", _t)
         return sum(int(r["n"]) for r in parts)
 
     def _append_metrics_row(self, m: dict) -> None:
@@ -577,7 +591,7 @@ class SparkCrawler:
 
         - broadcast: the driver reads the pair files with pyarrow (plain
           file IO, not a Spark job — gated small by
-          filter_broadcast_max_bytes, and transient) and broadcasts once.
+          FILTER_BROADCAST_MAX_BYTES, and transient) and broadcasts once.
           Each worker deserializes ONLY the pairs present in its batches,
           once per round (memoized via seen.cached_filter keyed by a
           per-round token).
@@ -597,7 +611,7 @@ class SparkCrawler:
         total = state.total_bytes()
         mode = cfg.filter_delivery
         if mode == "auto":
-            mode = "sharded" if total > cfg.filter_broadcast_max_bytes else "broadcast"
+            mode = "sharded" if total > FILTER_BROADCAST_MAX_BYTES else "broadcast"
         shard_col = state.shard_expr(key_col)
         sub_col = state.sub_expr(key_col)
 
@@ -741,12 +755,50 @@ class SparkCrawler:
     # -- one round ----------------------------------------------------------
 
     def run_round(self) -> dict:
-        cfg, spark = self.cfg, self.spark
+        """Run one crawl round and return its metrics row. Spark actions
+        run in this order: the schedule's stats job, the large rank path's
+        offset collects (fetch order, then discovered order), the fused
+        seen write (it materializes the fetch cache and the whole link
+        path), then the image write, which reads that fetch cache. So the
+        seen + crawl-log commit precedes the image phase and the frontier
+        + metrics commit follows it."""
         st = self.state()
         rnd = int(st["round"])
-        fetch_base = int(st["next_fetch_seq"])
-        seq_base = int(st["next_discovered_seq"])
+        base, selected, scheduled, robots_blocked = self._schedule(rnd)
+        if scheduled == 0:
+            base.unpersist()
+            return {"round": rnd, "fetched": 0, "scheduled": 0}
+        caches: list = [base]
+        small = scheduled <= self.cfg.rank_threshold
+        selected, extracted, n_selected, log_txn = self._fetch(
+            selected, rnd, int(st["next_fetch_seq"]), small, caches
+        )
+        new_frontier, n_new, probe_cleanup = self._new_links(
+            extracted, rnd, int(st["next_discovered_seq"]), small, caches
+        )
+        fetched, n_new = self._commit_seen_and_log(
+            new_frontier, rnd, log_txn, n_selected, n_new
+        )
+        n_images = self._image_path(extracted, rnd)
+        m = self._commit_round(
+            st, base, selected, new_frontier, scheduled=scheduled,
+            robots_blocked=robots_blocked, fetched=fetched, n_new=n_new,
+            n_images=n_images,
+        )
+        for c in caches:
+            c.unpersist()
+        if probe_cleanup is not None:
+            # the per-round filter broadcast otherwise accumulates in the
+            # SparkContext and on executors over a long many-round crawl
+            # (sharded delivery has nothing to clean up — cleanup is None)
+            probe_cleanup()
+        return m
 
+    def _schedule(self, rnd: int) -> tuple[DataFrame, DataFrame, int, int]:
+        """Schedule phase: robots gate + politeness selection. Returns the
+        cached robots-annotated frontier, the (lazy) selected rows, and the
+        scheduled and robots-blocked counts from one stats job."""
+        cfg = self.cfg
         frontier = self.read_frontier()
 
         # robots gate: broadcast join + any-prefix match (pure expressions).
@@ -790,18 +842,10 @@ class SparkCrawler:
             .drop("disallow", "crawl_delay")
             .cache()
         )
-        import time as _time
-
-        _t = _time.time()
         stats = base.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum(F.col("__blocked__").cast("long")), F.lit(0)).alias("blk"),
         ).first()
-        scheduled, robots_blocked = int(stats["n"]), int(stats["blk"])
-        _t = _tlog("robots+politeness_stats", _t)
-        if scheduled == 0:
-            base.unpersist()
-            return {"round": rnd, "fetched": 0, "scheduled": 0}
         # politeness selection: per-host top-budget by (eprio, seq). The
         # rank filter leads with the LITERAL bound K so Catalyst's
         # InferWindowGroupLimit inserts a WindowGroupLimit on BOTH sides of
@@ -811,28 +855,37 @@ class SparkCrawler:
         # rows instead of O(pending). The data-dependent Crawl-delay budget
         # (≤ K by construction) filters exactly after the prune.
         wh = Window.partitionBy("host").orderBy("__eprio__", "discovered_seq")
-        cand = base.filter(~F.col("__blocked__"))
-        ranked_cand = cand.withColumn("__hk__", F.row_number().over(wh))
-        selected = ranked_cand.filter(
-            (F.col("__hk__") <= F.lit(K)) & (F.col("__hk__") <= F.col("__budget__"))
-        ).drop("__blocked__", "__hk__", "__budget__")
-        deferred = ranked_cand.filter(F.col("__hk__") > F.col("__budget__")).drop(
-            "__blocked__", "__hk__", "__budget__", "__eprio__"
+        selected = (
+            base.filter(~F.col("__blocked__"))
+            .withColumn("__hk__", F.row_number().over(wh))
+            .filter(
+                (F.col("__hk__") <= F.lit(K)) & (F.col("__hk__") <= F.col("__budget__"))
+            )
+            .drop("__blocked__", "__hk__", "__budget__")
         )
+        return base, selected, int(stats["n"]), int(stats["blk"])
 
+    def _fetch(
+        self, selected: DataFrame, rnd: int, fetch_base: int, small: bool,
+        caches: list,
+    ) -> tuple[DataFrame, DataFrame, int, tuple[int, str]]:
+        """Fetch phase: global fetch order (fetch_rank), then fetch + parse
+        inside politeness buckets, the crawl log written by the same tasks.
+        Lazy apart from the large rank path's offset collect. Returns the
+        ranked selected rows, the cached extracted (link, image) rows, the
+        selected count (-1 on the small rank path) and the crawl log's
+        reserved (version, dir)."""
+        cfg = self.cfg
         # global fetch order (total: priority, discovered_seq unique). The
         # selected-row count is NOT aggregated up front (that would force a
         # full un-pruned window pass): the large rank path counts as a side
         # effect of its partition-offset collect, and the small path's
         # count arrives free from the crawl-log commit's parquet footers.
-        round_caches: list = []
         selected, n_selected = global_rank(
             selected, ["__eprio__", "discovered_seq"], "fetch_seq", fetch_base,
-            cfg.n_buckets, small=scheduled <= cfg.rank_threshold,
-            caches=round_caches, count=False,
+            cfg.n_buckets, small=small, caches=caches, count=False,
         )
         selected = selected.drop("__eprio__")
-        _t = _tlog("fetch_rank", _t)
 
         # fetch inside politeness buckets (salted by host hash). Archive
         # replay joins the page HTML in BEFORE bucketing (left join: a
@@ -914,236 +967,20 @@ class SparkCrawler:
         extracted = buckets.mapInPandas(
             fetch_pages,
             schema="fetch_seq long, kind string, pos int, value string, caption string, part int",
-        )
-        extracted = extracted.cache()
-        # every selected row is fetched exactly once, so fetched ==
-        # n_selected. The large rank path already knows it; the small path
-        # (n_selected == -1) gets it free from the crawl-log commit's
-        # parquet footers below — never a dedicated count job.
-        fetched = n_selected
+        ).cache()
+        caches.append(extracted)
+        return selected, extracted, n_selected, (v_log, log_dir)
 
-        # the log append above materialized the `extracted` cache, so the
-        # link path and the image path (run after the seen commit below)
-        # read it without re-fetching.
-        def image_path() -> int:
-            refs = (
-                extracted.filter(F.col("kind") == "img")
-                .groupBy(F.col("value").alias("image_id"))
-                .agg(
-                    F.min_by(
-                        F.struct("caption", "part"), F.struct("fetch_seq", "pos")
-                    ).alias("__f__")
-                )
-                .select("image_id", "__f__.caption", "__f__.part")
-            )
-            if cfg.archive_path:
-                # replay: blobs ride in from the archive (left join —
-                # a missing blob decodes to a decode_error row, like a
-                # dead image link in a live crawl)
-                refs = refs.join(self._archive_images(), "image_id", "left")
-            img_cleanup = None
-            have_table = self.images.current_version() is not None
-            use_ib = cfg.use_image_bloom and cfg.images_direct_write
-            if have_table and use_ib:
-                # Bloom prefilter for the MERGE: bloom-negative refs are
-                # DEFINITELY new and skip the anti-join, so the growing
-                # image table's image_id column is only scanned for the
-                # (rare at steady state) bloom-positive residue — the same
-                # short-circuit the URL seen set uses. No false negatives →
-                # the committed table stays exactly-deduped. Filter bitsets
-                # reach the probe tasks shard-locally past the broadcast
-                # size gate (see _probe_filters).
-                refs, img_cleanup = self._probe_filters(
-                    refs, "image_id", self._ensure_image_bits()
-                )
-                fresh = refs.filter(~F.col("__maybe__")).drop("__maybe__")
-                to_check = (
-                    refs.filter(F.col("__maybe__"))
-                    .drop("__maybe__")
-                    .join(self.images.read().select("image_id"), on="image_id", how="left_anti")
-                )
-                refs = fresh.unionByName(to_check)
-            elif have_table:
-                refs = refs.join(
-                    self.images.read().select("image_id"), on="image_id", how="left_anti"
-                )
-
-            def rows_for(sub: pd.DataFrame) -> dict:
-                from etlpy_spark.functions.imagecodec import (
-                    decode_or_error,
-                    image_spec,
-                    phash64,
-                    sniff_format,
-                )
-                from etlpy_spark.sources.synthetic_web import fetch_image
-
-                rows = {k: [] for k in ("image_id", "bytes", "w", "h", "fmt", "caption", "phash", "decode_error", "first_round", "lineage_part")}
-                ab = sub["abytes"] if "abytes" in sub.columns else None
-                for j, (iid, cap, part) in enumerate(
-                    zip(sub["image_id"], sub["caption"], sub["part"])
-                ):
-                    if ab is not None:
-                        v = ab.iloc[j]
-                        data = bytes(v) if v is not None else b""
-                    else:
-                        data = fetch_image(iid, web)
-                    # skip-with-reason: a codec this engine refuses
-                    # (progressive JPEG, garbage) becomes a decode_error
-                    # row — dims/phash need decoded pixels, fmt is sniffed
-                    px, err = decode_or_error(data)
-                    if err is None:
-                        w_, h_, fmt = image_spec(iid, web.seed, web.dim_scale, web.force_fmt)
-                        w_, h_, ph = int(w_), int(h_), int(phash64(px))
-                    else:
-                        w_ = h_ = ph = None
-                        fmt = sniff_format(data)
-                    rows["image_id"].append(iid); rows["bytes"].append(data)
-                    rows["w"].append(w_); rows["h"].append(h_); rows["fmt"].append(fmt)
-                    rows["caption"].append(cap); rows["phash"].append(ph)
-                    rows["decode_error"].append(err)
-                    rows["first_round"].append(rnd); rows["lineage_part"].append(int(part))
-                return rows
-
-            CHUNK = 256  # bounds per-task memory: image BYTES never
-            # accumulate beyond ~CHUNK rows per frame/file (a whole input
-            # batch of 280 KB images in one frame OOMs at high task
-            # concurrency — memory must not scale with parallelism)
-
-            if cfg.images_direct_write:
-                # bytes go Python→pyarrow→disk INSIDE the task; the Spark
-                # job only carries a count row per group. Skips the Arrow
-                # transfer, the JVM row copy and the JVM parquet encode
-                # for the ~300 KB binary payloads — on the memory-
-                # bandwidth-bound image axis those copies were the engine
-                # overhead on top of the raw codec kernel. Groups are
-                # (shard, sub): the SAME task that writes the bytes folds
-                # this round's ids into its pairs' image filters
-                # (previous-version read + add + new-version write — see
-                # crawl/filterstate.py), so no filter bytes reach the
-                # driver.
-                v, data_dir = self.images.begin_external()
-                istate = self.image_bits
-                use_ib = cfg.use_image_bloom
-                if use_ib:
-                    self._ensure_image_bits()
-                    ibv, ibits_dir = istate.begin()
-                    prev_ib = istate.latest_dir()
-                else:
-                    ibv, ibits_dir, prev_ib = None, None, None
-                wspec = istate.spec
-                fail_dir = os.environ.get("ETLPY_FAIL_ONCE_DIR")
-
-                # explicit repartition, NOT groupBy+applyInPandas: this
-                # stage's INPUT is narrow (id, caption) while its work is
-                # the whole fetch+decode+phash+parquet pipeline — AQE
-                # coalesces the groupBy shuffle by input bytes and ran the
-                # entire image axis in ONE task (measured 4.5x slower at
-                # 8 cores). repartition(n, cols) pins the partition count.
-                #
-                # Retry/speculation safety: a task CANNOT buffer its whole
-                # partition of ~300 KB payloads (memory must not scale with
-                # partition size), so instead of one deterministic file it
-                # writes CHUNK-bounded files into a private attempt dir
-                # under <data>.inprogress/ and, as its last step, atomically
-                # renames the whole dir to part-{pid:05d}/ — first rename
-                # wins, a losing/retried attempt discards its dir, and
-                # commit_external sweeps .inprogress leftovers. Either
-                # attempt's dir holds the same row set (the partition is a
-                # pure function of the round's input). Filter pair files
-                # are deterministic-named and recomputed identically by a
-                # retry (filterstate.write_pair).
-                def write_part_imgs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    import shutil
-                    import uuid
-
-                    import pyarrow as pa
-                    import pyarrow.parquet as pq
-                    from pyspark import TaskContext
-
-                    pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-                    attempt = os.path.join(
-                        data_dir + ".inprogress", uuid.uuid4().hex
-                    )
-                    os.makedirs(attempt, exist_ok=True)
-                    schema = pa.schema([
-                        ("image_id", pa.string()), ("bytes", pa.binary()),
-                        ("w", pa.int32()), ("h", pa.int32()), ("fmt", pa.string()),
-                        ("caption", pa.string()), ("phash", pa.int64()),
-                        ("decode_error", pa.string()),
-                        ("first_round", pa.int32()), ("lineage_part", pa.int32()),
-                    ])
-                    folder = PairFolder(prev_ib, ibits_dir, wspec)
-                    n = 0
-                    chunk_no = 0
-                    wrote = False
-                    for pdf in batches:
-                        for lo in range(0, len(pdf), CHUNK):
-                            sub = pdf.iloc[lo : lo + CHUNK]
-                            if not len(sub):
-                                continue
-                            tbl = pa.Table.from_pydict(rows_for(sub), schema=schema)
-                            fn = os.path.join(attempt, f"chunk-{chunk_no:05d}.parquet")
-                            chunk_no += 1
-                            # bytes are already-compressed image containers
-                            pq.write_table(tbl, fn, compression="none")
-                            wrote = True
-                            # injected AFTER a chunk landed: the retry must
-                            # supersede a PARTIALLY-written attempt dir
-                            _fail_once(fail_dir, "images", pid)
-                        for (s, u), g in pdf.groupby(["__shard__", "__sub__"]):
-                            folder.add(int(s), int(u), g["image_id"].to_numpy())
-                            n += len(g)
-                    if not wrote:
-                        shutil.rmtree(attempt, ignore_errors=True)
-                        return
-                    final = os.path.join(data_dir, f"part-{pid:05d}")
-                    try:
-                        os.rename(attempt, final)
-                    except OSError:
-                        # another attempt of this partition already
-                        # committed the identical row set — yield to it
-                        shutil.rmtree(attempt, ignore_errors=True)
-                    folder.flush()
-                    yield pd.DataFrame({"n": [n]})
-
-                if "__shard__" not in refs.columns:
-                    refs = refs.withColumn("__shard__", istate.shard_expr("image_id"))
-                refs = refs.withColumn("__sub__", istate.sub_expr("image_id"))
-                _ti = _time.time()
-                (
-                    refs.repartition(
-                        cfg.n_buckets, F.col("__shard__"), F.col("__sub__")
-                    )
-                    .mapInPandas(write_part_imgs, schema="n long")
-                    .collect()
-                )
-                _ti = _tlog("  image_write_job", _ti)
-                if use_ib:
-                    istate.finish(ibv, ibits_dir, prev_ib)
-                _, n_imgs = self.images.commit_external(v, data_dir, meta={"round": rnd})
-                _ti = _tlog("  image_commit", _ti)
-                if img_cleanup is not None:
-                    img_cleanup()
-                return int(n_imgs)
-
-            def fetch_images(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    for lo in range(0, len(pdf), CHUNK):
-                        sub = pdf.iloc[lo : lo + CHUNK]
-                        yield pd.DataFrame(rows_for(sub))
-
-            # refs are already deduped keep-first AND anti-joined against the
-            # current image table, so every img_row is a brand-new image_id:
-            # a plain append IS the MERGE INTO here — and it skips re-reading
-            # the full (growing) image table twice per round. Row count comes
-            # from the written parquet footers, so the bytes are never cached.
-            img_rows = refs.repartition(cfg.n_buckets).mapInPandas(
-                fetch_images, schema=IMAGES_DDL
-            )
-            _, n_imgs = self.images.append_counted(img_rows, meta={"round": rnd})
-            return int(n_imgs)
-
-        # -- link path: canonicalize, dedup, bloom, anti-join, sequence.
+    def _new_links(
+        self, extracted: DataFrame, rnd: int, seq_base: int, small: bool,
+        caches: list,
+    ) -> tuple[DataFrame, int, Callable[[], None] | None]:
+        """Link phase: canonicalize, keep-first dedup, seen-filter probe +
+        anti-join of the filter-positive residue, discovered_seq rank.
+        Lazy apart from the large rank path's offset collect. Returns the
+        cached new-frontier rows, their count (-1 on the small rank path)
+        and the probe's cleanup (or None)."""
+        cfg = self.cfg
         # Extracted links are well-formed, so the JVM rlike fast path keeps
         # ~the whole multi-GB link stream out of the Python UDF entirely —
         # no Arrow round-trip for rows that are already canonical.
@@ -1169,14 +1006,18 @@ class SparkCrawler:
             .select("url", "__f__.*")
         )
 
-        bloom_cleanup = None
-        if cfg.use_bloom and self.seen.current_version() is not None:
+        cleanup = None
+        if self.seen.current_version() is None:
+            # nothing is seen yet (a seedless crawl's first round after
+            # recrawl): every link is new
+            new_links = links
+        else:
             # the shard id is computed JVM-side with the same
             # pmod(xxhash64(url), S) that keys the exact table, so each url
             # is checked against exactly its own shard's filter; the bitsets
             # reach the probe tasks shard-locally past the broadcast size
             # gate (see _probe_filters)
-            links, bloom_cleanup = self._probe_filters(
+            links, cleanup = self._probe_filters(
                 links, "url", self._ensure_seen_bits()
             )
             definitely_new = links.filter(~F.col("__maybe__")).drop("__maybe__", "__shard__")
@@ -1184,40 +1025,199 @@ class SparkCrawler:
             seen_urls = self.seen.read().select("url")
             checked_new = to_check.join(seen_urls, on="url", how="left_anti")
             new_links = definitely_new.unionByName(checked_new)
-        else:
-            seen_urls = self.seen.read().select("url")
-            new_links = links.join(seen_urls, on="url", how="left_anti")
 
         ranked_links, n_new = global_rank(
             new_links, ["fetch_seq", "pos"], "discovered_seq", seq_base,
-            cfg.n_buckets, small=scheduled <= cfg.rank_threshold,
-            caches=round_caches, count=False,
+            cfg.n_buckets, small=small, caches=caches, count=False,
         )
         new_frontier = ranked_links.select(
             "url", "discovered_seq",
             F.lit(rnd + 1).alias("round"), F.col("part").alias("lineage_part"),
         ).cache()
-        _t = _tlog("links_canon_dedup_rank", _t)
+        caches.append(new_frontier)
+        return new_frontier, n_new, cleanup
 
-        # -- commit state (image append still in flight on its own thread).
-        # The fused seen write materializes the new_frontier cache (whole
-        # link path: canon UDF → keep-first agg → bloom prefilter →
-        # anti-join → rank) and returns the new-URL count in the same job.
+    def _commit_seen_and_log(
+        self, new_frontier: DataFrame, rnd: int, log_txn: tuple[int, str],
+        n_selected: int, n_new: int,
+    ) -> tuple[int, int]:
+        """Seen + crawl-log commit. The fused seen write materializes the
+        new_frontier cache (whole link path: canon UDF → keep-first agg →
+        filter probe → anti-join → rank) and returns the new-URL count in
+        the same job. That job consumed every partition of the fetch
+        cache, so all per-bucket log part files exist — manifest-commit
+        them. Every selected row is logged exactly once, so the log's
+        footer row count IS the fetched count. Returns (fetched, new URLs),
+        taking the counts the large rank path already knows."""
         n_committed = self._commit_seen(
             new_frontier.select("url", F.lit(rnd + 1).alias("round"))
         )
-        if n_new < 0:
-            n_new = n_committed
-        # the seen-commit job consumed every partition of the fetch cache,
-        # so all per-bucket log part files exist — manifest-commit them.
-        # The footer row count IS the fetched count (every selected row is
-        # logged exactly once) — the small-rank path's n_selected source.
-        _, n_logged = self.log.commit_external(v_log, log_dir, meta={"round": rnd})
-        if fetched < 0:
-            fetched = n_logged
-        _t = _tlog("seen_commit+log", _t)
-        n_new_images = image_path()
-        _t = _tlog("image_path", _t)
+        _, n_logged = self.log.commit_external(*log_txn, meta={"round": rnd})
+        return (
+            n_selected if n_selected >= 0 else n_logged,
+            n_new if n_new >= 0 else n_committed,
+        )
+
+    def _image_path(self, extracted: DataFrame, rnd: int) -> int:
+        """Image phase: keep-first image refs, image-filter probe +
+        anti-join of the filter-positive residue against the image table,
+        then ONE job that fetches, decodes and pHashes the new images,
+        writes their part files and folds their ids into the image filter
+        state. Returns the number of image rows committed."""
+        cfg = self.cfg
+        refs = (
+            extracted.filter(F.col("kind") == "img")
+            .groupBy(F.col("value").alias("image_id"))
+            .agg(
+                F.min_by(
+                    F.struct("caption", "part"), F.struct("fetch_seq", "pos")
+                ).alias("__f__")
+            )
+            .select("image_id", "__f__.caption", "__f__.part")
+        )
+        if cfg.archive_path:
+            # replay: blobs ride in from the archive (left join —
+            # a missing blob decodes to a decode_error row, like a
+            # dead image link in a live crawl)
+            refs = refs.join(self._archive_images(), "image_id", "left")
+        istate = self.image_bits
+        img_cleanup = None
+        if self.images.current_version() is not None:
+            # image-filter prefilter: filter-negative refs are
+            # DEFINITELY new and skip the anti-join, so the growing
+            # image table's image_id column is only scanned for the
+            # (rare at steady state) filter-positive residue — the same
+            # short-circuit the URL seen set uses. No false negatives →
+            # the committed table stays exactly-deduped. Filter bitsets
+            # reach the probe tasks shard-locally past the broadcast
+            # size gate (see _probe_filters).
+            refs, img_cleanup = self._probe_filters(
+                refs, "image_id", self._ensure_image_bits()
+            )
+            fresh = refs.filter(~F.col("__maybe__")).drop("__maybe__")
+            to_check = (
+                refs.filter(F.col("__maybe__"))
+                .drop("__maybe__")
+                .join(self.images.read().select("image_id"), on="image_id", how="left_anti")
+            )
+            refs = fresh.unionByName(to_check)
+        else:
+            refs = refs.withColumn("__shard__", istate.shard_expr("image_id"))
+        refs = refs.withColumn("__sub__", istate.sub_expr("image_id"))
+
+        # bytes go Python→pyarrow→disk INSIDE the task; the Spark job only
+        # carries a count row per group. Skips the Arrow transfer, the JVM
+        # row copy and the JVM parquet encode for the ~300 KB binary
+        # payloads — on the memory-bandwidth-bound image axis those copies
+        # were the engine overhead on top of the raw codec kernel. Groups
+        # are (shard, sub): the SAME task that writes the bytes folds this
+        # round's ids into its pairs' image filters (previous-version read
+        # + add + new-version write — see crawl/filterstate.py), so no
+        # filter bytes leave the executors.
+        v, data_dir = self.images.begin_external()
+        ibv, ibits_dir = istate.begin()
+        prev_ib = istate.latest_dir()
+        wspec = istate.spec
+        web = cfg.web
+        fail_dir = os.environ.get("ETLPY_FAIL_ONCE_DIR")
+        CHUNK = 256  # bounds per-task memory: image BYTES never
+        # accumulate beyond ~CHUNK rows per frame/file (a whole input
+        # batch of 280 KB images in one frame OOMs at high task
+        # concurrency — memory must not scale with parallelism)
+
+        # explicit repartition, NOT groupBy+applyInPandas: this stage's
+        # INPUT is narrow (id, caption) while its work is the whole
+        # fetch+decode+phash+parquet pipeline — AQE coalesces the groupBy
+        # shuffle by input bytes and ran the entire image axis in ONE task
+        # (measured 4.5x slower at 8 cores). repartition(n, cols) pins the
+        # partition count.
+        #
+        # Retry/speculation safety: a task CANNOT buffer its whole
+        # partition of ~300 KB payloads (memory must not scale with
+        # partition size), so instead of one deterministic file it writes
+        # CHUNK-bounded files into a private attempt dir under
+        # <data>.inprogress/ and, as its last step, atomically renames the
+        # whole dir to part-{pid:05d}/ — first rename wins, a
+        # losing/retried attempt discards its dir, and commit_external
+        # sweeps .inprogress leftovers. Either attempt's dir holds the same
+        # row set (the partition is a pure function of the round's input).
+        # Filter pair files are deterministic-named and recomputed
+        # identically by a retry (filterstate.write_pair).
+        def write_part_imgs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            import shutil
+            import uuid
+
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+            from pyspark import TaskContext
+
+            pid = TaskContext.get().partitionId() if TaskContext.get() else 0
+            attempt = os.path.join(data_dir + ".inprogress", uuid.uuid4().hex)
+            os.makedirs(attempt, exist_ok=True)
+            schema = pa.schema([
+                ("image_id", pa.string()), ("bytes", pa.binary()),
+                ("w", pa.int32()), ("h", pa.int32()), ("fmt", pa.string()),
+                ("caption", pa.string()), ("phash", pa.int64()),
+                ("decode_error", pa.string()),
+                ("first_round", pa.int32()), ("lineage_part", pa.int32()),
+            ])
+            folder = PairFolder(prev_ib, ibits_dir, wspec)
+            n = 0
+            chunk_no = 0
+            wrote = False
+            for pdf in batches:
+                for lo in range(0, len(pdf), CHUNK):
+                    sub = pdf.iloc[lo : lo + CHUNK]
+                    if not len(sub):
+                        continue
+                    tbl = pa.Table.from_pydict(_image_rows(sub, web, rnd), schema=schema)
+                    fn = os.path.join(attempt, f"chunk-{chunk_no:05d}.parquet")
+                    chunk_no += 1
+                    # bytes are already-compressed image containers
+                    pq.write_table(tbl, fn, compression="none")
+                    wrote = True
+                    # injected AFTER a chunk landed: the retry must
+                    # supersede a PARTIALLY-written attempt dir
+                    _fail_once(fail_dir, "images", pid)
+                for (s, u), g in pdf.groupby(["__shard__", "__sub__"]):
+                    folder.add(int(s), int(u), g["image_id"].to_numpy())
+                    n += len(g)
+            if not wrote:
+                shutil.rmtree(attempt, ignore_errors=True)
+                return
+            final = os.path.join(data_dir, f"part-{pid:05d}")
+            try:
+                os.rename(attempt, final)
+            except OSError:
+                # another attempt of this partition already committed the
+                # identical row set — yield to it
+                shutil.rmtree(attempt, ignore_errors=True)
+            folder.flush()
+            yield pd.DataFrame({"n": [n]})
+
+        (
+            refs.repartition(cfg.n_buckets, F.col("__shard__"), F.col("__sub__"))
+            .mapInPandas(write_part_imgs, schema="n long")
+            .collect()
+        )
+        istate.finish(ibv, ibits_dir, prev_ib)
+        _, n_imgs = self.images.commit_external(v, data_dir, meta={"round": rnd})
+        if img_cleanup is not None:
+            img_cleanup()
+        return int(n_imgs)
+
+    def _commit_round(
+        self, st: dict, base: DataFrame, selected: DataFrame,
+        new_frontier: DataFrame, scheduled: int, robots_blocked: int,
+        fetched: int, n_new: int, n_images: int,
+    ) -> dict:
+        """Round commit: one merge-on-read frontier commit appends the
+        round's new URLs and tombstones the consumed ones (fetched +
+        robots-blocked) — O(round-sized files), never O(pending); its
+        snapshot meta is the crawl's resume state. Tombstones compact
+        automatically past SnapshotTable's threshold (one distributed
+        rewrite). Then the round's metrics row. Returns the metrics."""
+        rnd = int(st["round"])
         m = {
             "round": rnd,
             "scheduled": scheduled,
@@ -1225,46 +1225,22 @@ class SparkCrawler:
             "fetched": fetched,
             "deferred": scheduled - robots_blocked - fetched,
             "new_urls": n_new,
-            "new_images": int(n_new_images),
+            "new_images": n_images,
         }
         state_meta = {
             "round": rnd + 1,
-            "next_fetch_seq": fetch_base + fetched,
-            "next_discovered_seq": seq_base + n_new,
+            "next_fetch_seq": int(st["next_fetch_seq"]) + fetched,
+            "next_discovered_seq": int(st["next_discovered_seq"]) + n_new,
             "metrics": m,
         }
-        if cfg.frontier_mor:
-            # merge-on-read commit: append the round's NEW urls + tombstone
-            # the consumed ones (fetched + robots-blocked). O(round-sized
-            # files), never O(pending) — at a 10^10-URL frontier the old
-            # overwrite path rewrote every deferred row every round, which
-            # WAS the per-round commit cost at scale. Tombstones compact
-            # automatically past the threshold (one distributed rewrite).
-            removed = selected.select("url").unionByName(
-                base.filter(F.col("__blocked__")).select("url")
-            )
-            self.frontier.append_with_deletes(
-                new_frontier, removed, key="url", meta=state_meta,
-                compact_threshold=cfg.frontier_compact_threshold,
-            )
-        else:
-            next_frontier = deferred.select(
-                "url", "discovered_seq", "round", "lineage_part"
-            ).unionByName(new_frontier)
-            self.frontier.overwrite(next_frontier, meta=state_meta)
-        if cfg.write_metrics:
+        removed = selected.select("url").unionByName(
+            base.filter(F.col("__blocked__")).select("url")
+        )
+        self.frontier.append_with_deletes(
+            new_frontier, removed, key="url", meta=state_meta
+        )
+        if self.cfg.write_metrics:
             self._append_metrics_row(m)
-        _t = _tlog("seen+frontier+metrics_commit", _t)
-        extracted.unpersist()
-        new_frontier.unpersist()
-        base.unpersist()
-        for c in round_caches:
-            c.unpersist()
-        if bloom_cleanup is not None:
-            # the per-round Bloom broadcast otherwise accumulates on the
-            # driver/executors over a long many-round crawl (sharded
-            # delivery has nothing to clean up — cleanup is None)
-            bloom_cleanup()
         return m
 
     def run(self, seeds: list[str] | None, max_rounds: int) -> list[dict]:
@@ -1382,8 +1358,7 @@ class SparkCrawler:
             # tombstone exactly the urls that ARE in the table (tombstone
             # stats drive compaction; phantom keys would skew them)
             self.seen.append_with_deletes(
-                self.spark.createDataFrame([], SEEN_DDL), hits, key="url",
-                compact_threshold=self.cfg.frontier_compact_threshold,
+                self.spark.createDataFrame([], SEEN_DDL), hits, key="url"
             )
             self.seen_bits.invalidate()  # rebuilt distributed, on demand
         hits.unpersist()

@@ -200,9 +200,6 @@ def test_probe_filters_modes_agree(spark):
         assert not any(
             results["sharded"][u][1] for u in urls if shard[u] in (1, 3)
         )
-        assert not any(
-            results["sharded"][u][1] for u in urls if shard[u] in (1, 3)
-        )
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 

@@ -13,7 +13,7 @@ import tempfile
 import pytest
 
 from etlpy_spark.crawl.frontier import CrawlConfig, SparkCrawler
-from etlpy_spark.sources.synthetic_web import WebConfig, page, seed_urls
+from etlpy_spark.sources.synthetic_web import WebConfig, make_url, page, seed_urls
 
 WEB = WebConfig(n_hosts=2, n_cats=1, pages_per_cat=6, politeness_budget=8,
                 max_links=2, max_images=1)
@@ -94,3 +94,23 @@ def test_forget_then_recrawl_rediscovers(spark, drained):
 def test_forget_unknown_is_noop(spark, drained):
     cr = drained
     assert cr.forget(["http://host0.example/cat0/p999999"]) == 0
+
+
+def test_seedless_crawl_runs_recrawled_urls(spark, tmp_path):
+    """A crawl opened with no seeds has no seen snapshot yet: its first
+    round after ``recrawl`` takes every extracted link as new instead of
+    anti-joining against the absent seen table, and later rounds run."""
+    cr = SparkCrawler(spark, str(tmp_path), CrawlConfig(web=WEB))
+    cr.init_from_seeds([])
+    assert cr.seen.current_version() is None
+    urls = [make_url(1, 0, n) for n in range(1, 7)]  # host1: robots-allowed
+    assert cr.recrawl(urls) == len(urls)
+
+    m = cr.run_round()
+    assert m["fetched"] == len(urls)
+    assert sorted(u for _, u in cr.crawl_log_list()) == sorted(urls)
+    assert m["new_urls"] > 0
+    assert len(cr.seen_urls_list()) == m["new_urls"]
+
+    m2 = cr.run_round()
+    assert m2["round"] == 1 and m2["scheduled"] == m["new_urls"]

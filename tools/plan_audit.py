@@ -217,8 +217,8 @@ def main() -> int:
     doc.append(
         "The crawl engine's plans are round-dynamic (frontier snapshot in, "
         "frontier snapshot out) and are audited structurally in "
-        "`etlpy_spark/crawl/frontier.py` docstrings + timed per phase via "
-        "`ETLPY_CRAWL_TIMING=1`; its scale-shaped properties (broadcast "
+        "`etlpy_spark/crawl/frontier.py` docstrings + timed per span via "
+        "`perfbench/run.py --trace 1`; its scale-shaped properties (broadcast "
         "robots join, min_by keep-first instead of window sorts, "
         "bloom-short-circuited anti-joins, ranged two-phase global rank, "
         "executor-side parquet for image bytes and the crawl log) are "
