@@ -50,7 +50,7 @@ def bench_crawl(spark) -> dict:
         t0 = time.time()
         cr = SparkCrawler(
             spark, wd,
-            CrawlConfig(web=web, n_shards=16, n_buckets=CPUS, write_metrics=False),
+            CrawlConfig(web=web, n_shards=16, n_buckets=CPUS),
         )
         ms = cr.run(seeds, max_rounds=3)
         dt = time.time() - t0
@@ -98,7 +98,7 @@ def bench_crawl_steady(spark) -> dict:
     try:
         cr = SparkCrawler(
             spark, wd,
-            CrawlConfig(web=web, n_shards=16, n_buckets=CPUS, write_metrics=False),
+            CrawlConfig(web=web, n_shards=16, n_buckets=CPUS),
         )
         cr.init_from_seeds(seeds)
         t0 = time.time()
@@ -132,7 +132,7 @@ def warmup(spark) -> None:
     wd = tempfile.mkdtemp(prefix="bench_warm_")
     try:
         cr = SparkCrawler(
-            spark, wd, CrawlConfig(web=web, n_shards=8, n_buckets=CPUS, write_metrics=False)
+            spark, wd, CrawlConfig(web=web, n_shards=8, n_buckets=CPUS)
         )
         cr.run(seed_urls(web, n_per_host=2), max_rounds=2)
     finally:

@@ -51,8 +51,7 @@ def main() -> int:
     try:
         cr = SparkCrawler(
             spark, wd,
-            CrawlConfig(web=web, n_shards=8, n_buckets=args.cpus,
-                        write_metrics=False),
+            CrawlConfig(web=web, n_shards=8, n_buckets=args.cpus),
         )
         t0 = time.time()
         metrics = cr.run(seeds, max_rounds=args.rounds)

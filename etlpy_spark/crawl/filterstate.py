@@ -6,9 +6,10 @@ held, and re-shipped every shard's bitset every round — ~12 GB of driver
 memory + network at the 10^10-URL design point. This module makes a
 persisted table the filter authority instead:
 
-- State = one ``SnapshotTable`` of ``(shard, sub, bits)`` rows, one tiny
-  parquet file per (shard, sub) pair with a DETERMINISTIC name, committed
-  as a new snapshot version per crawl round (mode=overwrite).
+- State = one ``SnapshotTable`` of ``(shard, sub, bits)`` rows
+  (``BITS_LAYOUT``), one tiny parquet file per (shard, sub) pair with a
+  DETERMINISTIC name, committed as a new snapshot version per crawl round
+  (mode=overwrite).
 - Fold-forward is DISTRIBUTED: the same executor task that writes a
   round's seen/image part files reads ITS pairs' previous-version files
   (pyarrow, a few KB-MB each), adds the round's new keys, and writes the
@@ -38,14 +39,14 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etlpy_spark.sources.catalog import SnapshotTable
+from etlpy_spark.sources.catalog import SnapshotTable, TableLayout, write_part
 
 BITS_DDL = "shard int, sub int, bits binary"
+BITS_LAYOUT = TableLayout(BITS_DDL)
 
 
 def pair_name(shard: int, sub: int) -> str:
@@ -72,21 +73,14 @@ def read_pair(dir_: str | None, shard: int, sub: int, spec: tuple):
 
 
 def write_pair(dir_: str, shard: int, sub: int, bits: bytes) -> None:
-    """Write one pair file, tmp + atomic rename under its DETERMINISTIC
-    name — a retried/speculated task recomputes the identical filter (a
-    pure function of the previous version + its partition's keys) and
-    replaces its own output instead of duplicating it."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tbl = pa.table({
-        "shard": pa.array([shard], pa.int32()),
-        "sub": pa.array([sub], pa.int32()),
-        "bits": pa.array([bits], pa.binary()),
-    })
-    tmp = os.path.join(dir_, f".tmp-{uuid.uuid4().hex}")
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, os.path.join(dir_, pair_name(shard, sub)))
+    """Write one pair file under its DETERMINISTIC name — a retried or
+    speculated task recomputes the identical filter (a pure function of
+    the previous version + its partition's keys) and replaces its own
+    output instead of duplicating it."""
+    write_part(
+        BITS_LAYOUT, {"shard": [shard], "sub": [sub], "bits": [bits]},
+        os.path.join(dir_, pair_name(shard, sub)),
+    )
 
 
 class PairFolder:
@@ -128,7 +122,7 @@ class FilterState:
     def __init__(self, spark: SparkSession, path: str, spec: tuple,
                  n_shards: int, n_sub: int, sub_seed: int):
         self.spark = spark
-        self.table = SnapshotTable(spark, path)
+        self.table = SnapshotTable(spark, path, BITS_LAYOUT)
         self.spec = spec
         self.n_shards = n_shards
         self.n_sub = max(1, n_sub)

@@ -13,7 +13,7 @@ Shape of one round (all DataFrame ops; Python only inside Arrow batches):
      new urls ──row_number over fetch order──▶ discovered_seq; → frontier
      image refs ──dedup keep-first──▶ image-filter prefilter ──▶ anti-join
            image table (filter-positive residue only) ──▶ fetch bytes /
-           decode / pHash, part files written by the task (pyarrow) ──▶
+           decode / pHash, part files written by the task ──▶
            manifest commit of the images table (+ image filter fold)
      commit: seen append (+ seen filter fold, one fused job), crawl-log
            manifest commit (parts written by the fetch tasks), images
@@ -21,6 +21,12 @@ Shape of one round (all DataFrame ops; Python only inside Arrow batches):
            + equality-delete tombstones of the consumed ones, metrics row
            — one snapshot per table per round; resume = continue from the
            last committed round.
+
+Every table's schema and on-disk layout is declared once below
+(``*_LAYOUT``); every part file, whoever writes it (the catalog's own
+write job, an engine task, or the crawler in-process), goes through
+``sources.catalog.write_part`` with that layout, and every commit through
+``SnapshotTable._commit_manifest``.
 
 run_round sequences one private method per phase: _schedule (robots +
 politeness), _fetch (fetch_rank + fetch + crawl-log write), _new_links
@@ -59,7 +65,7 @@ from pyspark.sql import functions as F
 
 from etlpy_spark.crawl.filterstate import FilterState, PairFolder
 from etlpy_spark.crawl.seen import filter_spec
-from etlpy_spark.sources.catalog import SnapshotTable
+from etlpy_spark.sources.catalog import SnapshotTable, TableLayout, write_part
 from etlpy_spark.sources.synthetic_web import WebConfig
 
 # Storage schemas are DERIVABLE-COLUMN-FREE: host and priority are pure
@@ -69,20 +75,36 @@ from etlpy_spark.sources.synthetic_web import WebConfig
 # in-partition CPU; storing them costs bytes through the write path (the
 # non-scaling resource on a shared bus — and 8-byte random hashes do not
 # compress, so the old 4-column seen layout was 2x the bytes of (url,
-# round) and 3.8x the bytes of the delta-encoded slim layout; probed in
-# sources/catalog.py `encodings`). ``read_frontier`` re-derives the
-# expression columns.
+# round) and 3.8x the bytes of the delta-encoded slim layout).
+# ``read_frontier`` re-derives the expression columns. Each DDL is its
+# table's declared schema; the layouts below are what gets written.
 FRONTIER_DDL = "url string, discovered_seq long, round int, lineage_part int"
 SEEN_DDL = "url string, round int"
-_URL_ENC = {"url": "DELTA_BYTE_ARRAY"}
 IMAGES_DDL = "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long, decode_error string, first_round int, lineage_part int"
 LOG_DDL = "fetch_seq long, url string, round int, lineage_part int"
 METRICS_DDL = "round int, scheduled long, robots_blocked long, fetched long, deferred long, new_urls long, new_images long"
+# URL tables: url-sorted files, prefix-delta urls (see TableLayout)
+_URL_ENC = {"url": "DELTA_BYTE_ARRAY"}
+FRONTIER_LAYOUT = TableLayout(FRONTIER_DDL, sort=("url",), encodings=_URL_ENC)
+SEEN_LAYOUT = TableLayout(SEEN_DDL, sort=("url",), encodings=_URL_ENC)
+# fetch_seq is unique per row, so a dictionary never pays; within one
+# round's url-sorted file its deltas stay small (-28% file bytes measured
+# on a 200k-row log part vs plain+snappy)
+LOG_LAYOUT = TableLayout(
+    LOG_DDL, sort=("url",),
+    encodings={**_URL_ENC, "fetch_seq": "DELTA_BINARY_PACKED"},
+)
+# image bytes are already-compressed containers
+IMAGES_LAYOUT = TableLayout(IMAGES_DDL, compression="none")
+METRICS_LAYOUT = TableLayout(METRICS_DDL)
 # target false-positive rate of each (shard, sub) seen/image filter unit
 BLOOM_FPP = 0.01
-# filter_delivery="auto" switches from broadcast to sharded delivery once
-# the serialized filter set exceeds this many bytes
+# filter probes switch from broadcast to sharded delivery once the
+# serialized filter set exceeds this many bytes (see _probe_filters)
 FILTER_BROADCAST_MAX_BYTES = 64 << 20
+# below this row count a single-partition window rank is cheaper than the
+# two-phase ranged rank (extra shuffle + counts job); see global_rank
+RANK_THRESHOLD = 20_000
 
 
 @dataclass
@@ -91,12 +113,6 @@ class CrawlConfig:
     n_shards: int = 8  # seen-set shards
     n_buckets: int = 8  # politeness fetch buckets
     bloom_capacity: int = 1 << 16  # per (shard, sub) filter unit, sandbox-sized
-    # below this row count a single-partition window rank is cheaper than
-    # the two-phase ranged rank (extra shuffle + counts job)
-    rank_threshold: int = 20_000
-    # metrics land in the frontier snapshot meta either way; the separate
-    # metrics table commit can be skipped for benchmark runs
-    write_metrics: bool = True
     # seen-set fast-path structure: "bloom" (OR-mergeable bitsets) or
     # "cuckoo" (cuckoo filter — supports delete_many for recrawl
     # scheduling, ~30-40% less space at <=1% fpp under load; merged by
@@ -109,20 +125,6 @@ class CrawlConfig:
     # eff = max(0, priority - aging * rounds_deferred) — deterministic,
     # mirrored by the serial oracle's priority_aging argument.
     priority_aging: int = 0
-    # how the per-shard seen/image filters reach the probe tasks:
-    #   "broadcast" — ONE broadcast of all shard bitsets per round; workers
-    #       lazily deserialize only the shards present in each Arrow batch,
-    #       memoized per worker per round (seen.cached_filter). Right when
-    #       the whole filter set fits comfortably in executor memory.
-    #   "sharded"   — no broadcast: keys repartition by (shard, sub) and
-    #       COGROUP with a (shard, sub, bits) DataFrame, so each task
-    #       receives exactly ITS shard's bitset through the shuffle.
-    #       Executor filter residency is O(shards that executor probes),
-    #       not O(all shards) — the only shape that survives the 10^10-URL
-    #       design point where the full filter set is tens of GB.
-    #   "auto"      — sharded once the serialized filter set exceeds
-    #       FILTER_BROADCAST_MAX_BYTES, else broadcast.
-    filter_delivery: str = "auto"
     # archive replay: a glob of WARC segments (sources/warc.py). When set,
     # page HTML and image bytes come from the archive (joined by URL /
     # image id) instead of the live fetcher — the Common Crawl workflow,
@@ -259,23 +261,14 @@ class SparkCrawler:
         self.spark = spark
         self.cfg = cfg
         self.workdir = workdir
-        # URL-heavy tables get a sorted-within-partition layout (Iceberg
-        # sort-order): crawl URLs share long prefixes, so sorting before
-        # write lets parquet dictionary/RLE pages bite — ~35% fewer bytes
-        # through the write path for scalable in-partition CPU.
-        self.frontier = SnapshotTable(
-            spark, os.path.join(workdir, "frontier"), sort_within=["url"],
-            encodings=_URL_ENC,
-        )
-        self.seen = SnapshotTable(
-            spark, os.path.join(workdir, "seen"), sort_within=["url"],
-            encodings=_URL_ENC,
-        )
-        self.images = SnapshotTable(
-            spark, os.path.join(workdir, "images"), compression="uncompressed"
-        )
-        self.log = SnapshotTable(spark, os.path.join(workdir, "crawl_log"))
-        self.metrics = SnapshotTable(spark, os.path.join(workdir, "metrics"))
+        def table(name: str, layout: TableLayout) -> SnapshotTable:
+            return SnapshotTable(spark, os.path.join(workdir, name), layout)
+
+        self.frontier = table("frontier", FRONTIER_LAYOUT)
+        self.seen = table("seen", SEEN_LAYOUT)
+        self.images = table("images", IMAGES_LAYOUT)
+        self.log = table("crawl_log", LOG_LAYOUT)
+        self.metrics = table("metrics", METRICS_LAYOUT)
         # filter AUTHORITY = persisted (shard, sub, bits) state tables;
         # the driver holds these handles (geometry + snapshot meta), never
         # filter bytes — fold-forward and probes are distributed
@@ -416,7 +409,7 @@ class SparkCrawler:
         init_caches: list = []
         ranked, n = global_rank(
             first, ["seed_seq"], "discovered_seq", 0, self.cfg.n_buckets,
-            small=len(seeds) <= self.cfg.rank_threshold, caches=init_caches,
+            small=len(seeds) <= RANK_THRESHOLD, caches=init_caches,
             count=False,
         )
         frontier = ranked.select(
@@ -447,24 +440,20 @@ class SparkCrawler:
     def _commit_seen(self, urls_round: DataFrame) -> int:
         """Commit this round's new URLs to the seen table and fold them
         into the (shard, sub) filter STATE TABLE in ONE Spark job: each
-        task writes its own seen parquet part file (pyarrow,
-        executor-side), reads its pairs' previous-version filter files,
+        task writes its own seen part file, reads its pairs'
+        previous-version filter files,
         folds its new keys in, and writes the new-version filter files —
         the driver collects only per-partition COUNT rows and then
         manifest-commits both tables (plus hard-linking untouched pairs
         forward, an O(#files) metadata pass). No filter bytes ever reach
         the driver. Returns the number of URLs committed.
 
-        Retry/speculation-safe: each task buffers its partition, sorts by
-        url and writes ONE deterministic ``part-{pid:05d}.parquet`` via tmp
-        + atomic rename — a re-run replaces its own identical row set (the
-        partition's content is a pure function of the round's input)
-        instead of adding a duplicate part file; filter pair files follow
-        the same deterministic-name protocol (filterstate.write_pair). On
-        disk the rows are the slim (url, round) layout with
-        DELTA_BYTE_ARRAY urls — shard and url_hash are derivable and
-        8-byte random hashes don't compress, so the r2 4-column layout
-        cost 3.8x the write bytes."""
+        Retry/speculation-safe: each task buffers its partition and writes
+        ONE ``part-{pid:05d}.parquet`` with ``write_part`` — a re-run
+        replaces its own identical row set (the partition's content is a
+        pure function of the round's input) instead of adding a duplicate
+        part file; filter pair files follow the same protocol
+        (filterstate.write_pair)."""
         cfg = self.cfg
         state = self.seen_bits
         rows = urls_round.select(
@@ -475,6 +464,7 @@ class SparkCrawler:
         )
         self._ensure_seen_bits()
         spec = state.spec
+        layout = self.seen.layout
         v, data_dir = self.seen.begin_external()
         bv, bits_dir = state.begin()
         prev_dir = state.latest_dir()
@@ -487,10 +477,6 @@ class SparkCrawler:
         # task, so the task's fold is the COMPLETE new state for its
         # pairs — no driver merge step exists anymore.
         def write_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import uuid
-
-            import pyarrow as pa
-            import pyarrow.parquet as pq
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId() if TaskContext.get() else 0
@@ -499,18 +485,9 @@ class SparkCrawler:
             if not parts:
                 return
             pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-            pdf = pdf.sort_values("url", kind="stable")
-            tbl = pa.Table.from_pandas(
-                pdf[["url", "round"]], preserve_index=False,
-                schema=pa.schema([("url", pa.string()), ("round", pa.int32())]),
-            )
-            tmp = os.path.join(data_dir, f".tmp-{uuid.uuid4().hex}")
-            pq.write_table(
-                tbl, tmp,
-                column_encoding={"url": "DELTA_BYTE_ARRAY"},
-                use_dictionary=["round"],
-            )
-            os.replace(tmp, os.path.join(data_dir, f"part-{pid:05d}.parquet"))
+            write_part(layout, pdf, os.path.join(data_dir, f"part-{pid:05d}.parquet"))
+            # filter adds are order-insensitive, so the fold reads the
+            # unsorted frame
             folder = PairFolder(prev_dir, bits_dir, spec)
             for (s, u), g in pdf.groupby(["shard", "__sub__"]):
                 folder.add(int(s), int(u), g["url"].to_numpy())
@@ -525,37 +502,6 @@ class SparkCrawler:
         state.finish(bv, bits_dir, prev_dir)
         self.seen.commit_external(v, data_dir)
         return sum(int(r["n"]) for r in parts)
-
-    def _append_metrics_row(self, m: dict) -> None:
-        """Commit the round's one metrics row via the DETERMINISTIC writer
-        (driver-side pyarrow, fixed part name): a crashed-round re-run
-        rewrites the identical file under the identical name, which keeps
-        the metrics table inside the streaming bridge's exactly-once
-        contract — the default Spark writer's UUID part names would
-        surface a re-run as fresh appends (ADVICE r3). One driver-side
-        row per round; no Spark job at all."""
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        v, data_dir = self.metrics.begin_external()
-        tbl = pa.table(
-            {
-                "round": pa.array([int(m["round"])], pa.int32()),
-                **{
-                    k: pa.array([int(m[k])], pa.int64())
-                    for k in (
-                        "scheduled", "robots_blocked", "fetched",
-                        "deferred", "new_urls", "new_images",
-                    )
-                },
-            }
-        )
-        tmp = os.path.join(data_dir, f".tmp-{uuid.uuid4().hex}")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(data_dir, "part-00000.parquet"))
-        self.metrics.commit_external(v, data_dir, meta={"round": int(m["round"])})
 
     def _ensure_seen_bits(self) -> FilterState:
         """Guarantee the seen filter state matches the seen table. The
@@ -586,8 +532,8 @@ class SparkCrawler:
         ``(probed_df, cleanup_fn)``. Filters come FROM THE STATE TABLE —
         the driver never folds or retains bitsets.
 
-        Two delivery modes (cfg.filter_delivery, default auto by the
-        state's total_bytes snapshot meta):
+        Two delivery modes, picked by the state's total_bytes snapshot
+        meta against FILTER_BROADCAST_MAX_BYTES:
 
         - broadcast: the driver reads the pair files with pyarrow (plain
           file IO, not a Spark job — gated small by
@@ -606,16 +552,13 @@ class SparkCrawler:
         The sub hash uses the STATE's seed (the same one its write jobs
         partition by): each pair's sub-filter contains only its own sub's
         keys, so routing must agree bit-for-bit."""
-        cfg, spark = self.cfg, self.spark
+        spark = self.spark
         spec = state.spec
-        total = state.total_bytes()
-        mode = cfg.filter_delivery
-        if mode == "auto":
-            mode = "sharded" if total > FILTER_BROADCAST_MAX_BYTES else "broadcast"
+        sharded = state.total_bytes() > FILTER_BROADCAST_MAX_BYTES
         shard_col = state.shard_expr(key_col)
         sub_col = state.sub_expr(key_col)
 
-        if mode == "broadcast":
+        if not sharded:
             import uuid
 
             from pyspark.sql.functions import pandas_udf
@@ -769,7 +712,7 @@ class SparkCrawler:
             base.unpersist()
             return {"round": rnd, "fetched": 0, "scheduled": 0}
         caches: list = [base]
-        small = scheduled <= self.cfg.rank_threshold
+        small = scheduled <= RANK_THRESHOLD
         selected, extracted, n_selected, log_txn = self._fetch(
             selected, rnd, int(st["next_fetch_seq"]), small, caches
         )
@@ -898,20 +841,17 @@ class SparkCrawler:
         buckets = selected.repartition(cfg.n_buckets, F.pmod(F.xxhash64("host"), F.lit(cfg.n_buckets)))
         web = cfg.web
 
-        # the crawl log is written INSIDE the fetch UDF (pyarrow part file
-        # per politeness bucket, manifest-committed after the first job that
-        # materializes the fetch) — the r2.0 separate log.append cost a full
-        # Spark job per round just to materialize the fetch cache. Part
-        # files are named by partition id and land via atomic rename, so a
-        # re-computed partition (evicted cache block, task retry)
-        # overwrites its own identical output instead of duplicating.
+        # the crawl log is written INSIDE the fetch UDF (one write_part
+        # file per politeness bucket, manifest-committed after the first
+        # job that materializes the fetch) — the r2.0 separate log.append
+        # cost a full Spark job per round just to materialize the fetch
+        # cache. Part files are named by partition id, so a re-computed
+        # partition (evicted cache block, task retry) overwrites its own
+        # identical output instead of duplicating.
         v_log, log_dir = self.log.begin_external()
+        log_layout = self.log.layout
 
         def fetch_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import uuid
-
-            import pyarrow as pa
-            import pyarrow.parquet as pq
             from pyspark import TaskContext
 
             from etlpy_spark.sources.synthetic_web import page, parse_page
@@ -945,24 +885,12 @@ class SparkCrawler:
                 yield pd.DataFrame(out)
             if log["fetch_seq"]:
                 n = len(log["fetch_seq"])
-                # sorted by url (unique per round): prefix-delta encoding
-                # collapses the URL bytes AND makes the file content a
-                # deterministic function of the partition's row set —
-                # byte-identical across task re-runs
-                order = sorted(range(n), key=log["url"].__getitem__)
-                tbl = pa.table({
-                    "fetch_seq": pa.array([log["fetch_seq"][i] for i in order], pa.int64()),
-                    "url": pa.array([log["url"][i] for i in order], pa.string()),
-                    "round": pa.array([rnd] * n, pa.int32()),
-                    "lineage_part": pa.array([part] * n, pa.int32()),
-                })
-                tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}")
-                pq.write_table(
-                    tbl, tmp,
-                    column_encoding={"url": "DELTA_BYTE_ARRAY"},
-                    use_dictionary=["round", "lineage_part"],
+                # url-sorted by the layout (urls are unique per round), so
+                # the file is byte-identical across task re-runs
+                log.update(round=[rnd] * n, lineage_part=[part] * n)
+                write_part(
+                    log_layout, log, os.path.join(log_dir, f"part-{part:05d}.parquet")
                 )
-                os.replace(tmp, os.path.join(log_dir, f"part-{part:05d}.parquet"))
 
         extracted = buckets.mapInPandas(
             fetch_pages,
@@ -1105,7 +1033,7 @@ class SparkCrawler:
             refs = refs.withColumn("__shard__", istate.shard_expr("image_id"))
         refs = refs.withColumn("__sub__", istate.sub_expr("image_id"))
 
-        # bytes go Python→pyarrow→disk INSIDE the task; the Spark job only
+        # bytes go Python→parquet→disk INSIDE the task; the Spark job only
         # carries a count row per group. Skips the Arrow transfer, the JVM
         # row copy and the JVM parquet encode for the ~300 KB binary
         # payloads — on the memory-bandwidth-bound image axis those copies
@@ -1115,6 +1043,7 @@ class SparkCrawler:
         # + add + new-version write — see crawl/filterstate.py), so no
         # filter bytes leave the executors.
         v, data_dir = self.images.begin_external()
+        img_layout = self.images.layout
         ibv, ibits_dir = istate.begin()
         prev_ib = istate.latest_dir()
         wspec = istate.spec
@@ -1147,20 +1076,11 @@ class SparkCrawler:
             import shutil
             import uuid
 
-            import pyarrow as pa
-            import pyarrow.parquet as pq
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId() if TaskContext.get() else 0
             attempt = os.path.join(data_dir + ".inprogress", uuid.uuid4().hex)
             os.makedirs(attempt, exist_ok=True)
-            schema = pa.schema([
-                ("image_id", pa.string()), ("bytes", pa.binary()),
-                ("w", pa.int32()), ("h", pa.int32()), ("fmt", pa.string()),
-                ("caption", pa.string()), ("phash", pa.int64()),
-                ("decode_error", pa.string()),
-                ("first_round", pa.int32()), ("lineage_part", pa.int32()),
-            ])
             folder = PairFolder(prev_ib, ibits_dir, wspec)
             n = 0
             chunk_no = 0
@@ -1170,11 +1090,9 @@ class SparkCrawler:
                     sub = pdf.iloc[lo : lo + CHUNK]
                     if not len(sub):
                         continue
-                    tbl = pa.Table.from_pydict(_image_rows(sub, web, rnd), schema=schema)
                     fn = os.path.join(attempt, f"chunk-{chunk_no:05d}.parquet")
                     chunk_no += 1
-                    # bytes are already-compressed image containers
-                    pq.write_table(tbl, fn, compression="none")
+                    write_part(img_layout, _image_rows(sub, web, rnd), fn)
                     wrote = True
                     # injected AFTER a chunk landed: the retry must
                     # supersede a PARTIALLY-written attempt dir
@@ -1216,7 +1134,11 @@ class SparkCrawler:
         robots-blocked) — O(round-sized files), never O(pending); its
         snapshot meta is the crawl's resume state. Tombstones compact
         automatically past SnapshotTable's threshold (one distributed
-        rewrite). Then the round's metrics row. Returns the metrics."""
+        rewrite). Then the round's one metrics row, written in-process
+        under a fixed part name (no Spark job): a crashed-round re-run
+        rewrites the identical file under the identical name, which keeps
+        the metrics table inside the streaming bridge's exactly-once
+        contract. Returns the metrics."""
         rnd = int(st["round"])
         m = {
             "round": rnd,
@@ -1239,8 +1161,12 @@ class SparkCrawler:
         self.frontier.append_with_deletes(
             new_frontier, removed, key="url", meta=state_meta
         )
-        if self.cfg.write_metrics:
-            self._append_metrics_row(m)
+        mv, metrics_dir = self.metrics.begin_external()
+        write_part(
+            self.metrics.layout, {k: [v] for k, v in m.items()},
+            os.path.join(metrics_dir, "part-00000.parquet"),
+        )
+        self.metrics.commit_external(mv, metrics_dir, meta={"round": rnd})
         return m
 
     def run(self, seeds: list[str] | None, max_rounds: int) -> list[dict]:
@@ -1293,9 +1219,7 @@ class SparkCrawler:
         skipped)."""
         # list inputs below the threshold take the cheap global-window rank;
         # DataFrame inputs are assumed big → two-phase ranged rank
-        is_small = (
-            not isinstance(urls, DataFrame) and len(urls) <= self.cfg.rank_threshold
-        )
+        is_small = not isinstance(urls, DataFrame) and len(urls) <= RANK_THRESHOLD
         pending = self.frontier.read()
         tgt = self._urls_df(urls).join(
             pending.select("url"), on="url", how="left_anti"

@@ -10,33 +10,54 @@ drop-in (`append` → ``df.writeTo(t).append()``, `merge_upsert` →
 
 Layout (one directory per table):
     data/v{N:06d}/part-*.parquet   -- one data dir per committed snapshot
-    snapshots/v{N:06d}.json        -- manifest: mode, data dirs, meta
+    data/v{N:06d}.del/             -- equality-delete (tombstone) keys
+    snapshots/v{N:06d}.json        -- manifest: mode, data dirs, tombstones,
+                                      merge-on-read stats, meta
     _current                       -- name of latest snapshot (atomic rename)
 
-Commit protocol: write data first, write the manifest, then atomically
-swap ``_current`` (os.replace) — a crashed writer leaves the table at the
-previous snapshot, which is exactly the resume point (generalizes the
-reference master's ``skip=`` job resume, distributed.py:42,62-63).
+This module is the only code that knows how a table's bytes reach disk.
+Two rules, each written once:
+
+- How a part file lands: :func:`write_part`. A table that declares a
+  :class:`TableLayout` (schema as a Spark DDL string, sort, per-column
+  encodings, compression) gets every data and tombstone file from this one
+  picklable function — in the calling process, in the catalog's own
+  write job, or inside an engine task that writes its rows as a side
+  effect. Columns are built against the declared schema, sorted, encoded,
+  and renamed from a tmp name onto the caller's deterministic name, so a
+  retried or speculated task replaces its own identical output instead of
+  adding a file. Tables without a layout (ad-hoc operator tables) use the
+  Spark writer.
+- How a snapshot chains onto the previous one:
+  ``SnapshotTable._commit_manifest``. Every commit (Spark-written,
+  externally written, merge-on-read) builds its manifest there: an append
+  carries the previous data dirs, tombstones and live-row stats forward, an
+  overwrite starts a fresh chain. The manifest is written first, then
+  ``_current`` is swapped atomically (os.replace): a crashed writer leaves
+  the table at the previous snapshot, which is exactly the resume point
+  (generalizes the reference master's ``skip=`` job resume,
+  distributed.py:42,62-63). A multi-table commit record (every table
+  version one crawl round wrote, rolled back together with
+  ``rollback_to``) hooks in at that one helper.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
-# Spark DDL simple-string → pyarrow type, for the executor-side writer
-# (covers the narrow bookkeeping tables that opt into per-column encodings)
+# Spark DDL simple-string → pyarrow type, for the declared table layouts
 def _pa_types() -> dict:
     import pyarrow as pa
 
     return {
         "string": pa.string(),
         "bigint": pa.int64(),
+        "long": pa.int64(),
         "int": pa.int32(),
         "smallint": pa.int16(),
         "tinyint": pa.int8(),
@@ -54,59 +75,81 @@ class _LazyPaTypes:
             return _pa_types()[key]
         except KeyError:
             raise KeyError(
-                f"no pyarrow mapping for Spark type {key!r}; extend _pa_types "
-                "or drop `encodings` for this table"
+                f"no pyarrow mapping for Spark type {key!r}; extend _pa_types"
             ) from None
 
 
 _PA_TYPES = _LazyPaTypes()
 
 
-def write_parquet_parts(
-    df: DataFrame,
-    data_dir: str,
-    pa_schema,
-    sort_cols: list[str],
-    column_encoding: dict[str, str] | None,
-    no_dict_cols: list[str] | None,
-) -> list[int]:
-    """Write one deterministic ``part-{pid:05d}.parquet`` per task into
-    ``data_dir`` (pyarrow, executor-side) and return the per-task row
-    counts. Retry/speculation-safe: each task buffers its whole partition,
-    sorts, writes to a uuid tmp name and atomically renames to its
-    partition-id name — a re-run of the same partition replaces its own
-    output (same row set) instead of adding a duplicate part file. Columns
-    named in ``column_encoding`` are written without dictionary so the
-    encoding (e.g. DELTA_BYTE_ARRAY for sorted URLs) actually applies."""
-    names = [f.name for f in pa_schema]
-    dict_cols = [c for c in names if c not in (no_dict_cols or [])]
+@dataclass
+class TableLayout:
+    """How a table's parquet files look on disk, declared once per table.
+    Picklable: executor tasks that write part files capture it.
 
-    def write(batches):
-        import uuid
+    ``ddl`` is the schema as a Spark DDL string of simple types ("url
+    string, round int"); the pyarrow schema derives from it. ``sort`` is
+    the sorted-within-file order (Iceberg "sort order"): crawl URLs share
+    long prefixes, so sorted files compress better — measured 45 -> 29 MB
+    for a 2M-row URL table — for in-partition CPU only, no shuffle.
+    ``encodings`` maps columns to a parquet encoding; those columns skip
+    the dictionary so the encoding applies (sorted URLs under
+    DELTA_BYTE_ARRAY: ~5 B/row vs ~15 B dict+snappy, 17 -> 9 MB on a 2M-row
+    table). Bytes through the write path are the non-scaling resource on a
+    shared bus / disk (BENCH/BASELINE.md). ``compression`` is a pyarrow
+    codec name; "none" for payloads that are already compressed (PNG
+    bytes: re-deflating them costs a CPU + copy pass per row for ~0
+    gain)."""
 
-        import pandas as pd
+    ddl: str
+    sort: tuple[str, ...] = ()
+    encodings: dict[str, str] = field(default_factory=dict)
+    compression: str = "snappy"
+
+    def columns(self) -> list[tuple[str, str]]:
+        return [tuple(c.split()) for c in self.ddl.split(",")]
+
+    def pa_schema(self):
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        parts = [pdf for pdf in batches if len(pdf)]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        if sort_cols:
-            pdf = pdf.sort_values(sort_cols, kind="stable")
-        tbl = pa.Table.from_pandas(pdf[names], schema=pa_schema, preserve_index=False)
-        tmp = os.path.join(data_dir, f".tmp-{uuid.uuid4().hex}")
-        pq.write_table(
-            tbl, tmp,
-            column_encoding=column_encoding or None,
-            use_dictionary=dict_cols,
-        )
-        os.replace(tmp, os.path.join(data_dir, f"part-{pid:05d}.parquet"))
-        yield pd.DataFrame({"n": [len(pdf)]})
+        return pa.schema([(n, _PA_TYPES[t]) for n, t in self.columns()])
 
-    return [int(r["n"]) for r in df.mapInPandas(write, schema="n long").collect()]
+    def tombstones(self, key: str) -> "TableLayout":
+        """Layout of the key-only equality-delete files: the key column,
+        sorted, with the key's encoding."""
+        (typ,) = [t for n, t in self.columns() if n == key]
+        enc = {c: e for c, e in self.encodings.items() if c == key}
+        return TableLayout(f"{key} {typ}", (key,), enc, self.compression)
+
+
+def write_part(layout: TableLayout, cols, path: str) -> int:
+    """Write one part file of a ``layout`` table at ``path`` and return its
+    row count. ``cols`` is a pandas DataFrame or a dict of column lists
+    holding (at least) the layout's columns. The file lands via a tmp name
+    in the same directory + os.replace, so a re-run of the same task
+    replaces its own identical output (the rows are a pure function of the
+    task's input and the sort makes the bytes one too)."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = layout.pa_schema()
+    if isinstance(cols, dict):
+        tbl = pa.Table.from_pydict({n: cols[n] for n in schema.names}, schema=schema)
+    else:
+        tbl = pa.Table.from_pandas(cols[schema.names], schema=schema, preserve_index=False)
+    if layout.sort:
+        tbl = tbl.sort_by([(c, "ascending") for c in layout.sort])
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    pq.write_table(
+        tbl, tmp,
+        compression=layout.compression,
+        column_encoding=layout.encodings or None,
+        use_dictionary=[n for n in schema.names if n not in layout.encodings],
+    )
+    os.replace(tmp, path)
+    return tbl.num_rows
 
 
 def parquet_files(data_dir: str) -> list[str]:
@@ -148,12 +191,7 @@ class Snapshot:
 
 class SnapshotTable:
     def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        compression: str | None = None,
-        sort_within: list[str] | None = None,
-        encodings: dict[str, str] | None = None,
+        self, spark: SparkSession, path: str, layout: TableLayout | None = None
     ):
         # manifests (snapshots/, _current) are written with local os I/O
         # while the data dirs go through the Spark writer — a URI-scheme
@@ -170,29 +208,9 @@ class SnapshotTable:
             path = path[len("file://"):]
         self.spark = spark
         self.path = path
-        # binary-payload tables (already-compressed image bytes) should set
-        # compression='uncompressed': re-deflating PNG payloads in the
-        # parquet writer burns a full extra CPU+copy pass per row for ~0 gain
-        self.compression = compression
-        # sorted-within-partition layout (Iceberg "sort order"): URL-heavy
-        # tables share long key prefixes, so sorting before write lets
-        # parquet dictionary/RLE pages bite — measured 45 -> 29 MB AND
-        # 1.8 -> 1.0 s for a 2M-row URL table (fewer bytes = less of the
-        # non-scaling write-bus / disk / network resource, paid for with
-        # perfectly scalable in-partition CPU). No shuffle: partitioning
-        # is untouched, only the order inside each task's output file.
-        self.sort_within = sort_within
-        # per-column parquet encodings (e.g. {"url": "DELTA_BYTE_ARRAY"}):
-        # sorted crawl URLs prefix-delta to ~5 B/row vs ~15 B dict+snappy
-        # (measured 17 -> 9 MB on a 2M-row sorted URL table; 34.5 MB for
-        # the round-2 4-column layout). The Spark parquet writer exposes no
-        # per-column encoding control, so tables that set this write their
-        # data dirs through an executor-side pyarrow writer (deterministic
-        # part names + atomic rename — retry/speculation-safe; see
-        # _write_data_dir). Bytes through the write path are the
-        # non-scaling resource on a shared bus / shared disk — trading them
-        # for in-partition CPU is the scaling win (BENCH/BASELINE.md).
-        self.encodings = encodings
+        # the declared layout: every file of the table is written by
+        # write_part with it (None = the Spark writer, inferred schema)
+        self.layout = layout
         os.makedirs(os.path.join(path, "snapshots"), exist_ok=True)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
 
@@ -200,6 +218,9 @@ class SnapshotTable:
 
     def _snap_path(self, version: int) -> str:
         return os.path.join(self.path, "snapshots", f"v{version:06d}.json")
+
+    def _data_dir(self, version: int) -> str:
+        return os.path.join(self.path, "data", f"v{version:06d}")
 
     def current_version(self) -> int | None:
         cur = os.path.join(self.path, "_current")
@@ -230,81 +251,103 @@ class SnapshotTable:
     # -- commits
 
     def _write_data_dir(
-        self, df: DataFrame, data_dir: str, sort_cols: list[str] | None = None
+        self, df: DataFrame, data_dir: str, layout: TableLayout | None = None
     ) -> None:
-        """Write ``df``'s rows as parquet under ``data_dir`` — the Spark
-        writer by default, or (when per-column ``encodings`` are set) an
-        executor-side pyarrow writer: each task buffers its partition,
-        sorts by ``sort_within`` (overridable per call via ``sort_cols`` —
-        never by mutating instance state, which would race under the
-        engine's multi-threaded rounds), and writes ONE deterministic
-        ``part-{pid:05d}.parquet`` via tmp + atomic rename, so a retried or
-        speculated task replaces its own identical output instead of
+        """Write ``df``'s rows as parquet under ``data_dir`` with ``layout``
+        (default: the table's). Without a layout this is the Spark writer.
+        With one, each task buffers its partition and writes ONE
+        ``part-{pid:05d}.parquet`` through :func:`write_part`, so a retried
+        or speculated task replaces its own identical output instead of
         duplicating rows."""
-        if sort_cols is None:
-            sort_cols = self.sort_within or []
-        if not self.encodings:
-            if sort_cols and all(c in df.columns for c in sort_cols):
-                df = df.sortWithinPartitions(*sort_cols)
-            w = df.write.mode("overwrite")
-            if self.compression:
-                w = w.option("compression", self.compression)
-            w.parquet(data_dir)
+        layout = layout or self.layout
+        if layout is None:
+            df.write.mode("overwrite").parquet(data_dir)
             return
         os.makedirs(data_dir, exist_ok=True)
-        import pyarrow as pa
 
-        pa_schema = pa.schema(
-            [(f.name, _PA_TYPES[f.dataType.simpleString()]) for f in df.schema.fields]
-        )
-        sort_cols = [c for c in sort_cols if c in df.columns]
-        enc = {k: v for k, v in self.encodings.items() if k in df.columns}
-        no_dict = [c for c in enc] or None
-        counts = write_parquet_parts(
-            df, data_dir, pa_schema, sort_cols, enc, no_dict
-        )
-        if not counts:
+        def write(batches):
+            import pandas as pd
+            from pyspark import TaskContext
+
+            parts = [pdf for pdf in batches if len(pdf)]
+            if not parts:
+                return
+            pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
+            pid = TaskContext.get().partitionId()
+            path = os.path.join(data_dir, f"part-{pid:05d}.parquet")
+            yield pd.DataFrame({"n": [write_part(layout, pdf, path)]})
+
+        if not df.mapInPandas(write, schema="n long").collect():
             # an empty snapshot must still be readable with its schema
             # (spark.read.parquet cannot infer from zero files)
-            import pyarrow.parquet as pq
+            empty = {n: [] for n, _ in layout.columns()}
+            write_part(layout, empty, os.path.join(data_dir, "part-empty.parquet"))
 
-            pq.write_table(
-                pa_schema.empty_table(), os.path.join(data_dir, "part-empty.parquet")
-            )
+    def _commit_manifest(
+        self, v: int, mode: str, data_dir: str, meta: dict | None,
+        rows: int | None = None, tombstones: tuple[str, str] | None = None,
+    ) -> dict:
+        """Make snapshot ``v`` (``data_dir`` already written) the current
+        one — the single place a snapshot chains onto its predecessor.
 
-    def _commit(self, df: DataFrame, mode: str, meta: dict | None) -> int:
-        v = (self.current_version() or 0) + 1
-        data_dir = os.path.join(self.path, "data", f"v{v:06d}")
-        self._write_data_dir(df, data_dir)
-        snap = {"version": v, "mode": mode, "data_dirs": [data_dir], "meta": meta or {}}
+        ``append`` carries the previous data dirs forward, and with them
+        the tombstones (they delete from those old dirs only) and the
+        merge-on-read stats. The stats must COUNT the appended ``rows``
+        (footer total of ``data_dir``, read when not given): a frozen
+        live-row count makes a later tiny retraction trip a full
+        compaction. ``overwrite`` starts a fresh chain: no old data, no
+        tombstones. ``tombstones=(key, del_dir)`` adds an equality-delete
+        dir that applies to the data dirs committed BEFORE this one
+        (Iceberg sequence numbers: rows appended in this commit or a later
+        one with a deleted key stay live). Returns the manifest."""
+        ps = None
         if mode == "append" and (prev := self.current_version()):
             ps = self.snapshot(prev)
-            snap["data_dirs"] = ps.data_dirs + [data_dir]
-            # tombstones survive plain appends (they delete from OLD dirs);
-            # an overwrite resets them along with the data. mor_stats must
-            # COUNT the appended rows: a frozen live-row count makes a later
-            # tomb > threshold*live check fire a full compaction on a table
-            # that is almost entirely live.
-            if ps.delete_dirs:
-                snap["delete_dirs"] = ps.delete_dirs
-                snap["delete_key"] = ps.delete_key
-                if ps.mor_stats:
-                    snap["mor_stats"] = {
-                        **ps.mor_stats,
-                        "data": ps.mor_stats["data"] + self._footer_rows(data_dir),
-                    }
-        self._write_manifest(v, snap)
-        return v
-
-    def _write_manifest(self, v: int, snap: dict) -> None:
+        prev_dirs = ps.data_dirs if ps else []
+        snap = {"version": v, "mode": mode, "data_dirs": prev_dirs + [data_dir],
+                "meta": dict(meta or {})}
+        dels = list(ps.delete_dirs or []) if ps else []
+        key = ps.delete_key if ps else None
+        stats = ps.mor_stats if ps else None
+        if tombstones:
+            tkey, del_dir = tombstones
+            if key not in (None, tkey):
+                raise ValueError(f"table already has tombstones keyed by {key!r}")
+            key = tkey
+            dels.append({"dir": del_dir, "upto": len(prev_dirs)})
+            if stats is None:
+                # first MoR commit on this table: seed the live-row count
+                # from the pre-existing data files (footer metadata only)
+                stats = {"data": sum(self._footer_rows(d) for d in prev_dirs
+                                     if os.path.exists(d)),
+                         "tomb": 0}
+            stats = {**stats, "tomb": stats["tomb"] + self._footer_rows(del_dir)}
+        if dels:
+            snap["delete_dirs"] = dels
+            snap["delete_key"] = key
+            if stats:
+                if rows is None:
+                    rows = self._footer_rows(data_dir)
+                snap["mor_stats"] = {**stats, "data": stats["data"] + rows}
         tmp = self._snap_path(v) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(snap, f)
         os.replace(tmp, self._snap_path(v))
+        self._set_current(v)
+        return snap
+
+    def _set_current(self, version: int) -> None:
         cur_tmp = os.path.join(self.path, "_current.tmp")
         with open(cur_tmp, "w") as f:
-            f.write(str(v))
+            f.write(str(version))
         os.replace(cur_tmp, os.path.join(self.path, "_current"))
+
+    def _commit(self, df: DataFrame, mode: str, meta: dict | None) -> int:
+        v = (self.current_version() or 0) + 1
+        data_dir = self._data_dir(v)
+        self._write_data_dir(df, data_dir)
+        self._commit_manifest(v, mode, data_dir, meta)
+        return v
 
     def append(self, df: DataFrame, meta: dict | None = None) -> int:
         return self._commit(df, "append", meta)
@@ -320,15 +363,16 @@ class SnapshotTable:
     def overwrite(self, df: DataFrame, meta: dict | None = None) -> int:
         return self._commit(df, "overwrite", meta)
 
-    # -- externally-written data (executor-side pyarrow writers)
+    # -- externally-written data (executor-side writers)
 
     def begin_external(self) -> tuple[int, str]:
         """Reserve the next snapshot's data dir for files written OUTSIDE
-        the Spark writer (e.g. pyarrow part files emitted inside a UDF so
-        binary payloads never cross the Arrow→JVM row path). Single-writer
-        tables only (the crawler is); commit with commit_external."""
+        the catalog's own write job (part files an engine task writes with
+        :func:`write_part` as a side effect, so e.g. binary payloads never
+        cross the Arrow→JVM row path). Single-writer tables only (the
+        crawler is); commit with commit_external."""
         v = (self.current_version() or 0) + 1
-        data_dir = os.path.join(self.path, "data", f"v{v:06d}")
+        data_dir = self._data_dir(v)
         os.makedirs(data_dir, exist_ok=True)
         return v, data_dir
 
@@ -342,11 +386,11 @@ class SnapshotTable:
         Retry/speculation safety is the WRITER protocol's job (the moral
         equivalent of Iceberg's per-task commit metadata): every external
         writer in the engine emits deterministic per-partition names via
-        atomic rename — single ``part-{pid:05d}.parquet`` files, or whole
-        ``part-{pid:05d}/`` chunk directories committed by a first-rename-
-        wins directory swap — so a retried or speculated task replaces /
-        yields to its partition's output instead of duplicating rows
-        (tests/test_task_retry.py forces a mid-write task failure and
+        :func:`write_part` — single ``part-{pid:05d}.parquet`` files, or
+        whole ``part-{pid:05d}/`` chunk directories committed by a first-
+        rename-wins directory swap — so a retried or speculated task
+        replaces / yields to its partition's output instead of duplicating
+        rows (tests/test_task_retry.py forces a mid-write task failure and
         asserts bitwise crawl parity). This commit still fences the
         leftovers: in-progress attempt dirs are swept, tmp/hidden files are
         excluded from the manifest count, and a duplicate partition id
@@ -368,21 +412,7 @@ class SnapshotTable:
                 f"duplicate partition outputs in {data_dir}: {sorted(top)}"
             )
         n = self._footer_rows(data_dir)
-        snap = {"version": version, "mode": mode, "data_dirs": [data_dir],
-                "meta": meta or {}}
-        if mode == "append" and (prev := self.current_version()):
-            ps = self.snapshot(prev)
-            snap["data_dirs"] = ps.data_dirs + [data_dir]
-            if ps.delete_dirs:
-                snap["delete_dirs"] = ps.delete_dirs
-                snap["delete_key"] = ps.delete_key
-                # count the externally committed rows into the live-row
-                # stats (see _commit): n is already the footer total
-                if ps.mor_stats:
-                    snap["mor_stats"] = {
-                        **ps.mor_stats, "data": ps.mor_stats["data"] + n
-                    }
-        self._write_manifest(version, snap)
+        self._commit_manifest(version, mode, data_dir, meta, rows=n)
         return version, n
 
     # -- merge-on-read deletes (Iceberg equality-delete files + compaction)
@@ -404,42 +434,19 @@ class SnapshotTable:
         equivalent of Iceberg's rewrite_data_files) so read-side anti-join
         cost stays bounded; amortized cost is O(changed) per commit."""
         v = (self.current_version() or 0) + 1
-        data_dir = os.path.join(self.path, "data", f"v{v:06d}")
-        del_dir = os.path.join(self.path, "data", f"v{v:06d}.del")
+        data_dir = self._data_dir(v)
+        del_dir = data_dir + ".del"
         self._write_data_dir(df, data_dir)
-        # tombstones are URL-heavy too: route them through the same writer
-        # so they get the sorted layout + delta encoding byte cut
-        self._write_data_dir(delete_keys.select(key), del_dir, sort_cols=[key])
-        prev = self.current_version()
-        psnap = self.snapshot(prev) if prev else None
-        if psnap and psnap.delete_key not in (None, key):
-            raise ValueError(
-                f"table already has tombstones keyed by {psnap.delete_key!r}"
-            )
-        prev_dirs = psnap.data_dirs if psnap else []
-        dirs = prev_dirs + [data_dir]
-        # the tombstone applies to PRE-EXISTING data dirs only (Iceberg
-        # sequence numbers): rows appended in this same commit — or any
-        # later one — with a deleted key stay live
-        dels = (psnap.delete_dirs or [] if psnap else []) + [
-            {"dir": del_dir, "upto": len(prev_dirs)}
-        ]
-        if psnap and psnap.mor_stats:
-            stats = dict(psnap.mor_stats)
-        else:
-            # first MoR commit on this table: seed the live-row count from
-            # the pre-existing data files (footer metadata only)
-            stats = {"data": sum(self._footer_rows(d) for d in prev_dirs
-                                 if os.path.exists(d)),
-                     "tomb": 0}
-        stats["data"] += self._footer_rows(data_dir)
-        stats["tomb"] += self._footer_rows(del_dir)
-        live = max(stats["data"] - stats["tomb"], 1)
-        snap = {"version": v, "mode": "append", "data_dirs": dirs,
-                "meta": dict(meta or {}), "delete_dirs": dels,
-                "delete_key": key, "mor_stats": stats}
-        self._write_manifest(v, snap)
-        if stats["tomb"] > compact_threshold * live:
+        # tombstones are URL-heavy too: the key column keeps the table's
+        # sorted layout + encoding
+        self._write_data_dir(
+            delete_keys.select(key), del_dir,
+            self.layout.tombstones(key) if self.layout else None,
+        )
+        stats = self._commit_manifest(
+            v, "append", data_dir, meta, tombstones=(key, del_dir)
+        )["mor_stats"]
+        if stats["tomb"] > compact_threshold * max(stats["data"] - stats["tomb"], 1):
             return self.compact(meta=meta)
         return v
 
@@ -517,20 +524,11 @@ class SnapshotTable:
             out = df if out is None else out.unionByName(df)
         return out
 
-    def read_or_empty(self, schema_ddl: str, version: int | None = None) -> DataFrame:
-        try:
-            return self.read(version)
-        except FileNotFoundError:
-            return self.spark.createDataFrame([], schema=schema_ddl)
-
     def rollback_to(self, version: int) -> None:
         """Point _current at an older snapshot (time travel / resume)."""
         if not os.path.exists(self._snap_path(version)):
             raise FileNotFoundError(f"no snapshot v{version}")
-        cur_tmp = os.path.join(self.path, "_current.tmp")
-        with open(cur_tmp, "w") as f:
-            f.write(str(version))
-        os.replace(cur_tmp, os.path.join(self.path, "_current"))
+        self._set_current(version)
 
     def latest_meta(self) -> dict:
         v = self.current_version()

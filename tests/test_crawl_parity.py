@@ -12,6 +12,7 @@ import tempfile
 import numpy as np
 import pytest
 
+from etlpy_spark.crawl import frontier
 from etlpy_spark.crawl.frontier import CrawlConfig, SparkCrawler
 from etlpy_spark.crawl.oracle import crawl_oracle
 from etlpy_spark.functions.imagecodec import decode, psnr
@@ -100,16 +101,15 @@ def test_resume_from_checkpoint(spark, oracle):
         shutil.rmtree(wd, ignore_errors=True)
 
 
-def test_ranged_rank_path_parity(spark, oracle):
-    """rank_threshold=0 forces the scalable two-phase range-partitioned rank
+def test_ranged_rank_path_parity(spark, oracle, monkeypatch):
+    """RANK_THRESHOLD=0 forces the scalable two-phase range-partitioned rank
     (the 10^10-row form of the global sequence) for fetch_seq AND
     discovered_seq — the crawl order must still match the serial oracle
     bit-for-bit (frontier.global_rank)."""
+    monkeypatch.setattr(frontier, "RANK_THRESHOLD", 0)
     wd = tempfile.mkdtemp(prefix="crawl_ranked_")
     try:
-        cr = SparkCrawler(
-            spark, wd, CrawlConfig(web=WEB, rank_threshold=0)
-        )
+        cr = SparkCrawler(spark, wd, CrawlConfig(web=WEB))
         cr.run(seed_urls(WEB, n_per_host=2), max_rounds=ROUNDS)
         assert cr.crawl_log_list() == oracle.crawl_log
         assert cr.seen_urls_list() == set(oracle.seen)
@@ -135,19 +135,19 @@ def test_cuckoo_seen_filter_parity(spark, oracle):
         shutil.rmtree(wd, ignore_errors=True)
 
 
-def test_sharded_filter_delivery_parity(spark, oracle):
-    """filter_delivery="sharded" routes each shard's seen/image bitset to
+def test_sharded_filter_delivery_parity(spark, oracle, monkeypatch):
+    """Sharded delivery (forced by a negative FILTER_BROADCAST_MAX_BYTES)
+    routes each shard's seen/image bitset to
     exactly its own probe task through a cogroup shuffle — no broadcast of
     the full filter set to every executor (the 10^10-URL shape). The probe
     raises inside the task if it ever receives more than its one (shard,
     sub) bitset row, so green parity here IS the per-task residency
     assertion. Crawl order / seen set / image ids must match the serial
     oracle exactly, bit-for-bit with the broadcast path."""
+    monkeypatch.setattr(frontier, "FILTER_BROADCAST_MAX_BYTES", -1)
     wd = tempfile.mkdtemp(prefix="crawl_sharded_")
     try:
-        cr = SparkCrawler(
-            spark, wd, CrawlConfig(web=WEB, filter_delivery="sharded")
-        )
+        cr = SparkCrawler(spark, wd, CrawlConfig(web=WEB))
         cr.run(seed_urls(WEB, n_per_host=2), max_rounds=ROUNDS)
         assert cr.crawl_log_list() == oracle.crawl_log
         assert cr.seen_urls_list() == set(oracle.seen)
@@ -157,7 +157,7 @@ def test_sharded_filter_delivery_parity(spark, oracle):
         shutil.rmtree(wd, ignore_errors=True)
 
 
-def test_probe_filters_modes_agree(spark):
+def test_probe_filters_modes_agree(spark, monkeypatch):
     """_probe_filters must produce the identical __maybe__ column in
     broadcast and sharded modes, including (shard, sub) pairs with no
     filter yet (definitely-new) — on urls crafted to hit both present
@@ -186,8 +186,10 @@ def test_probe_filters_modes_agree(spark):
         )
         assert state.total_bytes() > 0 and state.exists()
         results = {}
-        for mode in ("broadcast", "sharded"):
-            cr.cfg.filter_delivery = mode
+        # the size gate picks the mode: above any total → broadcast,
+        # below zero → sharded
+        for mode, gate in (("broadcast", 1 << 62), ("sharded", -1)):
+            monkeypatch.setattr(frontier, "FILTER_BROADCAST_MAX_BYTES", gate)
             probed, cleanup = cr._probe_filters(df, "url", state)
             results[mode] = {
                 r["url"]: (r["__shard__"], r["__maybe__"]) for r in probed.collect()

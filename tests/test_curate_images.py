@@ -17,8 +17,7 @@ def crawl_images(spark, tmp_path_factory):
                     max_links=3, max_images=2, skew_host0=2, image_universe=4000,
                     unsupported_every=9)
     wd = str(tmp_path_factory.mktemp("curate_crawl"))
-    cr = SparkCrawler(spark, wd, CrawlConfig(web=web, n_shards=4, n_buckets=4,
-                                             write_metrics=False))
+    cr = SparkCrawler(spark, wd, CrawlConfig(web=web, n_shards=4, n_buckets=4))
     cr.run(seed_urls(web, n_per_host=2), max_rounds=2)
     return cr.images.read()
 

@@ -17,8 +17,7 @@ def crawler(spark, tmp_path):
     web = WebConfig(n_hosts=5, n_cats=2, pages_per_cat=20, politeness_budget=6,
                     max_links=3, max_images=2, skew_host0=2, image_universe=2000)
     cr = SparkCrawler(spark, str(tmp_path / "crawl"),
-                      CrawlConfig(web=web, n_shards=4, n_buckets=4,
-                                  write_metrics=False))
+                      CrawlConfig(web=web, n_shards=4, n_buckets=4))
     cr.init_from_seeds(seed_urls(web, n_per_host=2))
     return cr
 

@@ -24,8 +24,7 @@ def crawler(spark):
     web = WebConfig(n_hosts=6, n_cats=3, pages_per_cat=4, politeness_budget=4,
                     max_links=3, max_images=1)
     wd = tempfile.mkdtemp(prefix="stream_crawl_")
-    cr = SparkCrawler(spark, wd, CrawlConfig(web=web, n_shards=2, n_buckets=4,
-                                             write_metrics=False))
+    cr = SparkCrawler(spark, wd, CrawlConfig(web=web, n_shards=2, n_buckets=4))
     cr.run(seed_urls(web, n_per_host=1), max_rounds=1)
     return cr
 

@@ -22,8 +22,7 @@ def pipeline_out(spark, tmp_path_factory):
     web = WebConfig(n_hosts=6, n_cats=3, pages_per_cat=24, politeness_budget=8,
                     max_links=3, max_images=2, skew_host0=2, image_universe=3000)
     wd = str(tmp_path_factory.mktemp("e2e_crawl"))
-    cr = SparkCrawler(spark, wd, CrawlConfig(web=web, n_shards=4, n_buckets=4,
-                                             write_metrics=False))
+    cr = SparkCrawler(spark, wd, CrawlConfig(web=web, n_shards=4, n_buckets=4))
     cr.run(seed_urls(web, n_per_host=2), max_rounds=2)
 
     curated = mm.curate_images(cr.images.read(), min_dim=48)

@@ -180,8 +180,7 @@ def test_export_webdataset_from_crawl_images(spark, tmp_path):
     web = WebConfig(n_hosts=3, n_cats=2, pages_per_cat=5, politeness_budget=3,
                     max_links=2, max_images=2)
     cr = SparkCrawler(spark, str(tmp_path / "wd"),
-                      CrawlConfig(web=web, n_shards=2, n_buckets=4,
-                                  write_metrics=False))
+                      CrawlConfig(web=web, n_shards=2, n_buckets=4))
     cr.run(seed_urls(web, n_per_host=1), max_rounds=1)
     images = cr.images.read().filter(F.col("decode_error").isNull())
     n_img = images.count()

@@ -91,8 +91,7 @@ def big_config(workload: str):
                         dim_scale=4, force_fmt="png")
         n_per_host = nph
     cfg = CrawlConfig(web=web, n_shards=16, n_buckets=SHUFFLE_PARTITIONS,
-                      bloom_capacity=1 << 17, write_metrics=False,
-                      rank_threshold=20_000)
+                      bloom_capacity=1 << 17)
     return cfg, n_per_host
 
 
@@ -104,7 +103,7 @@ def warm_config():
                     max_links=4, max_images=2, image_universe=50_000,
                     dim_scale=1)
     return CrawlConfig(web=web, n_shards=16, n_buckets=SHUFFLE_PARTITIONS,
-                       bloom_capacity=1 << 14, write_metrics=False)
+                       bloom_capacity=1 << 14)
 
 
 def worker(cpus: int, workload: str) -> None:
