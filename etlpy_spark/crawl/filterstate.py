@@ -20,6 +20,11 @@ persisted table the filter authority instead:
   own pair's bitset through the shuffle); broadcast delivery (gated to
   small totals) reads the pair files driver-side with pyarrow — file IO,
   not a Spark job — and broadcasts once.
+- Dedup is written once, here: ``FilterState.new_rows`` (ensure, probe,
+  anti-join of the filter-positive residue against the exact table)
+  serves the seen set and the image table alike, and ``PairFolder.fold``
+  is the one fold of a routed frame, used by the crawl's write-and-fold
+  tasks and by ``rebuild_from``.
 
 The driver keeps GEOMETRY ONLY (spec tuple, shard/sub counts, byte totals
 from snapshot meta). In steady state it neither collects nor retains any
@@ -39,7 +44,9 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,6 +54,9 @@ from etlpy_spark.sources.catalog import SnapshotTable, TableLayout, write_part
 
 BITS_DDL = "shard int, sub int, bits binary"
 BITS_LAYOUT = TableLayout(BITS_DDL)
+# probes switch from broadcast to sharded delivery once the serialized
+# filter set exceeds this many bytes (see FilterState.probe)
+FILTER_BROADCAST_MAX_BYTES = 64 << 20
 
 
 def pair_name(shard: int, sub: int) -> str:
@@ -105,6 +115,13 @@ class PairFolder:
             self.filters[(shard, sub)] = f
         f.add_many(keys)
 
+    def fold(self, pdf, key_col: str) -> int:
+        """Add a frame's ``key_col`` keys, routed by its ``__shard__`` /
+        ``__sub__`` columns; returns the row count."""
+        for (s, u), g in pdf.groupby(["__shard__", "__sub__"]):
+            self.add(int(s), int(u), g[key_col].to_numpy())
+        return len(pdf)
+
     def flush(self) -> None:
         for (s, u), f in self.filters.items():
             write_pair(self.new_dir, s, u, f.to_bytes())
@@ -138,6 +155,14 @@ class FilterState:
         return F.pmod(
             F.xxhash64(key_col, F.lit(self.sub_seed)), F.lit(self.n_sub)
         ).cast("int")
+
+    def routed(self, df: DataFrame, key_col: str) -> DataFrame:
+        """``df`` plus its keys' ``__shard__`` / ``__sub__`` columns — the
+        routing every fold task partitions by and :meth:`PairFolder.fold`
+        reads."""
+        return df.withColumn("__shard__", self.shard_expr(key_col)).withColumn(
+            "__sub__", self.sub_expr(key_col)
+        )
 
     # -- state inspection (meta only)
 
@@ -244,22 +269,12 @@ class FilterState:
         nb = self.n_shards * self.n_sub
 
         def build(batches):
-            import pandas as pd
-
             folder = PairFolder(None, new_dir, spec)
-            n = 0
-            for pdf in batches:
-                for (s, u), g in pdf.groupby(["__shard__", "__sub__"]):
-                    folder.add(int(s), int(u), g[key_col].to_numpy())
-                    n += len(g)
+            n = sum(folder.fold(pdf, key_col) for pdf in batches)
             folder.flush()
             yield pd.DataFrame({"n": [n]})
 
-        rows = keys_df.select(
-            self.shard_expr(key_col).alias("__shard__"),
-            self.sub_expr(key_col).alias("__sub__"),
-            key_col,
-        )
+        rows = self.routed(keys_df.select(key_col), key_col)
         # explicit repartition (AQE-exempt): the rows are narrow but the
         # per-key hashing work is not — a groupBy shuffle would coalesce
         # by input bytes and serialize the build
@@ -267,3 +282,140 @@ class FilterState:
             build, schema="n long"
         ).collect()
         self.finish(v, new_dir, prev_dir=None)
+
+    def ensure(self, table: SnapshotTable, key_col: str) -> "FilterState":
+        """Guarantee the state matches ``table``, the exact key table it
+        filters. The common case (state committed last round) is a META
+        check — zero Spark jobs, zero bytes. A pre-filter-table workdir
+        (resume across layouts) or a ``forget`` invalidation pays ONE
+        distributed :meth:`rebuild_from` pass; a table with no snapshot
+        has nothing to rebuild (its first commit's fold creates the
+        state)."""
+        if not self.exists() and table.current_version() is not None:
+            self.rebuild_from(table.read(), key_col)
+        return self
+
+    # -- dedup against the exact table
+
+    def new_rows(
+        self, df: DataFrame, key_col: str, table: SnapshotTable
+    ) -> tuple[DataFrame, Callable[[], None] | None]:
+        """The rows of ``df`` whose ``key_col`` is not in ``table``, and the
+        probe's cleanup (or None). Filter-negative keys are DEFINITELY new
+        and skip the anti-join, so only the filter-positive residue (rare
+        at steady state) is joined against the growing exact table. No
+        false negatives, so the result is exact. A table with no snapshot
+        yet holds nothing: every row is new."""
+        if table.current_version() is None:
+            return df, None
+        probed, cleanup = self.ensure(table, key_col).probe(df, key_col)
+        probed = probed.drop("__shard__")
+        fresh = probed.filter(~F.col("__maybe__")).drop("__maybe__")
+        residue = (
+            probed.filter(F.col("__maybe__"))
+            .drop("__maybe__")
+            .join(table.read().select(key_col), on=key_col, how="left_anti")
+        )
+        return fresh.unionByName(residue), cleanup
+
+    def probe(
+        self, df: DataFrame, key_col: str
+    ) -> tuple[DataFrame, Callable[[], None] | None]:
+        """Mark every row of ``df`` with ``__maybe__`` — whether its
+        (shard, sub) filter might contain ``key_col`` (False where the
+        pair has no filter yet, i.e. definitely new). Adds ``__shard__``
+        and returns ``(probed_df, cleanup_fn)``. Filters come FROM THE
+        STATE TABLE — the driver never folds or retains bitsets.
+
+        Two delivery modes, picked by :meth:`total_bytes` against
+        FILTER_BROADCAST_MAX_BYTES:
+
+        - broadcast: the driver reads the pair files with pyarrow (plain
+          file IO, not a Spark job — gated small, and transient) and
+          broadcasts once. Each worker deserializes ONLY the pairs present
+          in its batches, once per round (memoized via seen.cached_filter
+          keyed by a per-round token). The cleanup destroys the broadcast.
+        - sharded: zero broadcast, zero driver bytes. Keys repartition by
+          (shard, sub) and cogroup against :meth:`bits_df`; each task gets
+          exactly its own pair's bitset through the shuffle and
+          deserializes it once. Per-executor residency = the pairs it
+          probes — the only shape that survives the 10^10-URL design
+          point where the full filter set is tens of GB. No cleanup.
+
+        The sub hash uses the state's seed (the same one its write jobs
+        partition by): each pair's sub-filter contains only its own sub's
+        keys, so routing must agree bit-for-bit."""
+        spec = self.spec
+        keyed = self.routed(df, key_col)
+
+        if self.total_bytes() <= FILTER_BROADCAST_MAX_BYTES:
+            import uuid
+
+            from pyspark.sql.functions import pandas_udf
+
+            token = uuid.uuid4().hex
+            n_sub = self.n_sub
+            bcast = self.spark.sparkContext.broadcast(
+                (token, spec, self.collect_blobs())
+            )
+
+            @pandas_udf("boolean")
+            def maybe(keys: pd.Series, shards: pd.Series, subs: pd.Series) -> pd.Series:
+                import numpy as np
+
+                from etlpy_spark.crawl.seen import cached_filter as _cf
+
+                _tok, _spec, _parts = bcast.value
+                sh = shards.to_numpy()
+                su = subs.to_numpy()
+                ka = keys.to_numpy()
+                out = np.zeros(len(ka), dtype=bool)
+                for p in np.unique(sh.astype(np.int64) * n_sub + su):
+                    key = (int(p) // n_sub, int(p) % n_sub)
+                    m = (sh == key[0]) & (su == key[1])
+                    d = _parts.get(key)
+                    if d is None:
+                        continue  # no filter for this pair yet → all new
+                    f = _cf(_tok, key, _spec, d)
+                    out[m] = f.might_contain_many(ka[m])
+                return pd.Series(out)
+
+            probed = keyed.withColumn(
+                "__maybe__",
+                maybe(F.col(key_col), F.col("__shard__"), F.col("__sub__")),
+            ).drop("__sub__")
+            return probed, bcast.destroy
+
+        from pyspark.sql.types import BooleanType, StructField, StructType
+
+        # fresh StructType — StructType.add would mutate keyed's CACHED
+        # schema object and desync it from the actual plan
+        out_schema = StructType(
+            list(keyed.schema.fields) + [StructField("__maybe__", BooleanType())]
+        )
+
+        def probe_pair(ldf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
+            import numpy as np
+
+            from etlpy_spark.crawl.seen import filter_from_bytes as _fb
+
+            # per-task residency contract: a cogroup task sees AT MOST its
+            # own (shard, sub) bitset row — never another pair's bytes
+            if len(bdf) > 1:
+                raise ValueError(
+                    f"probe task received {len(bdf)} filter rows for one group"
+                )
+            if len(bdf) == 0:
+                maybe = np.zeros(len(ldf), dtype=bool)
+            else:
+                f = _fb(spec, bytes(bdf["bits"].iloc[0]))
+                maybe = f.might_contain_many(ldf[key_col].to_numpy())
+            return ldf.assign(__maybe__=maybe)
+
+        probed = (
+            keyed.groupby("__shard__", "__sub__")
+            .cogroup(self.bits_df().groupby("shard", "sub"))
+            .applyInPandas(probe_pair, schema=out_schema)
+            .drop("__sub__")
+        )
+        return probed, None

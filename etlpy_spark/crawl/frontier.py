@@ -8,19 +8,23 @@ Shape of one round (all DataFrame ops; Python only inside Arrow batches):
      selected ──repartition(pmod(xxhash64(host), B))──▶ politeness buckets
               ──mapInPandas fetch──▶ (links, image refs) + lineage part id
      links ──canonicalize+priority UDF──▶ dedup-in-batch (keep first by
-           fetch order) ──Bloom prefilter──▶ bloom-negative = new;
-           bloom-positive ──anti-join seen──▶ survivors = new
+           fetch order) ──FilterState.new_rows(seen)──▶ new urls
      new urls ──row_number over fetch order──▶ discovered_seq; → frontier
-     image refs ──dedup keep-first──▶ image-filter prefilter ──▶ anti-join
-           image table (filter-positive residue only) ──▶ fetch bytes /
-           decode / pHash, part files written by the task ──▶
-           manifest commit of the images table (+ image filter fold)
-     commit: seen append (+ seen filter fold, one fused job), crawl-log
-           manifest commit (parts written by the fetch tasks), images
-           manifest commit, frontier merge-on-read append of the new urls
-           + equality-delete tombstones of the consumed ones, metrics row
-           — one snapshot per table per round; resume = continue from the
+     image refs ──dedup keep-first──▶ FilterState.new_rows(images) ──▶
+           fetch bytes / decode / pHash inside the write task
+     commit: seen and images each by one write-and-fold job (part file +
+           filter fold per task, then filter-state and table manifest
+           commits), crawl-log manifest commit (parts written by the fetch
+           tasks), frontier merge-on-read append of the new urls +
+           equality-delete tombstones of the consumed ones, metrics row —
+           one snapshot per table per round; resume = continue from the
            last committed round.
+
+The seen set and the image table are one structure twice: an exact keyed
+table plus a (shard, sub) filter state (crawl/filterstate.py).
+``FilterState.new_rows`` is their one dedup step (filter probe, then an
+anti-join of the filter-positive residue against the exact table) and
+``SparkCrawler._write_and_fold`` their one commit job.
 
 Every table's schema and on-disk layout is declared once below
 (``*_LAYOUT``); every part file, whoever writes it (the catalog's own
@@ -30,7 +34,7 @@ write job, an engine task, or the crawler in-process), goes through
 
 run_round sequences one private method per phase: _schedule (robots +
 politeness), _fetch (fetch_rank + fetch + crawl-log write), _new_links
-(canon/dedup/filter/anti-join/rank), _commit_seen_and_log, _image_path,
+(canon/dedup/filter probe + anti-join/rank), _commit_seen_and_log, _image_path,
 _commit_round (frontier + metrics). Executor-side closures capture plain
 locals (web config, round, dirs, filter spec), never ``self``, which holds
 the SparkSession.
@@ -85,23 +89,26 @@ LOG_DDL = "fetch_seq long, url string, round int, lineage_part int"
 METRICS_DDL = "round int, scheduled long, robots_blocked long, fetched long, deferred long, new_urls long, new_images long"
 # URL tables: url-sorted files, prefix-delta urls (see TableLayout)
 _URL_ENC = {"url": "DELTA_BYTE_ARRAY"}
-FRONTIER_LAYOUT = TableLayout(FRONTIER_DDL, sort=("url",), encodings=_URL_ENC)
-SEEN_LAYOUT = TableLayout(SEEN_DDL, sort=("url",), encodings=_URL_ENC)
-# fetch_seq is unique per row, so a dictionary never pays; within one
-# round's url-sorted file its deltas stay small (-28% file bytes measured
+# discovered_seq / fetch_seq are unique per row, so a dictionary never
+# pays; delta-packed they cost a few bits per row (-28% file bytes measured
 # on a 200k-row log part vs plain+snappy)
+FRONTIER_LAYOUT = TableLayout(
+    FRONTIER_DDL, sort=("url",),
+    encodings={**_URL_ENC, "discovered_seq": "DELTA_BINARY_PACKED"},
+)
+SEEN_LAYOUT = TableLayout(SEEN_DDL, sort=("url",), encodings=_URL_ENC)
 LOG_LAYOUT = TableLayout(
     LOG_DDL, sort=("url",),
     encodings={**_URL_ENC, "fetch_seq": "DELTA_BINARY_PACKED"},
 )
-# image bytes are already-compressed containers
-IMAGES_LAYOUT = TableLayout(IMAGES_DDL, compression="none")
+# image bytes are unique, already-compressed containers: no dictionary,
+# no codec
+IMAGES_LAYOUT = TableLayout(
+    IMAGES_DDL, encodings={"bytes": "PLAIN"}, compression="none"
+)
 METRICS_LAYOUT = TableLayout(METRICS_DDL)
 # target false-positive rate of each (shard, sub) seen/image filter unit
 BLOOM_FPP = 0.01
-# filter probes switch from broadcast to sharded delivery once the
-# serialized filter set exceeds this many bytes (see _probe_filters)
-FILTER_BROADCAST_MAX_BYTES = 64 << 20
 # below this row count a single-partition window rank is cheaper than the
 # two-phase ranged rank (extra shuffle + counts job); see global_rank
 RANK_THRESHOLD = 20_000
@@ -439,202 +446,80 @@ class SparkCrawler:
 
     def _commit_seen(self, urls_round: DataFrame) -> int:
         """Commit this round's new URLs to the seen table and fold them
-        into the (shard, sub) filter STATE TABLE in ONE Spark job: each
-        task writes its own seen part file, reads its pairs'
-        previous-version filter files,
-        folds its new keys in, and writes the new-version filter files —
-        the driver collects only per-partition COUNT rows and then
-        manifest-commits both tables (plus hard-linking untouched pairs
-        forward, an O(#files) metadata pass). No filter bytes ever reach
-        the driver. Returns the number of URLs committed.
-
-        Retry/speculation-safe: each task buffers its partition and writes
-        ONE ``part-{pid:05d}.parquet`` with ``write_part`` — a re-run
-        replaces its own identical row set (the partition's content is a
-        pure function of the round's input) instead of adding a duplicate
-        part file; filter pair files follow the same protocol
-        (filterstate.write_pair)."""
+        into the seen filter state; returns the number committed."""
         cfg = self.cfg
-        state = self.seen_bits
-        rows = urls_round.select(
-            state.shard_expr("url").alias("shard"),
-            state.sub_expr("url").alias("__sub__"),
-            "url",
-            "round",
+        return self._write_and_fold(
+            self.seen_bits, self.seen, urls_round, "url",
+            max(cfg.n_buckets, cfg.n_shards), "seen",
         )
-        self._ensure_seen_bits()
-        spec = state.spec
-        layout = self.seen.layout
-        v, data_dir = self.seen.begin_external()
+
+    def _write_and_fold(
+        self, state: FilterState, table: SnapshotTable, rows: DataFrame,
+        key_col: str, n_parts: int, tag: str, meta: dict | None = None,
+        make_rows: Callable[[pd.DataFrame], dict] | None = None,
+        chunk: int | None = None,
+    ) -> int:
+        """Commit ``rows`` to a keyed ``table`` and fold their keys into its
+        filter ``state`` in ONE Spark job; returns the rows committed. Each
+        task writes its partition as ONE ``part-{pid:05d}.parquet`` through
+        ``write_part``, reads its (shard, sub) pairs' previous-version
+        filter files, folds its keys in and writes the new-version pair
+        files. The driver collects only a count row per task, then
+        manifest-commits both tables (``FilterState.finish`` hard-links
+        untouched pairs forward, an O(#files) metadata pass). No filter
+        bytes reach the driver.
+
+        The part file's chunks are ``make_rows`` (default: the rows as
+        they are) of ``chunk``-row slices of each input batch, or of the
+        whole partition when ``chunk`` is None (then sorted as one piece,
+        like any buffered part). Retry/speculation-safe: a re-run task
+        lands the identical row set under the identical name, and pair
+        files follow the same rule (filterstate.write_pair). ``tag`` names
+        the stage for ``_fail_once``, which fires after the first chunk
+        reached the task's tmp file."""
+        state.ensure(table, key_col)
+        layout = table.layout
+        v, data_dir = table.begin_external()
         bv, bits_dir = state.begin()
         prev_dir = state.latest_dir()
+        spec = state.spec
         fail_dir = os.environ.get("ETLPY_FAIL_ONCE_DIR")
 
         # explicit repartition, NOT groupBy: AQE would coalesce the
-        # groupBy shuffle by input bytes and serialize the write+filter
-        # stage (key rows are narrow while the per-key work is not).
-        # The (shard, sub) partitioner puts every pair wholly in one
-        # task, so the task's fold is the COMPLETE new state for its
-        # pairs — no driver merge step exists anymore.
-        def write_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # groupBy shuffle by input bytes and serialize the stage (key
+        # rows are narrow while the per-key work — parquet, filters, the
+        # image fetch + decode — is not). The (shard, sub) partitioner
+        # puts every pair wholly in one task, so the task's fold is the
+        # COMPLETE new state for its pairs.
+        def write_and_fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-            parts = [pdf for pdf in batches if len(pdf)]
-            _fail_once(fail_dir, "seen", pid)
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-            write_part(layout, pdf, os.path.join(data_dir, f"part-{pid:05d}.parquet"))
-            # filter adds are order-insensitive, so the fold reads the
-            # unsorted frame
+            if chunk is None:
+                parts = [pdf for pdf in batches if len(pdf)]
+                batches = [pd.concat(parts, ignore_index=True)] if parts else []
             folder = PairFolder(prev_dir, bits_dir, spec)
-            for (s, u), g in pdf.groupby(["shard", "__sub__"]):
-                folder.add(int(s), int(u), g["url"].to_numpy())
-            folder.flush()
-            yield pd.DataFrame({"n": [len(pdf)]})
 
-        nb = max(cfg.n_buckets, cfg.n_shards)
-        job = rows.repartition(nb, F.col("shard"), F.col("__sub__")).mapInPandas(
-            write_parts, schema="n long"
-        )
-        parts = job.collect()
+            def chunks():
+                for pdf in batches:
+                    folder.fold(pdf, key_col)
+                    for lo in range(0, len(pdf), chunk or len(pdf)):
+                        sub = pdf.iloc[lo : lo + chunk] if chunk else pdf
+                        yield make_rows(sub) if make_rows else sub
+                        _fail_once(fail_dir, tag, pid)
+
+            n = write_part(
+                layout, chunks(), os.path.join(data_dir, f"part-{pid:05d}.parquet")
+            )
+            if n:
+                folder.flush()
+                yield pd.DataFrame({"n": [n]})
+
+        state.routed(rows, key_col).repartition(
+            n_parts, "__shard__", "__sub__"
+        ).mapInPandas(write_and_fold, schema="n long").collect()
         state.finish(bv, bits_dir, prev_dir)
-        self.seen.commit_external(v, data_dir)
-        return sum(int(r["n"]) for r in parts)
-
-    def _ensure_seen_bits(self) -> FilterState:
-        """Guarantee the seen filter state matches the seen table. The
-        common case (state table committed last round) is a META check —
-        zero Spark jobs, zero bytes. A pre-filter-table workdir (resume
-        across layouts) or a ``forget`` invalidation pays ONE distributed
-        rebuild pass over the exact table; a brand-new crawl pays nothing
-        (the seed commit's fold creates version 1)."""
-        if not self.seen_bits.exists() and self.seen.current_version() is not None:
-            self.seen_bits.rebuild_from(self.seen.read(), "url")
-        return self.seen_bits
-
-    def _ensure_image_bits(self) -> FilterState:
-        """Image-id twin of :meth:`_ensure_seen_bits` — folded forward by
-        each round's image write job; rebuilt from the image table only
-        on resume over a pre-filter-table workdir."""
-        if not self.image_bits.exists() and self.images.current_version() is not None:
-            self.image_bits.rebuild_from(
-                self.images.read().select("image_id"), "image_id"
-            )
-        return self.image_bits
-
-    def _probe_filters(self, df: DataFrame, key_col: str, state: FilterState):
-        """Mark every row of ``df`` with ``__maybe__`` — whether its
-        (shard, sub) filter might contain ``key_col`` (False where the
-        pair has no filter yet, i.e. definitely new). Adds ``__shard__``
-        (kept for downstream shard-routing) and returns
-        ``(probed_df, cleanup_fn)``. Filters come FROM THE STATE TABLE —
-        the driver never folds or retains bitsets.
-
-        Two delivery modes, picked by the state's total_bytes snapshot
-        meta against FILTER_BROADCAST_MAX_BYTES:
-
-        - broadcast: the driver reads the pair files with pyarrow (plain
-          file IO, not a Spark job — gated small by
-          FILTER_BROADCAST_MAX_BYTES, and transient) and broadcasts once.
-          Each worker deserializes ONLY the pairs present in its batches,
-          once per round (memoized via seen.cached_filter keyed by a
-          per-round token).
-        - sharded: zero broadcast, zero driver bytes. Keys repartition by
-          (shard, sub) and cogroup against the state table's
-          (shard, sub, bits) scan; each task gets exactly its own pair's
-          bitset through the shuffle and deserializes it once.
-          Per-executor residency = the pairs it probes — the only shape
-          that survives the 10^10-URL design point where the full filter
-          set is tens of GB.
-
-        The sub hash uses the STATE's seed (the same one its write jobs
-        partition by): each pair's sub-filter contains only its own sub's
-        keys, so routing must agree bit-for-bit."""
-        spark = self.spark
-        spec = state.spec
-        sharded = state.total_bytes() > FILTER_BROADCAST_MAX_BYTES
-        shard_col = state.shard_expr(key_col)
-        sub_col = state.sub_expr(key_col)
-
-        if not sharded:
-            import uuid
-
-            from pyspark.sql.functions import pandas_udf
-
-            token = uuid.uuid4().hex
-            n_sub = state.n_sub
-            bcast = spark.sparkContext.broadcast((token, spec, state.collect_blobs()))
-
-            @pandas_udf("boolean")
-            def maybe(keys: pd.Series, shards: pd.Series, subs: pd.Series) -> pd.Series:
-                import numpy as np
-
-                from etlpy_spark.crawl.seen import cached_filter as _cf
-
-                _tok, _spec, _parts = bcast.value
-                sh = shards.to_numpy()
-                su = subs.to_numpy()
-                ka = keys.to_numpy()
-                out = np.zeros(len(ka), dtype=bool)
-                for p in np.unique(sh.astype(np.int64) * n_sub + su):
-                    key = (int(p) // n_sub, int(p) % n_sub)
-                    m = (sh == key[0]) & (su == key[1])
-                    d = _parts.get(key)
-                    if d is None:
-                        continue  # no filter for this pair yet → all new
-                    f = _cf(_tok, key, _spec, d)
-                    out[m] = f.might_contain_many(ka[m])
-                return pd.Series(out)
-
-            probed = (
-                df.withColumn("__shard__", shard_col)
-                .withColumn("__sub__", sub_col)
-                .withColumn(
-                    "__maybe__",
-                    maybe(F.col(key_col), F.col("__shard__"), F.col("__sub__")),
-                )
-                .drop("__sub__")
-            )
-            return probed, bcast.destroy
-
-        # sharded cogroup delivery
-        from pyspark.sql.types import BooleanType, StructField, StructType
-
-        bits_df = state.bits_df()
-        keyed = df.withColumn("__shard__", shard_col).withColumn("__sub__", sub_col)
-        # fresh StructType — StructType.add would mutate keyed's CACHED
-        # schema object and desync it from the actual plan
-        out_schema = StructType(
-            list(keyed.schema.fields) + [StructField("__maybe__", BooleanType())]
-        )
-
-        def probe(ldf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            from etlpy_spark.crawl.seen import filter_from_bytes as _fb
-
-            # per-task residency contract: a cogroup task sees AT MOST its
-            # own (shard, sub) bitset row — never another pair's bytes
-            if len(bdf) > 1:
-                raise ValueError(
-                    f"probe task received {len(bdf)} filter rows for one group"
-                )
-            if len(bdf) == 0:
-                maybe = np.zeros(len(ldf), dtype=bool)
-            else:
-                f = _fb(spec, bytes(bdf["bits"].iloc[0]))
-                maybe = f.might_contain_many(ldf[key_col].to_numpy())
-            return ldf.assign(__maybe__=maybe)
-
-        probed = (
-            keyed.groupby("__shard__", "__sub__")
-            .cogroup(bits_df.groupby("shard", "sub"))
-            .applyInPandas(probe, schema=out_schema)
-            .drop("__sub__")
-        )
-        return probed, None
+        return table.commit_external(v, data_dir, meta=meta)[1]
 
     # -- robots -------------------------------------------------------------
 
@@ -934,25 +819,9 @@ class SparkCrawler:
             .select("url", "__f__.*")
         )
 
-        cleanup = None
-        if self.seen.current_version() is None:
-            # nothing is seen yet (a seedless crawl's first round after
-            # recrawl): every link is new
-            new_links = links
-        else:
-            # the shard id is computed JVM-side with the same
-            # pmod(xxhash64(url), S) that keys the exact table, so each url
-            # is checked against exactly its own shard's filter; the bitsets
-            # reach the probe tasks shard-locally past the broadcast size
-            # gate (see _probe_filters)
-            links, cleanup = self._probe_filters(
-                links, "url", self._ensure_seen_bits()
-            )
-            definitely_new = links.filter(~F.col("__maybe__")).drop("__maybe__", "__shard__")
-            to_check = links.filter(F.col("__maybe__")).drop("__maybe__", "__shard__")
-            seen_urls = self.seen.read().select("url")
-            checked_new = to_check.join(seen_urls, on="url", how="left_anti")
-            new_links = definitely_new.unionByName(checked_new)
+        # each url is checked against its own (shard, sub) filter, then
+        # the filter-positive residue against the exact seen table
+        new_links, cleanup = self.seen_bits.new_rows(links, "url", self.seen)
 
         ranked_links, n_new = global_rank(
             new_links, ["fetch_seq", "pos"], "discovered_seq", seq_base,
@@ -1008,121 +877,25 @@ class SparkCrawler:
             # a missing blob decodes to a decode_error row, like a
             # dead image link in a live crawl)
             refs = refs.join(self._archive_images(), "image_id", "left")
-        istate = self.image_bits
-        img_cleanup = None
-        if self.images.current_version() is not None:
-            # image-filter prefilter: filter-negative refs are
-            # DEFINITELY new and skip the anti-join, so the growing
-            # image table's image_id column is only scanned for the
-            # (rare at steady state) filter-positive residue — the same
-            # short-circuit the URL seen set uses. No false negatives →
-            # the committed table stays exactly-deduped. Filter bitsets
-            # reach the probe tasks shard-locally past the broadcast
-            # size gate (see _probe_filters).
-            refs, img_cleanup = self._probe_filters(
-                refs, "image_id", self._ensure_image_bits()
-            )
-            fresh = refs.filter(~F.col("__maybe__")).drop("__maybe__")
-            to_check = (
-                refs.filter(F.col("__maybe__"))
-                .drop("__maybe__")
-                .join(self.images.read().select("image_id"), on="image_id", how="left_anti")
-            )
-            refs = fresh.unionByName(to_check)
-        else:
-            refs = refs.withColumn("__shard__", istate.shard_expr("image_id"))
-        refs = refs.withColumn("__sub__", istate.sub_expr("image_id"))
-
+        refs, cleanup = self.image_bits.new_rows(refs, "image_id", self.images)
         # bytes go Python→parquet→disk INSIDE the task; the Spark job only
-        # carries a count row per group. Skips the Arrow transfer, the JVM
+        # carries a count row per task. Skips the Arrow transfer, the JVM
         # row copy and the JVM parquet encode for the ~300 KB binary
         # payloads — on the memory-bandwidth-bound image axis those copies
-        # were the engine overhead on top of the raw codec kernel. Groups
-        # are (shard, sub): the SAME task that writes the bytes folds this
-        # round's ids into its pairs' image filters (previous-version read
-        # + add + new-version write — see crawl/filterstate.py), so no
-        # filter bytes leave the executors.
-        v, data_dir = self.images.begin_external()
-        img_layout = self.images.layout
-        ibv, ibits_dir = istate.begin()
-        prev_ib = istate.latest_dir()
-        wspec = istate.spec
+        # were the engine overhead on top of the raw codec kernel.
         web = cfg.web
-        fail_dir = os.environ.get("ETLPY_FAIL_ONCE_DIR")
         CHUNK = 256  # bounds per-task memory: image BYTES never
-        # accumulate beyond ~CHUNK rows per frame/file (a whole input
-        # batch of 280 KB images in one frame OOMs at high task
+        # accumulate beyond ~CHUNK rows per frame / row group (a whole
+        # input batch of 280 KB images in one frame OOMs at high task
         # concurrency — memory must not scale with parallelism)
-
-        # explicit repartition, NOT groupBy+applyInPandas: this stage's
-        # INPUT is narrow (id, caption) while its work is the whole
-        # fetch+decode+phash+parquet pipeline — AQE coalesces the groupBy
-        # shuffle by input bytes and ran the entire image axis in ONE task
-        # (measured 4.5x slower at 8 cores). repartition(n, cols) pins the
-        # partition count.
-        #
-        # Retry/speculation safety: a task CANNOT buffer its whole
-        # partition of ~300 KB payloads (memory must not scale with
-        # partition size), so instead of one deterministic file it writes
-        # CHUNK-bounded files into a private attempt dir under
-        # <data>.inprogress/ and, as its last step, atomically renames the
-        # whole dir to part-{pid:05d}/ — first rename wins, a
-        # losing/retried attempt discards its dir, and commit_external
-        # sweeps .inprogress leftovers. Either attempt's dir holds the same
-        # row set (the partition is a pure function of the round's input).
-        # Filter pair files are deterministic-named and recomputed
-        # identically by a retry (filterstate.write_pair).
-        def write_part_imgs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import shutil
-            import uuid
-
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-            attempt = os.path.join(data_dir + ".inprogress", uuid.uuid4().hex)
-            os.makedirs(attempt, exist_ok=True)
-            folder = PairFolder(prev_ib, ibits_dir, wspec)
-            n = 0
-            chunk_no = 0
-            wrote = False
-            for pdf in batches:
-                for lo in range(0, len(pdf), CHUNK):
-                    sub = pdf.iloc[lo : lo + CHUNK]
-                    if not len(sub):
-                        continue
-                    fn = os.path.join(attempt, f"chunk-{chunk_no:05d}.parquet")
-                    chunk_no += 1
-                    write_part(img_layout, _image_rows(sub, web, rnd), fn)
-                    wrote = True
-                    # injected AFTER a chunk landed: the retry must
-                    # supersede a PARTIALLY-written attempt dir
-                    _fail_once(fail_dir, "images", pid)
-                for (s, u), g in pdf.groupby(["__shard__", "__sub__"]):
-                    folder.add(int(s), int(u), g["image_id"].to_numpy())
-                    n += len(g)
-            if not wrote:
-                shutil.rmtree(attempt, ignore_errors=True)
-                return
-            final = os.path.join(data_dir, f"part-{pid:05d}")
-            try:
-                os.rename(attempt, final)
-            except OSError:
-                # another attempt of this partition already committed the
-                # identical row set — yield to it
-                shutil.rmtree(attempt, ignore_errors=True)
-            folder.flush()
-            yield pd.DataFrame({"n": [n]})
-
-        (
-            refs.repartition(cfg.n_buckets, F.col("__shard__"), F.col("__sub__"))
-            .mapInPandas(write_part_imgs, schema="n long")
-            .collect()
+        n_imgs = self._write_and_fold(
+            self.image_bits, self.images, refs, "image_id", cfg.n_buckets,
+            "images", meta={"round": rnd},
+            make_rows=lambda sub: _image_rows(sub, web, rnd), chunk=CHUNK,
         )
-        istate.finish(ibv, ibits_dir, prev_ib)
-        _, n_imgs = self.images.commit_external(v, data_dir, meta={"round": rnd})
-        if img_cleanup is not None:
-            img_cleanup()
-        return int(n_imgs)
+        if cleanup is not None:
+            cleanup()
+        return n_imgs
 
     def _commit_round(
         self, st: dict, base: DataFrame, selected: DataFrame,
@@ -1259,9 +1032,9 @@ class SparkCrawler:
         the same merge-on-read primitive the frontier commits use) instead
         of the r2 full anti-join rewrite — at a 10^10-row seen set a
         rewrite per takedown request is not a thing. Accumulated tombstones
-        auto-compact past the threshold. The in-memory shard filters are
-        invalidated and lazily rebuilt from the updated table by the next
-        round's ``_ensure_seen_bits`` (one distributed pass).
+        auto-compact past the threshold. The filter state is invalidated
+        and lazily rebuilt from the updated table by the next round's
+        ``FilterState.ensure`` (one distributed pass).
 
         The rebuild — not ``CuckooFilter.delete_many`` — is the correct path
         for the SHARED filters: ``add_many``/``merge`` collapse colliding

@@ -305,11 +305,12 @@ class CuckooFilter:
 
 # -- per-worker deserialized-filter memo -------------------------------------
 #
-# The broadcast probe path ships (token, spec, {shard: bits}) once per round;
-# pyspark's _broadcastRegistry already unpickles that payload once per worker
-# process, but ``filter_from_bytes`` COPIES the bitset — doing it per Arrow
-# batch for every shard made probe cost O(all shards x batches). This memo
-# deserializes each shard lazily (only shards actually present in a batch)
+# The broadcast probe path (filterstate.FilterState.probe) ships (token,
+# spec, {(shard, sub): bits}) once per round; pyspark's _broadcastRegistry
+# already unpickles that payload once per worker process, but
+# ``filter_from_bytes`` COPIES the bitset — doing it per Arrow batch for
+# every pair made probe cost O(all pairs x batches). This memo deserializes
+# each pair lazily (only pairs actually present in a batch)
 # and exactly once per worker per round: the token changes every round, and
 # a token change evicts the previous round's filters so worker residency is
 # bounded by ONE round's working set, never the crawl's history.
@@ -318,8 +319,7 @@ _PROBE_CACHE: dict = {"token": None, "filters": {}}
 
 
 def cached_filter(token: str, key, spec: tuple, data: bytes):
-    """``key`` is any hashable filter-unit id — a shard int historically,
-    a (shard, sub) pair under the filter-state-table layout."""
+    """``key`` is the filter unit's (shard, sub) pair."""
     if _PROBE_CACHE["token"] != token:
         _PROBE_CACHE["token"] = token
         _PROBE_CACHE["filters"] = {}
@@ -329,7 +329,7 @@ def cached_filter(token: str, key, spec: tuple, data: bytes):
     return f
 
 
-# -- pluggable seen-filter factory (frontier picks via CrawlConfig) ---------
+# -- filter factory: one spec per crawler (CrawlConfig.seen_filter kind) ----
 
 
 def filter_spec(kind: str, capacity: int, fpp: float) -> tuple:

@@ -26,8 +26,11 @@ Two rules, each written once:
   effect. Columns are built against the declared schema, sorted, encoded,
   and renamed from a tmp name onto the caller's deterministic name, so a
   retried or speculated task replaces its own identical output instead of
-  adding a file. Tables without a layout (ad-hoc operator tables) use the
-  Spark writer.
+  adding a file. A writer too large to buffer (image payloads) streams
+  chunks into the same one file as row groups; there is no other landing
+  protocol, so every data dir holds flat part files and readers never
+  recurse. Tables without a layout (ad-hoc operator tables) use the Spark
+  writer.
 - How a snapshot chains onto the previous one:
   ``SnapshotTable._commit_manifest``. Every commit (Spark-written,
   externally written, merge-on-read) builds its manifest there: an append
@@ -43,6 +46,7 @@ Two rules, each written once:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 from dataclasses import dataclass, field
@@ -124,47 +128,68 @@ class TableLayout:
 
 def write_part(layout: TableLayout, cols, path: str) -> int:
     """Write one part file of a ``layout`` table at ``path`` and return its
-    row count. ``cols`` is a pandas DataFrame or a dict of column lists
-    holding (at least) the layout's columns. The file lands via a tmp name
-    in the same directory + os.replace, so a re-run of the same task
-    replaces its own identical output (the rows are a pure function of the
-    task's input and the sort makes the bytes one too)."""
+    row count. ``cols`` is one chunk or an iterable of chunks; a chunk is a
+    pandas DataFrame or a dict of column lists holding (at least) the
+    layout's columns. Each chunk is sorted by the layout and becomes one
+    row group, so a task streaming a large partition holds one chunk at a
+    time. The file lands via a tmp name in the same directory +
+    os.replace, so a re-run of the same task replaces its own identical
+    output (the rows are a pure function of the task's input and the sort
+    makes the bytes one too). If the chunks raise, the tmp file is removed
+    and ``path`` is left untouched; an iterable that yields no rows writes
+    no file."""
     import uuid
 
+    import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     schema = layout.pa_schema()
-    if isinstance(cols, dict):
-        tbl = pa.Table.from_pydict({n: cols[n] for n in schema.names}, schema=schema)
-    else:
-        tbl = pa.Table.from_pandas(cols[schema.names], schema=schema, preserve_index=False)
-    if layout.sort:
-        tbl = tbl.sort_by([(c, "ascending") for c in layout.sort])
+    single = isinstance(cols, (dict, pd.DataFrame))
     tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
-    pq.write_table(
-        tbl, tmp,
-        compression=layout.compression,
-        column_encoding=layout.encodings or None,
-        use_dictionary=[n for n in schema.names if n not in layout.encodings],
-    )
+    writer, n = None, 0
+    try:
+        for c in [cols] if single else cols:
+            if isinstance(c, dict):
+                tbl = pa.Table.from_pydict({k: c[k] for k in schema.names}, schema=schema)
+            else:
+                tbl = pa.Table.from_pandas(c[schema.names], schema=schema, preserve_index=False)
+            if not tbl.num_rows and not single:
+                continue  # an empty chunk adds no row group
+            if layout.sort:
+                tbl = tbl.sort_by([(k, "ascending") for k in layout.sort])
+            if writer is None:
+                writer = pq.ParquetWriter(
+                    tmp, tbl.schema,
+                    compression=layout.compression,
+                    column_encoding=layout.encodings or None,
+                    use_dictionary=[k for k in schema.names if k not in layout.encodings],
+                )
+            writer.write_table(tbl)
+            n += tbl.num_rows
+        if writer is None:
+            return 0
+        writer.close()
+    except BaseException:
+        if writer is not None:
+            writer.close()
+            os.remove(tmp)
+        raise
     os.replace(tmp, path)
-    return tbl.num_rows
+    return n
 
 
 def parquet_files(data_dir: str) -> list[str]:
-    """All committed parquet files under a data dir, recursively (external
-    writers may commit whole per-partition directories), skipping tmp/
-    hidden entries (.tmp-*, _*) that a killed straggler may leave behind."""
-    out: list[str] = []
-    for root, dirs, files in os.walk(data_dir):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        out.extend(
-            os.path.join(root, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    return sorted(out)
+    """The committed parquet files of a data dir (every writer lands flat
+    files), skipping tmp/hidden entries (.tmp-*, _*) that a killed
+    straggler may leave behind."""
+    if not os.path.isdir(data_dir):
+        return []
+    return sorted(
+        os.path.join(data_dir, f)
+        for f in os.listdir(data_dir)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
 
 
 @dataclass
@@ -383,34 +408,25 @@ class SnapshotTable:
         returns (version, row count from parquet footers). If no files were
         written the reservation is abandoned (table state unchanged).
 
-        Retry/speculation safety is the WRITER protocol's job (the moral
-        equivalent of Iceberg's per-task commit metadata): every external
-        writer in the engine emits deterministic per-partition names via
-        :func:`write_part` — single ``part-{pid:05d}.parquet`` files, or
-        whole ``part-{pid:05d}/`` chunk directories committed by a first-
-        rename-wins directory swap — so a retried or speculated task
-        replaces / yields to its partition's output instead of duplicating
-        rows (tests/test_task_retry.py forces a mid-write task failure and
-        asserts bitwise crawl parity). This commit still fences the
-        leftovers: in-progress attempt dirs are swept, tmp/hidden files are
-        excluded from the manifest count, and a duplicate partition id
-        (two committed entries for one pid — impossible under the rename
-        protocol) fails the commit rather than double-counting."""
+        Retry/speculation safety is the WRITER's job (the moral equivalent
+        of Iceberg's per-task commit metadata): every external writer lands
+        its files through :func:`write_part` under a deterministic
+        per-partition name (``part-{pid:05d}.parquet``), so a retried or
+        speculated task replaces its partition's output instead of adding
+        a duplicate (tests/test_task_retry.py forces a mid-write task
+        failure and asserts bitwise crawl parity). A data dir holds flat
+        files only. What a killed task can leave behind is its ``.tmp-*``
+        file: this commit removes those, and the manifest counts committed
+        names only."""
         import shutil
 
-        shutil.rmtree(data_dir + ".inprogress", ignore_errors=True)
-        files = parquet_files(data_dir)
-        if not files:
+        for f in os.listdir(data_dir):
+            if f.startswith(".tmp-"):
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(data_dir, f))
+        if not parquet_files(data_dir):
             shutil.rmtree(data_dir, ignore_errors=True)
             return self.current_version() or 0, 0
-        top = {
-            os.path.relpath(f, data_dir).split(os.sep)[0] for f in files
-        }
-        pids = [t.split("-")[1].split(".")[0] for t in top if t.startswith("part-")]
-        if len(pids) != len(set(pids)):
-            raise RuntimeError(
-                f"duplicate partition outputs in {data_dir}: {sorted(top)}"
-            )
         n = self._footer_rows(data_dir)
         self._commit_manifest(version, mode, data_dir, meta, rows=n)
         return version, n
@@ -493,11 +509,7 @@ class SnapshotTable:
         if v is None:
             raise FileNotFoundError(f"table {self.path} has no snapshots")
         snap = self.snapshot(v)
-        # recursiveFileLookup: external writers may commit whole
-        # per-partition chunk DIRECTORIES (the image writer's atomic
-        # directory-rename protocol); hidden/tmp names are skipped by
-        # Spark's file index already
-        rd = self.spark.read.option("recursiveFileLookup", "true")
+        rd = self.spark.read
         if not snap.delete_dirs:
             dirs = [d for d in snap.data_dirs if os.path.exists(d)]
             return rd.parquet(*dirs)

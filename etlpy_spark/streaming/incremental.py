@@ -89,16 +89,14 @@ def stream_snapshot_table(
                 f"(orphans: {sorted(on_disk - committed)}, missing: "
                 f"{sorted(committed - on_disk)}); refusing to stream"
             )
-    rd = spark.readStream.schema(schema).option("recursiveFileLookup", "true")
+    rd = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         rd = rd.option("maxFilesPerTrigger", max_files_per_trigger)
-    # data/v*[0-9] matches ONLY committed version dirs (v%06d): staged
-    # attempt dirs (vNNNNNN.inprogress/<uuid>/chunk-*.parquet — NOT
-    # dot-prefixed, so Spark's hidden-file filter alone would ingest
-    # partially-written chunks and racing-attempt duplicates from a live
-    # round) and vNNNNNN.del tombstone dirs both end in a letter and
-    # fall outside the glob; hidden tmp files (.tmp-*) are excluded by
-    # Spark's filter
+    # data/v*[0-9] matches ONLY committed version dirs (v%06d), each a flat
+    # dir of part files; any other dir beside them (vNNNNNN.del tombstones,
+    # a stray staging dir) ends in a letter and falls outside the glob.
+    # A part file lands by rename from a hidden .tmp-* name, which Spark's
+    # file filter skips, so a live round never exposes a half-written file
     return rd.parquet(os.path.join(path, "data", "v*[0-9]"))
 
 

@@ -12,7 +12,7 @@ import tempfile
 import numpy as np
 import pytest
 
-from etlpy_spark.crawl import frontier
+from etlpy_spark.crawl import filterstate, frontier
 from etlpy_spark.crawl.frontier import CrawlConfig, SparkCrawler
 from etlpy_spark.crawl.oracle import crawl_oracle
 from etlpy_spark.functions.imagecodec import decode, psnr
@@ -144,7 +144,7 @@ def test_sharded_filter_delivery_parity(spark, oracle, monkeypatch):
     sub) bitset row, so green parity here IS the per-task residency
     assertion. Crawl order / seen set / image ids must match the serial
     oracle exactly, bit-for-bit with the broadcast path."""
-    monkeypatch.setattr(frontier, "FILTER_BROADCAST_MAX_BYTES", -1)
+    monkeypatch.setattr(filterstate, "FILTER_BROADCAST_MAX_BYTES", -1)
     wd = tempfile.mkdtemp(prefix="crawl_sharded_")
     try:
         cr = SparkCrawler(spark, wd, CrawlConfig(web=WEB))
@@ -158,7 +158,7 @@ def test_sharded_filter_delivery_parity(spark, oracle, monkeypatch):
 
 
 def test_probe_filters_modes_agree(spark, monkeypatch):
-    """_probe_filters must produce the identical __maybe__ column in
+    """FilterState.probe must produce the identical __maybe__ column in
     broadcast and sharded modes, including (shard, sub) pairs with no
     filter yet (definitely-new) — on urls crafted to hit both present
     and absent pairs. Filters are served FROM THE STATE TABLE in both
@@ -189,8 +189,8 @@ def test_probe_filters_modes_agree(spark, monkeypatch):
         # the size gate picks the mode: above any total → broadcast,
         # below zero → sharded
         for mode, gate in (("broadcast", 1 << 62), ("sharded", -1)):
-            monkeypatch.setattr(frontier, "FILTER_BROADCAST_MAX_BYTES", gate)
-            probed, cleanup = cr._probe_filters(df, "url", state)
+            monkeypatch.setattr(filterstate, "FILTER_BROADCAST_MAX_BYTES", gate)
+            probed, cleanup = state.probe(df, "url")
             results[mode] = {
                 r["url"]: (r["__shard__"], r["__maybe__"]) for r in probed.collect()
             }

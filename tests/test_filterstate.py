@@ -113,7 +113,7 @@ def test_resume_probes_without_rebuild(spark, crawled):
     ensure() is a META check, no rebuild job, no new version."""
     cr2 = SparkCrawler(spark, crawled.workdir, CrawlConfig(web=WEB))
     v_before = cr2.seen_bits.table.current_version()
-    st = cr2._ensure_seen_bits()
+    st = cr2.seen_bits.ensure(cr2.seen, "url")
     assert st.exists() and st.table.current_version() == v_before
 
 

@@ -118,9 +118,11 @@ def test_mid_history_overwrite_refused(spark):
 
 
 def test_inprogress_attempt_dirs_not_streamed(spark, crawler):
-    # a live round stages image/log attempts under data/vNNNNNN.inprogress/
-    # (NOT dot-prefixed) — the stream's glob must never ingest them, even
-    # with rows fully written inside
+    # a directory staged beside the committed version dirs (here a
+    # data/vNNNNNN.inprogress/, NOT dot-prefixed, the shape an attempt-dir
+    # writer would leave) must never be ingested by the stream's glob, even
+    # with rows fully written inside; the engine's own writers land flat
+    # part files via hidden .tmp-* names
     log_path = os.path.join(crawler.workdir, "crawl_log")
     committed = crawler.log.read().count()
     v = crawler.log.current_version()

@@ -8,7 +8,9 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 import pyarrow.parquet as pq
+import pytest
 
 from etlpy_spark.crawl.frontier import CrawlConfig, SparkCrawler
 from etlpy_spark.sources.catalog import TableLayout, parquet_files, write_part
@@ -33,6 +35,41 @@ def test_write_part_twice_leaves_one_file(tmp_path):
     assert again.column("url").to_pylist() == ["http://a/", "http://b/", "http://c/"]
     assert again.column("round").to_pylist() == [2, 1, 3]
     assert again.schema.equals(layout.pa_schema())
+
+
+def test_write_part_streams_chunks_into_one_file(tmp_path):
+    """An iterable of chunks lands as ONE file, one row group per chunk,
+    rows in chunk order, through the same tmp + rename rule."""
+    layout = TableLayout("k string, v long")
+    path = str(tmp_path / "part-00000.parquet")
+    chunks = [
+        {"k": ["a", "b"], "v": [1, 2]},
+        pd.DataFrame({"k": ["c", "d", "e"], "v": [3, 4, 5]}),
+        {"k": ["f"], "v": [6]},
+    ]
+    assert write_part(layout, iter(chunks), path) == 6
+    assert os.listdir(tmp_path) == ["part-00000.parquet"]
+    md = pq.ParquetFile(path).metadata
+    assert [md.row_group(i).num_rows for i in range(md.num_row_groups)] == [2, 3, 1]
+    t = pq.read_table(path)
+    assert t.column("k").to_pylist() == list("abcdef")
+    assert t.column("v").to_pylist() == [1, 2, 3, 4, 5, 6]
+
+
+def test_write_part_failing_chunks_leave_nothing(tmp_path):
+    """Chunks that raise after the first one reached the tmp file leave
+    neither the target nor a tmp file behind."""
+    layout = TableLayout("k string, v long")
+    path = str(tmp_path / "part-00000.parquet")
+
+    def chunks():
+        yield {"k": ["a"], "v": [1]}
+        raise RuntimeError("task died mid-write")
+
+    with pytest.raises(RuntimeError, match="mid-write"):
+        write_part(layout, chunks(), path)
+    assert not os.path.exists(path)
+    assert os.listdir(tmp_path) == []
 
 
 def _committed_files(table) -> list[tuple[str, bool]]:
@@ -64,6 +101,14 @@ def test_every_file_has_its_declared_layout(spark, tmp_path):
         "metrics": cr.metrics, "images": cr.images,
         "seen_bits": cr.seen_bits.table, "image_bits": cr.image_bits.table,
     }
+    # one landing rule: every images data dir holds flat part files only
+    for snap in cr.images.history():
+        for d in snap.data_dirs:
+            names = os.listdir(d)
+            assert names and all(
+                n.startswith("part-") and n.endswith(".parquet")
+                and os.path.isfile(os.path.join(d, n)) for n in names
+            ), (d, names)
     for name, table in tables.items():
         files = _committed_files(table)
         assert files, name

@@ -4,19 +4,18 @@ already landed — is retried by Spark, and the final tables still match the
 serial reference-semantics oracle bitwise: no duplicated seen/log/image
 rows, no stray part files in the manifest.
 
-Mechanism under test (frontier.py / catalog.py):
-  - seen + crawl-log writers: one deterministic ``part-{pid:05d}.parquet``
-    per task via tmp + atomic ``os.replace`` — a retry replaces its own
-    identical row set;
-  - image writer: CHUNK-bounded files in a private attempt dir under
-    ``<data>.inprogress/``, atomically renamed to ``part-{pid:05d}/`` as
-    the task's last step (first rename wins); ``commit_external`` sweeps
-    in-progress leftovers and rejects duplicate partition outputs.
+Mechanism under test (frontier.py / catalog.py): every writer (seen,
+crawl log, images) lands one deterministic ``part-{pid:05d}.parquet`` per
+task through ``catalog.write_part`` — chunks stream into a hidden
+``.tmp-*`` file as row groups, then an atomic ``os.replace`` moves it into
+place — so a retry replaces its own identical row set; a failing task
+removes its tmp file, and ``commit_external`` removes any ``.tmp-*`` a
+killed task left.
 
 The failure is injected by ``frontier._fail_once`` (ETLPY_FAIL_ONCE_DIR):
-partition 0 of the seen write raises once, and partition 0 of the image
-write raises once AFTER its first chunk file landed — so the retry must
-supersede a partially-written attempt. The crawl runs in a subprocess on
+partition 0 of the seen write and partition 0 of the image write each
+raise once AFTER their first chunk reached the tmp file — so the retry
+must supersede a partially-written attempt. The crawl runs in a subprocess on
 ``local[4,2]`` (maxFailures=2; the shared test session's local[4] would
 abort the job on the first failure).
 """
@@ -63,7 +62,7 @@ def test_injected_task_failures_keep_crawl_parity(tmp_path):
     fired = sorted(os.listdir(fail_dir))
     assert "seen-failed" in fired and "images-failed" in fired, fired
 
-    # no in-progress attempt dirs or tmp files survive into the table
+    # no staging dirs or tmp files survive into the table
     for root, dirs, files in os.walk(workdir):
         assert not any(d.endswith(".inprogress") for d in dirs), (root, dirs)
         assert not any(f.startswith(".tmp-") for f in files), (root, files)
