@@ -14,14 +14,16 @@ Shape of one round (all DataFrame ops; Python only inside Arrow batches):
            fetch bytes / decode / pHash inside the write task
      commit: seen and images each by one write-and-fold job (part file +
            filter fold per task, then filter-state and table manifest
-           commits), crawl-log manifest commit (parts written by the fetch
-           tasks), frontier merge-on-read append of the new urls +
-           equality-delete tombstones of the consumed ones, metrics row —
-           one snapshot per table per round; resume = continue from the
-           last committed round.
+           commits) — the seen job writes each new url ONCE, as a frontier
+           row; crawl-log manifest commit; frontier merge-on-read append of
+           that seen data dir + tombstones of the consumed urls; metrics
+           row — one snapshot per table per round; resume = continue from
+           the last committed round.
 
 The seen set and the image table are one structure twice: an exact keyed
-table plus a (shard, sub) filter state (crawl/filterstate.py).
+table plus a (shard, sub) filter state (crawl/filterstate.py). The seen
+table has the frontier's layout; the frontier's seed and round appends
+ARE its data dirs.
 ``FilterState.new_rows`` is their one dedup step (filter probe, then an
 anti-join of the filter-positive residue against the exact table) and
 ``SparkCrawler._write_and_fold`` their one commit job.
@@ -41,8 +43,9 @@ the SparkSession.
 
 Scale notes (the 1000-executor story):
   - every join against `seen` is key-sharded (pmod(xxhash64(url), S));
-    Bloom-negative short-circuit keeps the anti-join input ~the true-new
-    fraction, not all extracted links;
+    the Bloom-negative short-circuit keeps the anti-join's link side ~the
+    true-new fraction. In broadcast delivery the probe UDF also runs over
+    every seen key (Catalyst copies it onto the seen scan);
   - the per-host politeness cap K bounds per-host work per round, so the
     salted bucket repartition sees ≤ K rows per host — a hot host cannot
     skew a fetch partition by more than K (SURVEY.md §7 hard part #3);
@@ -83,7 +86,6 @@ from etlpy_spark.sources.synthetic_web import WebConfig
 # ``read_frontier`` re-derives the expression columns. Each DDL is its
 # table's declared schema; the layouts below are what gets written.
 FRONTIER_DDL = "url string, discovered_seq long, round int, lineage_part int"
-SEEN_DDL = "url string, round int"
 IMAGES_DDL = "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long, decode_error string, first_round int, lineage_part int"
 LOG_DDL = "fetch_seq long, url string, round int, lineage_part int"
 METRICS_DDL = "round int, scheduled long, robots_blocked long, fetched long, deferred long, new_urls long, new_images long"
@@ -96,7 +98,6 @@ FRONTIER_LAYOUT = TableLayout(
     FRONTIER_DDL, sort=("url",),
     encodings={**_URL_ENC, "discovered_seq": "DELTA_BINARY_PACKED"},
 )
-SEEN_LAYOUT = TableLayout(SEEN_DDL, sort=("url",), encodings=_URL_ENC)
 LOG_LAYOUT = TableLayout(
     LOG_DDL, sort=("url",),
     encodings={**_URL_ENC, "fetch_seq": "DELTA_BINARY_PACKED"},
@@ -272,7 +273,7 @@ class SparkCrawler:
             return SnapshotTable(spark, os.path.join(workdir, name), layout)
 
         self.frontier = table("frontier", FRONTIER_LAYOUT)
-        self.seen = table("seen", SEEN_LAYOUT)
+        self.seen = table("seen", FRONTIER_LAYOUT)
         self.images = table("images", IMAGES_LAYOUT)
         self.log = table("crawl_log", LOG_LAYOUT)
         self.metrics = table("metrics", METRICS_LAYOUT)
@@ -414,7 +415,7 @@ class SparkCrawler:
         # expressions over the url, re-derived by read_frontier each round.
         first = df.groupBy("url").agg(F.min("seed_seq").alias("seed_seq"))
         init_caches: list = []
-        ranked, n = global_rank(
+        ranked, _ = global_rank(
             first, ["seed_seq"], "discovered_seq", 0, self.cfg.n_buckets,
             small=len(seeds) <= RANK_THRESHOLD, caches=init_caches,
             count=False,
@@ -422,18 +423,15 @@ class SparkCrawler:
         frontier = ranked.select(
             "url", "discovered_seq",
             F.lit(0).alias("round"), F.lit(-1).alias("lineage_part"),
-        ).cache()
-        # seen first: its fused write job materializes the frontier cache
-        # AND returns the row count (no separate count job). A crash between
-        # the two commits re-runs init, duplicating seen rows — harmless:
-        # membership is an anti-join and parity reads distinct urls.
-        n_seen = self._commit_seen(frontier.select("url", F.lit(0).alias("round")))
-        if n < 0:
-            n = n_seen
-        self.frontier.overwrite(
-            frontier, meta={"round": 0, "next_fetch_seq": 0, "next_discovered_seq": n}
         )
-        frontier.unpersist()
+        # the frontier's first snapshot is the seen commit's data dir. A
+        # crash between the two commits re-runs init into a second seen dir
+        # — harmless: membership is an anti-join, parity reads distinct urls.
+        n, seen_dir = self._commit_seen(frontier)
+        self.frontier.append_with_deletes(
+            seen_dir, None, key="url",
+            meta={"round": 0, "next_fetch_seq": 0, "next_discovered_seq": n},
+        )
         for c in init_caches:
             c.unpersist()
 
@@ -444,12 +442,13 @@ class SparkCrawler:
         cfg = self.cfg
         return filter_spec(cfg.seen_filter, cfg.bloom_capacity, BLOOM_FPP)
 
-    def _commit_seen(self, urls_round: DataFrame) -> int:
-        """Commit this round's new URLs to the seen table and fold them
-        into the seen filter state; returns the number committed."""
+    def _commit_seen(self, rows: DataFrame) -> tuple[int, str | None]:
+        """Commit new frontier rows to the seen table and fold their URLs
+        into the seen filter state; returns the number committed and the
+        data dir (None if none), which the frontier commits as its own."""
         cfg = self.cfg
         return self._write_and_fold(
-            self.seen_bits, self.seen, urls_round, "url",
+            self.seen_bits, self.seen, rows, "url",
             max(cfg.n_buckets, cfg.n_shards), "seen",
         )
 
@@ -458,9 +457,10 @@ class SparkCrawler:
         key_col: str, n_parts: int, tag: str, meta: dict | None = None,
         make_rows: Callable[[pd.DataFrame], dict] | None = None,
         chunk: int | None = None,
-    ) -> int:
+    ) -> tuple[int, str | None]:
         """Commit ``rows`` to a keyed ``table`` and fold their keys into its
-        filter ``state`` in ONE Spark job; returns the rows committed. Each
+        filter ``state`` in ONE Spark job; returns the rows committed and
+        the committed data dir (None when no row was written). Each
         task writes its partition as ONE ``part-{pid:05d}.parquet`` through
         ``write_part``, reads its (shard, sub) pairs' previous-version
         filter files, folds its keys in and writes the new-version pair
@@ -519,7 +519,8 @@ class SparkCrawler:
             n_parts, "__shard__", "__sub__"
         ).mapInPandas(write_and_fold, schema="n long").collect()
         state.finish(bv, bits_dir, prev_dir)
-        return table.commit_external(v, data_dir, meta=meta)[1]
+        n = table.commit_external(v, data_dir, meta=meta)[1]
+        return n, data_dir if n else None
 
     # -- robots -------------------------------------------------------------
 
@@ -598,18 +599,16 @@ class SparkCrawler:
             return {"round": rnd, "fetched": 0, "scheduled": 0}
         caches: list = [base]
         small = scheduled <= RANK_THRESHOLD
-        selected, extracted, n_selected, log_txn = self._fetch(
+        selected, extracted, log_txn = self._fetch(
             selected, rnd, int(st["next_fetch_seq"]), small, caches
         )
-        new_frontier, n_new, probe_cleanup = self._new_links(
+        new_frontier, probe_cleanup = self._new_links(
             extracted, rnd, int(st["next_discovered_seq"]), small, caches
         )
-        fetched, n_new = self._commit_seen_and_log(
-            new_frontier, rnd, log_txn, n_selected, n_new
-        )
+        fetched, n_new, new_dir = self._commit_seen_and_log(new_frontier, rnd, log_txn)
         n_images = self._image_path(extracted, rnd)
         m = self._commit_round(
-            st, base, selected, new_frontier, scheduled=scheduled,
+            st, base, selected, new_dir, scheduled=scheduled,
             robots_blocked=robots_blocked, fetched=fetched, n_new=n_new,
             n_images=n_images,
         )
@@ -696,20 +695,18 @@ class SparkCrawler:
     def _fetch(
         self, selected: DataFrame, rnd: int, fetch_base: int, small: bool,
         caches: list,
-    ) -> tuple[DataFrame, DataFrame, int, tuple[int, str]]:
+    ) -> tuple[DataFrame, DataFrame, tuple[int, str]]:
         """Fetch phase: global fetch order (fetch_rank), then fetch + parse
         inside politeness buckets, the crawl log written by the same tasks.
         Lazy apart from the large rank path's offset collect. Returns the
-        ranked selected rows, the cached extracted (link, image) rows, the
-        selected count (-1 on the small rank path) and the crawl log's
-        reserved (version, dir)."""
+        ranked selected rows, the cached extracted (link, image) rows and
+        the crawl log's reserved (version, dir)."""
         cfg = self.cfg
         # global fetch order (total: priority, discovered_seq unique). The
         # selected-row count is NOT aggregated up front (that would force a
-        # full un-pruned window pass): the large rank path counts as a side
-        # effect of its partition-offset collect, and the small path's
-        # count arrives free from the crawl-log commit's parquet footers.
-        selected, n_selected = global_rank(
+        # full un-pruned window pass): it arrives free from the crawl-log
+        # commit's parquet footers.
+        selected, _ = global_rank(
             selected, ["__eprio__", "discovered_seq"], "fetch_seq", fetch_base,
             cfg.n_buckets, small=small, caches=caches, count=False,
         )
@@ -782,17 +779,17 @@ class SparkCrawler:
             schema="fetch_seq long, kind string, pos int, value string, caption string, part int",
         ).cache()
         caches.append(extracted)
-        return selected, extracted, n_selected, (v_log, log_dir)
+        return selected, extracted, (v_log, log_dir)
 
     def _new_links(
         self, extracted: DataFrame, rnd: int, seq_base: int, small: bool,
         caches: list,
-    ) -> tuple[DataFrame, int, Callable[[], None] | None]:
+    ) -> tuple[DataFrame, Callable[[], None] | None]:
         """Link phase: canonicalize, keep-first dedup, seen-filter probe +
         anti-join of the filter-positive residue, discovered_seq rank.
         Lazy apart from the large rank path's offset collect. Returns the
-        cached new-frontier rows, their count (-1 on the small rank path)
-        and the probe's cleanup (or None)."""
+        new-frontier rows (counted by the seen write) and the probe's
+        cleanup (or None)."""
         cfg = self.cfg
         # Extracted links are well-formed, so the JVM rlike fast path keeps
         # ~the whole multi-GB link stream out of the Python UDF entirely —
@@ -823,37 +820,27 @@ class SparkCrawler:
         # the filter-positive residue against the exact seen table
         new_links, cleanup = self.seen_bits.new_rows(links, "url", self.seen)
 
-        ranked_links, n_new = global_rank(
+        ranked_links, _ = global_rank(
             new_links, ["fetch_seq", "pos"], "discovered_seq", seq_base,
             cfg.n_buckets, small=small, caches=caches, count=False,
         )
         new_frontier = ranked_links.select(
             "url", "discovered_seq",
             F.lit(rnd + 1).alias("round"), F.col("part").alias("lineage_part"),
-        ).cache()
-        caches.append(new_frontier)
-        return new_frontier, n_new, cleanup
+        )
+        return new_frontier, cleanup
 
     def _commit_seen_and_log(
         self, new_frontier: DataFrame, rnd: int, log_txn: tuple[int, str],
-        n_selected: int, n_new: int,
-    ) -> tuple[int, int]:
-        """Seen + crawl-log commit. The fused seen write materializes the
-        new_frontier cache (whole link path: canon UDF → keep-first agg →
-        filter probe → anti-join → rank) and returns the new-URL count in
-        the same job. That job consumed every partition of the fetch
-        cache, so all per-bucket log part files exist — manifest-commit
-        them. Every selected row is logged exactly once, so the log's
-        footer row count IS the fetched count. Returns (fetched, new URLs),
-        taking the counts the large rank path already knows."""
-        n_committed = self._commit_seen(
-            new_frontier.select("url", F.lit(rnd + 1).alias("round"))
-        )
-        _, n_logged = self.log.commit_external(*log_txn, meta={"round": rnd})
-        return (
-            n_selected if n_selected >= 0 else n_logged,
-            n_new if n_new >= 0 else n_committed,
-        )
+    ) -> tuple[int, int, str | None]:
+        """Seen + crawl-log commit. The fused seen write runs the whole
+        link path and writes (and counts) the new frontier rows. That job
+        consumed every partition of the fetch cache, so all per-bucket log
+        part files exist — manifest-commit them; their footer row count IS
+        the fetched count. Returns (fetched, new URLs, seen data dir)."""
+        n_new, new_dir = self._commit_seen(new_frontier)
+        _, fetched = self.log.commit_external(*log_txn, meta={"round": rnd})
+        return fetched, n_new, new_dir
 
     def _image_path(self, extracted: DataFrame, rnd: int) -> int:
         """Image phase: keep-first image refs, image-filter probe +
@@ -888,7 +875,7 @@ class SparkCrawler:
         # accumulate beyond ~CHUNK rows per frame / row group (a whole
         # input batch of 280 KB images in one frame OOMs at high task
         # concurrency — memory must not scale with parallelism)
-        n_imgs = self._write_and_fold(
+        n_imgs, _ = self._write_and_fold(
             self.image_bits, self.images, refs, "image_id", cfg.n_buckets,
             "images", meta={"round": rnd},
             make_rows=lambda sub: _image_rows(sub, web, rnd), chunk=CHUNK,
@@ -899,12 +886,13 @@ class SparkCrawler:
 
     def _commit_round(
         self, st: dict, base: DataFrame, selected: DataFrame,
-        new_frontier: DataFrame, scheduled: int, robots_blocked: int,
+        new_dir: str | None, scheduled: int, robots_blocked: int,
         fetched: int, n_new: int, n_images: int,
     ) -> dict:
         """Round commit: one merge-on-read frontier commit appends the
-        round's new URLs and tombstones the consumed ones (fetched +
-        robots-blocked) — O(round-sized files), never O(pending); its
+        seen commit's data dir ``new_dir`` (None: tombstones only) and
+        tombstones the consumed URLs (fetched + robots-blocked) —
+        O(round-sized files), never O(pending); its
         snapshot meta is the crawl's resume state. Tombstones compact
         automatically past SnapshotTable's threshold (one distributed
         rewrite). Then the round's one metrics row, written in-process
@@ -932,7 +920,7 @@ class SparkCrawler:
             base.filter(F.col("__blocked__")).select("url")
         )
         self.frontier.append_with_deletes(
-            new_frontier, removed, key="url", meta=state_meta
+            new_dir, removed, key="url", meta=state_meta
         )
         mv, metrics_dir = self.metrics.begin_external()
         write_part(
@@ -1054,9 +1042,7 @@ class SparkCrawler:
         if removed:
             # tombstone exactly the urls that ARE in the table (tombstone
             # stats drive compaction; phantom keys would skew them)
-            self.seen.append_with_deletes(
-                self.spark.createDataFrame([], SEEN_DDL), hits, key="url"
-            )
+            self.seen.append_with_deletes(None, hits, key="url")
             self.seen_bits.invalidate()  # rebuilt distributed, on demand
         hits.unpersist()
         return int(removed)

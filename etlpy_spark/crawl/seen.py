@@ -4,11 +4,11 @@ Generalizes the reference's in-memory seen set (RepeatFT's ``set``,
 reference etl.py:238-247) and CrawlerTF's 100-URL memo (etl.py:454-464) to
 10^10-URL scale:
 
-  - authority = an exact table stored as slim ``(url, round)`` rows (the
-    shard key ``pmod(xxhash64(url), S)`` and the url hash are derivable
-    expressions, never written — random 8-byte hashes don't compress and
-    doubled the r2 file bytes); membership is an anti-join, which Spark
-    executes as a shuffled hash join per shard;
+  - authority = an exact table sharing the frontier's data files (each
+    new url is written once, as a frontier row; shard key and url hash
+    are derivable expressions, never written — random 8-byte hashes don't
+    compress); membership is an anti-join, which Spark executes as a
+    shuffled hash join per shard;
   - fast path = one Bloom bitset per shard (numpy bitarray, double
     hashing). Bloom-negative candidates are *definitely new* and skip the
     anti-join entirely; only Bloom-positives (a small fraction at steady
@@ -16,13 +16,12 @@ reference etl.py:238-247) and CrawlerTF's 100-URL memo (etl.py:454-464) to
     exact (north_rule demands exact parity; SURVEY.md §7 hard part #2).
 
 All add/membership paths are numpy-vectorized (two siphash64 passes via
-``pd.util.hash_array`` + double hashing) — per-URL Python here was the
-serial Amdahl term that capped scaling efficiency: the driver applies
-``add_many`` over every newly-seen URL each round.
+``pd.util.hash_array`` + double hashing); ``add_many`` runs in the
+executor tasks that write the seen part files, never on the driver.
 
-At cluster scale the bitsets live one-per-shard (e.g. 1024 shards × 256 MB
-≈ bits for 10^10 keys at ~1% fpp) and are broadcast per round; here the
-same structure at toy size.
+At cluster scale the bitsets live one per (shard, sub) pair in a state
+table (crawl/filterstate.py), delivered to probe tasks by a cogroup past
+``FILTER_BROADCAST_MAX_BYTES``; here the same structure at toy size.
 """
 
 from __future__ import annotations

@@ -42,6 +42,11 @@ Two rules, each written once:
   distributed.py:42,62-63). A multi-table commit record (every table
   version one crawl round wrote, rolled back together with
   ``rollback_to``) hooks in at that one helper.
+
+Invariant: no code deletes a data dir a manifest references (compaction
+writes a fresh dir; ``commit_external`` removes only the empty dir it was
+about to commit), so tables may share one: the crawl frontier appends the
+data dirs the seen table's commits wrote.
 """
 
 from __future__ import annotations
@@ -159,8 +164,10 @@ def write_part(layout: TableLayout, cols, path: str) -> int:
             if layout.sort:
                 tbl = tbl.sort_by([(k, "ascending") for k in layout.sort])
             if writer is None:
+                # the declared schema without pandas / Arrow metadata: the
+                # footer shrinks ~1.9 KB a file; readers use parquet types
                 writer = pq.ParquetWriter(
-                    tmp, tbl.schema,
+                    tmp, schema, store_schema=False,
                     compression=layout.compression,
                     column_encoding=layout.encodings or None,
                     use_dictionary=[k for k in schema.names if k not in layout.encodings],
@@ -283,7 +290,7 @@ class SnapshotTable:
         With one, each task buffers its partition and writes ONE
         ``part-{pid:05d}.parquet`` through :func:`write_part`, so a retried
         or speculated task replaces its own identical output instead of
-        duplicating rows."""
+        duplicating rows. An empty ``df`` leaves an empty dir."""
         layout = layout or self.layout
         if layout is None:
             df.write.mode("overwrite").parquet(data_dir)
@@ -302,18 +309,14 @@ class SnapshotTable:
             path = os.path.join(data_dir, f"part-{pid:05d}.parquet")
             yield pd.DataFrame({"n": [write_part(layout, pdf, path)]})
 
-        if not df.mapInPandas(write, schema="n long").collect():
-            # an empty snapshot must still be readable with its schema
-            # (spark.read.parquet cannot infer from zero files)
-            empty = {n: [] for n, _ in layout.columns()}
-            write_part(layout, empty, os.path.join(data_dir, "part-empty.parquet"))
+        df.mapInPandas(write, schema="n long").collect()
 
     def _commit_manifest(
-        self, v: int, mode: str, data_dir: str, meta: dict | None,
+        self, v: int, mode: str, data_dir: str | None, meta: dict | None,
         rows: int | None = None, tombstones: tuple[str, str] | None = None,
     ) -> dict:
-        """Make snapshot ``v`` (``data_dir`` already written) the current
-        one — the single place a snapshot chains onto its predecessor.
+        """Make snapshot ``v`` (``data_dir`` already written; None adds
+        none) the current one — the single place a snapshot chains on.
 
         ``append`` carries the previous data dirs forward, and with them
         the tombstones (they delete from those old dirs only) and the
@@ -329,7 +332,8 @@ class SnapshotTable:
         if mode == "append" and (prev := self.current_version()):
             ps = self.snapshot(prev)
         prev_dirs = ps.data_dirs if ps else []
-        snap = {"version": v, "mode": mode, "data_dirs": prev_dirs + [data_dir],
+        new_dirs = [data_dir] if data_dir else []
+        snap = {"version": v, "mode": mode, "data_dirs": prev_dirs + new_dirs,
                 "meta": dict(meta or {})}
         dels = list(ps.delete_dirs or []) if ps else []
         key = ps.delete_key if ps else None
@@ -343,8 +347,7 @@ class SnapshotTable:
             if stats is None:
                 # first MoR commit on this table: seed the live-row count
                 # from the pre-existing data files (footer metadata only)
-                stats = {"data": sum(self._footer_rows(d) for d in prev_dirs
-                                     if os.path.exists(d)),
+                stats = {"data": sum(self._footer_rows(d) for d in prev_dirs),
                          "tomb": 0}
             stats = {**stats, "tomb": stats["tomb"] + self._footer_rows(del_dir)}
         if dels:
@@ -352,7 +355,7 @@ class SnapshotTable:
             snap["delete_key"] = key
             if stats:
                 if rows is None:
-                    rows = self._footer_rows(data_dir)
+                    rows = sum(self._footer_rows(d) for d in new_dirs)
                 snap["mor_stats"] = {**stats, "data": stats["data"] + rows}
         tmp = self._snap_path(v) + ".tmp"
         with open(tmp, "w") as f:
@@ -434,13 +437,15 @@ class SnapshotTable:
     # -- merge-on-read deletes (Iceberg equality-delete files + compaction)
 
     def append_with_deletes(
-        self, df: DataFrame, delete_keys: DataFrame, key: str,
-        meta: dict | None = None, compact_threshold: float = 0.3,
+        self, data: DataFrame | str | None, delete_keys: DataFrame | None,
+        key: str, meta: dict | None = None, compact_threshold: float = 0.3,
     ) -> int:
-        """One atomic commit = append ``df`` + equality-delete every
+        """One atomic commit = append ``data`` + equality-delete every
         existing row whose ``key`` appears in ``delete_keys`` (Iceberg
         merge-on-read DELETE semantics: a ~key-only tombstone file, no
         data-file rewrite). ``read()`` applies tombstones as an anti-join.
+        ``data`` may also be a written data dir (shared, not copied) or
+        None, and ``delete_keys`` None (no tombstones).
 
         This turns a mutate-in-place table (the crawl frontier) from an
         O(table) rewrite per commit into O(changed rows): at a 10^10-URL
@@ -450,19 +455,24 @@ class SnapshotTable:
         equivalent of Iceberg's rewrite_data_files) so read-side anti-join
         cost stays bounded; amortized cost is O(changed) per commit."""
         v = (self.current_version() or 0) + 1
-        data_dir = self._data_dir(v)
-        del_dir = data_dir + ".del"
-        self._write_data_dir(df, data_dir)
-        # tombstones are URL-heavy too: the key column keeps the table's
-        # sorted layout + encoding
-        self._write_data_dir(
-            delete_keys.select(key), del_dir,
-            self.layout.tombstones(key) if self.layout else None,
-        )
+        data_dir = data
+        if isinstance(data, DataFrame):
+            data_dir = self._data_dir(v)
+            self._write_data_dir(data, data_dir)
+        tombstones = None
+        if delete_keys is not None:
+            del_dir = self._data_dir(v) + ".del"
+            # tombstones are URL-heavy too: the key column keeps the table's
+            # sorted layout + encoding
+            self._write_data_dir(
+                delete_keys.select(key), del_dir,
+                self.layout.tombstones(key) if self.layout else None,
+            )
+            tombstones = (key, del_dir)
         stats = self._commit_manifest(
-            v, "append", data_dir, meta, tombstones=(key, del_dir)
-        )["mor_stats"]
-        if stats["tomb"] > compact_threshold * max(stats["data"] - stats["tomb"], 1):
+            v, "append", data_dir, meta, tombstones=tombstones
+        ).get("mor_stats")
+        if stats and stats["tomb"] > compact_threshold * max(stats["data"] - stats["tomb"], 1):
             return self.compact(meta=meta)
         return v
 
@@ -509,32 +519,35 @@ class SnapshotTable:
         if v is None:
             raise FileNotFoundError(f"table {self.path} has no snapshots")
         snap = self.snapshot(v)
-        rd = self.spark.read
+        layout = self.layout
         if not snap.delete_dirs:
-            dirs = [d for d in snap.data_dirs if os.path.exists(d)]
-            return rd.parquet(*dirs)
+            return self._scan(snap.data_dirs, layout)
         # sequence-aware tombstones: data dir i is deleted-from only by
         # tombstones with upto > i. Group data dirs sharing the same
         # applicable-tombstone set -> one anti-join per group (group
         # count stays small because compaction clears the tombstones).
         groups: dict[tuple, list[str]] = {}
         for i, d in enumerate(snap.data_dirs):
-            if not os.path.exists(d):
-                continue
             applicable = tuple(
                 e["dir"] for e in snap.delete_dirs if e["upto"] > i
             )
             groups.setdefault(applicable, []).append(d)
+        key = snap.delete_key
         out = None
         for applicable, ds in groups.items():
-            df = rd.parquet(*ds)
+            df = self._scan(ds, layout)
             if applicable:
-                tomb = rd.parquet(*applicable).select(
-                    snap.delete_key
-                ).distinct()
-                df = df.join(tomb, on=snap.delete_key, how="left_anti")
+                tomb = self._scan(
+                    applicable, layout and layout.tombstones(key)
+                ).select(key).distinct()
+                df = df.join(tomb, on=key, how="left_anti")
             out = df if out is None else out.unionByName(df)
         return out
+
+    def _scan(self, dirs: list[str], layout: TableLayout | None) -> DataFrame:
+        """Declared-schema scan: no inference job; no files read as 0 rows."""
+        rd = self.spark.read
+        return (rd.schema(layout.ddl) if layout else rd).parquet(*dirs)
 
     def rollback_to(self, version: int) -> None:
         """Point _current at an older snapshot (time travel / resume)."""

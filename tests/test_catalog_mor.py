@@ -10,14 +10,17 @@ Contract under test (catalog.py append_with_deletes/read/compact):
   re-enqueueing a previously-consumed key (recrawl / forget+rediscover)
   works with plain append;
 - compaction clears tombstones without changing the visible rows;
-- time travel (read at an older version) still sees the old state.
+- time travel (read at an older version) still sees the old state;
+- the appended rows may instead be a data dir another table already
+  committed (shared, never copied), or nothing (a tombstone-only commit).
 """
 
 from __future__ import annotations
 
+import os
 import tempfile
 
-from etlpy_spark.sources.catalog import SnapshotTable
+from etlpy_spark.sources.catalog import SnapshotTable, TableLayout, write_part
 
 
 def _t(spark, rows):
@@ -131,3 +134,45 @@ def test_plain_appends_grow_live_row_stats(spark):
     assert _read_set(tbl) == (
         {(f"a{i}", i) for i in range(2, 10)} | {(f"x{i}", i) for i in range(100)}
     )
+
+
+def test_append_with_deletes_takes_a_written_dir_or_none(spark):
+    """Beside a DataFrame, ``append_with_deletes`` appends an already
+    written data dir (here another table's committed dir, referenced, not
+    copied) or nothing at all (None: a tombstone-only commit). A layout
+    table reads with its declared schema, so a snapshot with no data dir
+    reads as 0 rows."""
+    layout = TableLayout("k string, v int", sort=("k",))
+    root = tempfile.mkdtemp(prefix="mor_")
+    tbl = SnapshotTable(spark, os.path.join(root, "t"), layout)
+    other = SnapshotTable(spark, os.path.join(root, "o"), layout)
+    tbl.overwrite(_t(spark, [("a", 1), ("b", 2)]))
+    ov, odir = other.begin_external()
+    write_part(layout, {"k": ["c", "a"], "v": [3, 9]},
+               os.path.join(odir, "part-00000.parquet"))
+    other.commit_external(ov, odir)
+
+    v = tbl.append_with_deletes(odir, _keys(spark, ["a"]), key="k",
+                                compact_threshold=100.0)
+    snap = tbl.snapshot(v)
+    assert snap.data_dirs[-1] == odir
+    assert not os.path.exists(os.path.join(root, "t", "data", snap.name))
+    assert snap.mor_stats == {"data": 4, "tomb": 1}
+    # the tombstone binds only to the dirs before it: the shared dir's
+    # ("a", 9) stays live
+    assert _read_set(tbl) == {("b", 2), ("c", 3), ("a", 9)}
+
+    v2 = tbl.append_with_deletes(None, _keys(spark, ["b", "c"]), key="k",
+                                 compact_threshold=100.0)
+    snap2 = tbl.snapshot(v2)
+    assert snap2.data_dirs == snap.data_dirs
+    assert snap2.mor_stats == {"data": 4, "tomb": 3}
+    assert _read_set(tbl) == {("a", 9)}
+    # the other table's view of the shared dir is untouched
+    assert _read_set(other) == {("c", 3), ("a", 9)}
+
+    empty = SnapshotTable(spark, os.path.join(root, "e"), layout)
+    empty.append_with_deletes(None, None, key="k")
+    assert empty.snapshot(empty.current_version()).data_dirs == []
+    df = empty.read()
+    assert df.count() == 0 and df.columns == ["k", "v"]

@@ -6,6 +6,7 @@ final state (BASELINE.json north_rule; FIXTURES.md F9)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -341,5 +342,80 @@ def test_rollback_time_travel(spark):
         assert {"url", "host", "priority", "discovered_seq"} <= set(
             cr.read_frontier().columns
         )
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
+
+
+def test_steady_round_job_count(spark):
+    """Per-round fixed cost is Spark jobs: a steady WEB round (seen table
+    and filter state already committed, frontier compaction included)
+    runs at most 29 of them. Each new url is written by one job (the seen
+    write-and-fold, whose data dir the frontier appends), and every
+    layout-table read takes its declared schema, so no read runs a
+    schema-inference job."""
+    sc = spark.sparkContext
+    wd = tempfile.mkdtemp(prefix="crawl_jobs_")
+    try:
+        cr = SparkCrawler(spark, wd, CrawlConfig(web=WEB))
+        cr.init_from_seeds(seed_urls(WEB, n_per_host=2))
+        cr.run_round()
+        group = f"steady-round-{os.path.basename(wd)}"
+        sc.setJobGroup(group, "steady WEB round")
+        try:
+            m = cr.run_round()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert m["round"] == 1 and m["fetched"] > 0 and m["new_urls"] > 0
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 0 < n_jobs <= 29, n_jobs
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
+
+
+def test_shared_data_dirs_survive_either_compaction(spark):
+    """The frontier's per-round appends are the seen table's data dirs, so
+    neither table's compaction may touch the other's view. Forgetting
+    enough seen urls compacts ``seen``; the pending frontier is unchanged,
+    and a frontier compaction leaves the seen set unchanged. The
+    forgotten urls are ones no later-fetched page links to, so the
+    following rounds still match the serial oracle: the same crawl log,
+    and its seen set minus the forgotten urls."""
+    from etlpy_spark.functions.url import canonicalize_url
+    from etlpy_spark.sources.synthetic_web import page
+
+    seeds = seed_urls(WEB, n_per_host=2)
+    total = ROUNDS + 2
+    before = crawl_oracle(seeds, WEB, max_rounds=2)
+    full = crawl_oracle(seeds, WEB, max_rounds=total)
+    later = [u for _, u in full.crawl_log[len(before.crawl_log):]]
+    relinked = {canonicalize_url(l) for u in later for l in page(u, WEB)["links"]}
+    forgotten = sorted(set(before.seen) - relinked)
+    wd = tempfile.mkdtemp(prefix="crawl_shared_")
+    try:
+        cr = SparkCrawler(spark, wd, CrawlConfig(web=WEB))
+        cr.run(seeds, max_rounds=2)
+
+        def pending():
+            return {(r.url, r.discovered_seq) for r in cr.frontier.read().collect()}
+
+        frontier_before = pending()
+        assert cr.forget(forgotten) == len(forgotten)
+        snap = cr.seen.snapshot(cr.seen.current_version())
+        assert snap.mode == "overwrite" and not snap.delete_dirs, (
+            "the forget must trip seen's compaction"
+        )
+        assert pending() == frontier_before
+        seen_before = cr.seen_urls_list()
+        assert seen_before == set(before.seen) - set(forgotten)
+
+        v = cr.frontier.compact()
+        assert cr.frontier.snapshot(v).mode == "overwrite"
+        assert cr.seen_urls_list() == seen_before
+        assert pending() == frontier_before
+
+        cr.run(None, max_rounds=total)
+        assert cr.crawl_log_list() == full.crawl_log
+        assert cr.seen_urls_list() == set(full.seen) - set(forgotten)
     finally:
         shutil.rmtree(wd, ignore_errors=True)

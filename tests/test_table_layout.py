@@ -125,3 +125,24 @@ def test_every_file_has_its_declared_layout(spark, tmp_path):
                         continue
                     encs = md.row_group(rg).column(col).encodings
                     assert "DELTA_BYTE_ARRAY" in encs, (name, f, encs)
+
+
+def test_each_new_url_is_written_once(spark, tmp_path):
+    """The seen table and the frontier share their new-URL files: the
+    frontier's seed and per-round appends are the seen table's data dirs
+    (not copies), and every data dir the frontier owns is compaction
+    output."""
+    cr = SparkCrawler(spark, str(tmp_path / "crawl"), CrawlConfig(web=WEB))
+    cr.init_from_seeds(seed_urls(WEB, n_per_host=2))
+    for _ in range(2):
+        cr.run_round()
+        appends = [s for s in cr.frontier.history() if s.mode == "append"]
+        seen_newest = cr.seen.snapshot(cr.seen.current_version()).data_dirs[-1]
+        assert appends[-1].data_dirs[-1] == seen_newest
+
+    history = cr.frontier.history()
+    seen_dirs = {s.data_dirs[-1] for s in cr.seen.history()}
+    referenced = {d for s in history for d in s.data_dirs}
+    own = {d for d in referenced if d.startswith(cr.frontier.path + os.sep)}
+    assert own == {s.data_dirs[0] for s in history if s.mode == "overwrite"}
+    assert referenced - own == seen_dirs
