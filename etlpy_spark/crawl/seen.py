@@ -99,12 +99,6 @@ class BloomFilter:
     def spec(self) -> tuple:
         return ("bloom", self.n_bits, self.n_hashes)
 
-    def merge_bytes(self, data: bytes) -> None:
-        """Fold another shard bitset (same spec) into this one. Blooms of
-        identical geometry merge by bitwise OR — the property the
-        executor-build / driver-fold pattern relies on."""
-        self.bits = np.bitwise_or(self.bits, np.frombuffer(data, dtype=np.uint8))
-
 
 class CuckooFilter:
     """Cuckoo filter (Fan et al., CoNEXT'14): the seen-set fast path the
@@ -124,9 +118,9 @@ class CuckooFilter:
     inside the per-shard executor build, where a short Python kick loop is
     acceptable (vectorized empty-slot fast path handles the bulk).
 
-    Merging (the driver's per-round fold) re-inserts the other filter's
-    occupied fingerprints at their recorded buckets — correct because the
-    partner bucket is derivable from (bucket, fp) by the XOR involution.
+    Merging re-inserts the other filter's occupied fingerprints at their
+    recorded buckets — correct because the partner bucket is derivable
+    from (bucket, fp) by the XOR involution.
     """
 
     SLOTS = 4
@@ -297,9 +291,6 @@ class CuckooFilter:
     @property
     def spec(self) -> tuple:
         return ("cuckoo", self.n_buckets, self.fp_bits)
-
-    def merge_bytes(self, data: bytes) -> None:
-        self.merge(CuckooFilter.from_bytes(data, self.n_buckets, self.fp_bits))
 
 
 # -- per-worker deserialized-filter memo -------------------------------------

@@ -47,6 +47,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("ETLPY_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # pages (one per Python-UDF task, sort, hash agg) and broadcast chunks
+        # under G1's humongous size (2 MB at 8g): at the 64 MB / 4 MB defaults
+        # each could start a concurrent mark cycle; call times varied with it
+        .config("spark.buffer.pageSize", "1m")
+        .config("spark.broadcast.blockSize", "1m")
     )
     codec = os.environ.get("ETLPY_IO_CODEC")
     if codec:
