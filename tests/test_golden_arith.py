@@ -5,6 +5,8 @@ the reference engine run on the same XML (FIXTURES.md F7)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from etlpy_spark.plans.compiler import CompileContext, compile_module, finalize
@@ -52,6 +54,8 @@ def test_spark_matches_reference(spark, golden):
     assert got == golden
 
 
+@pytest.mark.skipif(not os.path.exists(PROJECT_XML),
+                    reason=f"reference checkout absent: {PROJECT_XML} not found")
 def test_order_parity_and_schema(spark):
     proj = load_project_xml(PROJECT_XML)
     ctx = CompileContext(spark=spark, project=proj, parallelism=4)

@@ -79,7 +79,7 @@ def test_append_matches_reference(spark, reference, left, right):
 
 @settings(**_SETTINGS)
 @given(left=_stream(LEFT_COLS, ragged_cols=("b",)), right=_stream(RIGHT_COLS))
-def test_zip_merge_matches_reference(spark, reference, left, right):
+def test_zip_merge_matches_reference(spark, left, right):
     """Merge = positional zip, right keys override, length = min — the
     *intended* semantics of extends.MergeAll (extends.py:75-84; the
     upstream body is PEP-479-broken on py>=3.7, so the oracle is the
