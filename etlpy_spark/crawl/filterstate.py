@@ -299,33 +299,47 @@ class FilterState:
 
     def new_rows(
         self, df: DataFrame, key_col: str, table: SnapshotTable
-    ) -> tuple[DataFrame, Callable[[], None] | None]:
-        """The rows of ``df`` whose ``key_col`` is not in ``table``, and the
-        probe's cleanup (or None). Filter-negative keys are DEFINITELY new
-        and skip the anti-join, so only the filter-positive residue (rare
-        at steady state) is joined against the growing exact table. No
-        false negatives, so the result is exact. A table with no snapshot
-        yet holds nothing: every row is new."""
+    ) -> tuple[DataFrame, Callable[[], None]]:
+        """The rows of ``df`` whose ``key_col`` is not in ``table``, and a
+        cleanup to call once they are consumed. Filter-negative keys are
+        DEFINITELY new and skip the anti-join, so only the filter-positive
+        residue (rare at steady state) is joined against the growing exact
+        table. No false negatives, so the result is exact. A table with no
+        snapshot yet holds nothing: every row is new.
+
+        The probed rows are cached, so the probe runs once per row of
+        ``df`` and both branches read that cache. Without it, each branch
+        re-evaluates the probe, and Catalyst infers ``maybe(key)`` as a
+        filter on the exact table's scan through the anti-join's key, so
+        the probe would also run over every key of ``table``. The cleanup
+        drops the cache and the probe's broadcast."""
         if table.current_version() is None:
-            return df, None
-        probed, cleanup = self.ensure(table, key_col).probe(df, key_col)
-        probed = probed.drop("__shard__")
+            return df, lambda: None
+        probed, destroy = self.ensure(table, key_col).probe(df, key_col)
+        probed = probed.drop("__shard__").cache()
         fresh = probed.filter(~F.col("__maybe__")).drop("__maybe__")
         residue = (
             probed.filter(F.col("__maybe__"))
             .drop("__maybe__")
             .join(table.read().select(key_col), on=key_col, how="left_anti")
         )
+
+        def cleanup() -> None:
+            probed.unpersist()
+            destroy()
+
         return fresh.unionByName(residue), cleanup
 
     def probe(
         self, df: DataFrame, key_col: str
-    ) -> tuple[DataFrame, Callable[[], None] | None]:
+    ) -> tuple[DataFrame, Callable[[], None]]:
         """Mark every row of ``df`` with ``__maybe__`` — whether its
         (shard, sub) filter might contain ``key_col`` (False where the
         pair has no filter yet, i.e. definitely new). Adds ``__shard__``
-        and returns ``(probed_df, cleanup_fn)``. Filters come FROM THE
-        STATE TABLE — the driver never folds or retains bitsets.
+        and returns ``(probed_df, cleanup_fn)``; the frame is lazy, so each
+        action over it runs the probe again (``new_rows`` caches it).
+        Filters come FROM THE STATE TABLE — the driver never folds or
+        retains bitsets.
 
         Two delivery modes, picked by :meth:`total_bytes` against
         FILTER_BROADCAST_MAX_BYTES:
@@ -340,7 +354,8 @@ class FilterState:
           exactly its own pair's bitset through the shuffle and
           deserializes it once. Per-executor residency = the pairs it
           probes — the only shape that survives the 10^10-URL design
-          point where the full filter set is tens of GB. No cleanup.
+          point where the full filter set is tens of GB. The cleanup does
+          nothing.
 
         The sub hash uses the state's seed (the same one its write jobs
         partition by): each pair's sub-filter contains only its own sub's
@@ -418,4 +433,4 @@ class FilterState:
             .applyInPandas(probe_pair, schema=out_schema)
             .drop("__sub__")
         )
-        return probed, None
+        return probed, lambda: None

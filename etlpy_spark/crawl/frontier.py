@@ -1,14 +1,16 @@
 """Distributed URL-frontier + fetch scheduler — the Spark implementation of
 the crawl rule specified in crawl/oracle.py (north_rule).
 
-Shape of one round (all DataFrame ops; Python only inside Arrow batches):
+Shape of one round (all DataFrame ops; Python only inside Arrow batches,
+at most one Python runner per task):
 
   frontier ──robots broadcast-join──▶ allowed/blocked
      allowed ──per-host window (priority, seq) ≤ K──▶ selected / deferred
      selected ──repartition(pmod(xxhash64(host), B))──▶ politeness buckets
-              ──mapInPandas fetch──▶ (links, image refs) + lineage part id
-     links ──canonicalize+priority UDF──▶ dedup-in-batch (keep first by
-           fetch order) ──FilterState.new_rows(seen)──▶ new urls
+              ──mapInPandas fetch──▶ (canonical links, image refs) +
+              lineage part id
+     links ──dedup keep-first by fetch order──▶
+           FilterState.new_rows(seen)──▶ new urls
      new urls ──row_number over fetch order──▶ discovered_seq; → frontier
      image refs ──dedup keep-first──▶ FilterState.new_rows(images) ──▶
            fetch bytes / decode / pHash inside the write task
@@ -36,7 +38,7 @@ write job, an engine task, or the crawler in-process), goes through
 
 run_round sequences one private method per phase: _schedule (robots +
 politeness), _fetch (fetch_rank + fetch + crawl-log write), _new_links
-(canon/dedup/filter probe + anti-join/rank), _commit_seen_and_log, _image_path,
+(dedup/filter probe + anti-join/rank), _commit_seen_and_log, _image_path,
 _commit_round (frontier + metrics). Executor-side closures capture plain
 locals (web config, round, dirs, filter spec), never ``self``, which holds
 the SparkSession.
@@ -44,8 +46,8 @@ the SparkSession.
 Scale notes (the 1000-executor story):
   - every join against `seen` is key-sharded (pmod(xxhash64(url), S));
     the Bloom-negative short-circuit keeps the anti-join's link side ~the
-    true-new fraction. In broadcast delivery the probe UDF also runs over
-    every seen key (Catalyst copies it onto the seen scan);
+    true-new fraction. The probe runs once per deduplicated key and never
+    over the seen table (new_rows reads both branches from one cache);
   - the per-host politeness cap K bounds per-host work per round, so the
     salted bucket repartition sees ≤ K rows per host — a hot host cannot
     skew a fetch partition by more than K (SURVEY.md §7 hard part #3);
@@ -167,6 +169,18 @@ def _fail_once(fail_dir: str | None, tag: str, pid: int) -> None:
         with open(sentinel, "w") as f:
             f.write("1")
         raise RuntimeError(f"injected one-shot task failure ({tag}, pid={pid})")
+
+
+def _canonicalized(df: DataFrame, schema: str) -> DataFrame:
+    """``df`` with its ``raw`` url column canonicalized into ``url`` and
+    the invalid urls dropped, in one ``mapInPandas`` (one Python runner
+    per task) — seeds and recrawl/forget lists."""
+    from etlpy_spark.functions.url import canonicalize_rows
+
+    return df.mapInPandas(
+        lambda batches: (canonicalize_rows(pdf, "raw", "url") for pdf in batches),
+        schema=schema,
+    )
 
 
 def _image_rows(sub: pd.DataFrame, web: WebConfig, rnd: int) -> dict:
@@ -335,31 +349,6 @@ class SparkCrawler:
         self._ensure_archive()
         return self.spark.read.parquet(os.path.join(self.workdir, "archive_images"))
 
-    # -- vectorized url helpers -------------------------------------------
-
-    def _canon_udf(self):
-        """raw url -> canonical url (RFC-3986), one Arrow batch, vectorized:
-        URLs full-matching the already-canonical shape (FAST_CANONICAL_RE —
-        the overwhelming majority in a steady crawl, since extracted links
-        are well-formed) skip per-row canonicalization entirely; only
-        irregular URLs pay the urlsplit slow path. This UDF is the ONLY
-        Python in the link path — host and priority are pure Column
-        expressions over the canonical url (synthetic_web.host_expr /
-        priority_expr), computed after dedup on the unique survivors."""
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("string")
-        def _canon(raw: pd.Series) -> pd.Series:
-            from etlpy_spark.functions.url import FAST_CANONICAL_RE, canonicalize_url
-
-            fast = raw.str.fullmatch(FAST_CANONICAL_RE, na=False)
-            canon = raw.where(fast, None)
-            if (~fast).any():
-                canon.loc[~fast] = raw.loc[~fast].map(canonicalize_url)
-            return canon
-
-        return _canon
-
     # -- state ------------------------------------------------------------
 
     def initialized(self) -> bool:
@@ -400,15 +389,7 @@ class SparkCrawler:
         raw = spark.createDataFrame(
             seed_pdf, schema="seed_seq long, raw string"
         ).repartition(self.cfg.n_buckets)
-        from etlpy_spark.functions.url import canonicalize_split
-
-        # already-canonical seeds stay JVM-side; only dirty ones enter the
-        # canon UDF (see canonicalize_split — a when() would not prune)
-        df = (
-            canonicalize_split(raw, "raw", "url")
-            .select("seed_seq", "url")
-            .filter(F.col("url").isNotNull())
-        )
+        df = _canonicalized(raw, "seed_seq long, url string")
         # keep-first per url (min seed_seq) via map-side-combinable agg;
         # dispatch order = seed order (reference distributed.py:60-66).
         # host/priority are NOT materialized anywhere: they are pure
@@ -614,11 +595,7 @@ class SparkCrawler:
         )
         for c in caches:
             c.unpersist()
-        if probe_cleanup is not None:
-            # the per-round filter broadcast otherwise accumulates in the
-            # SparkContext and on executors over a long many-round crawl
-            # (sharded delivery has nothing to clean up — cleanup is None)
-            probe_cleanup()
+        probe_cleanup()
         return m
 
     def _schedule(self, rnd: int) -> tuple[DataFrame, DataFrame, int, int]:
@@ -736,6 +713,7 @@ class SparkCrawler:
         def fetch_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from pyspark import TaskContext
 
+            from etlpy_spark.functions.url import canonicalize_rows
             from etlpy_spark.sources.synthetic_web import page, parse_page
 
             part = TaskContext.get().partitionId() if TaskContext.get() else -1
@@ -764,7 +742,13 @@ class SparkCrawler:
                         out["pos"].append(i); out["value"].append(im)
                         out["caption"].append(cap); out["part"].append(part)
                     log["fetch_seq"].append(fs); log["url"].append(u)
-                yield pd.DataFrame(out)
+                # links leave this task canonical (invalid hrefs dropped,
+                # survivors keep their raw pos), so no later stage runs a
+                # Python runner to canonicalize them
+                out = pd.DataFrame(out)
+                is_link = out["kind"] == "link"
+                yield canonicalize_rows(out[is_link], "value", "value")
+                yield out[~is_link]
             if log["fetch_seq"]:
                 n = len(log["fetch_seq"])
                 # url-sorted by the layout (urls are unique per round), so
@@ -784,25 +768,15 @@ class SparkCrawler:
     def _new_links(
         self, extracted: DataFrame, rnd: int, seq_base: int, small: bool,
         caches: list,
-    ) -> tuple[DataFrame, Callable[[], None] | None]:
-        """Link phase: canonicalize, keep-first dedup, seen-filter probe +
-        anti-join of the filter-positive residue, discovered_seq rank.
-        Lazy apart from the large rank path's offset collect. Returns the
-        new-frontier rows (counted by the seen write) and the probe's
-        cleanup (or None)."""
+    ) -> tuple[DataFrame, Callable[[], None]]:
+        """Link phase: keep-first dedup of the (fetch-canonicalized) links,
+        seen-filter probe + anti-join of the filter-positive residue,
+        discovered_seq rank. Lazy apart from the large rank path's offset
+        collect. Returns the new-frontier rows (counted by the seen write)
+        and the probe's cleanup, called after the round commits."""
         cfg = self.cfg
-        # Extracted links are well-formed, so the JVM rlike fast path keeps
-        # ~the whole multi-GB link stream out of the Python UDF entirely —
-        # no Arrow round-trip for rows that are already canonical.
-        from etlpy_spark.functions.url import canonicalize_split
-
-        raw_links = extracted.filter(F.col("kind") == "link").select(
-            "fetch_seq", "pos", "part", "value"
-        )
-        links = (
-            canonicalize_split(raw_links, "value", "url")
-            .select("fetch_seq", "pos", "part", "url")
-            .filter(F.col("url").isNotNull())
+        links = extracted.filter(F.col("kind") == "link").select(
+            "fetch_seq", "pos", "part", F.col("value").alias("url")
         )
         # keep-first by (fetch_seq, pos): min over a struct ordered by those
         # fields — a map-side-combinable aggregation, NOT a window sort
@@ -880,8 +854,7 @@ class SparkCrawler:
             "images", meta={"round": rnd},
             make_rows=lambda sub: _image_rows(sub, web, rnd), chunk=CHUNK,
         )
-        if cleanup is not None:
-            cleanup()
+        cleanup()
         return n_imgs
 
     def _commit_round(
@@ -958,12 +931,7 @@ class SparkCrawler:
                 pd.DataFrame({"raw": pd.array(urls, dtype="string")}),
                 schema="raw string",
             )
-        canon = self._canon_udf()
-        return (
-            raw.select(canon(F.col("raw")).alias("url"))
-            .filter(F.col("url").isNotNull())
-            .distinct()
-        )
+        return _canonicalized(raw, "url string").distinct()
 
     def recrawl(self, urls) -> int:
         """Stale-page refresh: re-enqueue URLs into the frontier so the next

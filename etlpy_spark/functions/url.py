@@ -19,9 +19,13 @@ Normalizations (RFC 3986 §6.2.2-6.2.3):
   - trailing ``?`` with empty query dropped; query keys kept in original
     order (order can be semantic)
 
-Plan-side, ``canonicalize_url_expr`` is a pandas UDF (Arrow-batched, zero
-per-row JVM↔Python chatter beyond the batch); ``url_host`` is a pure Column
-expression so host bucketing stays JVM-side.
+Batch-side, ``canonicalize_rows`` is the crawl's one canonicalization step:
+it canonicalizes a pandas frame's url column and drops the rows that do not
+canonicalize, inside a Python task that already holds the urls (the fetch
+task for extracted links, one ``mapInPandas`` for seeds and recrawl/forget
+lists), so no stage pays a Python runner just to canonicalize.
+Plan-side, ``canonicalize_url_expr`` is a pandas UDF over a Column;
+``url_host`` is a pure Column expression so host bucketing stays JVM-side.
 """
 
 from __future__ import annotations
@@ -101,9 +105,22 @@ def canonicalize_url_expr(col: Column | str) -> Column:
 # host, no port/userinfo, a present path made of dot-free unreserved
 # segments, no %-escapes, no query/fragment. Every string FULL-matching
 # this is a fixed point of canonicalize_url (tests/test_url_canon.py
-# fuzzes the equivalence) — the crawl's canon UDF uses it as a vectorized
+# fuzzes the equivalence) — canonicalize_rows uses it as a vectorized
 # fast path so only irregular URLs pay the per-row slow path.
 FAST_CANONICAL_RE = r"http://[a-z0-9-]+(?:\.[a-z0-9-]+)+/(?:[A-Za-z0-9_~-]+/)*[A-Za-z0-9_~-]*"
+
+
+def canonicalize_rows(pdf: pd.DataFrame, raw: str, out: str) -> pd.DataFrame:
+    """``pdf`` with its ``raw`` url column replaced by the canonical ``out``
+    column, dropping the rows whose url does not canonicalize. Urls that
+    full-match FAST_CANONICAL_RE (nearly every extracted link) are kept
+    as they are in one vectorized pass; only the rest pay
+    ``canonicalize_url``. The other columns and the row order are kept."""
+    s = pdf[raw].astype(object)  # an empty frame's columns are float64
+    fast = s.str.fullmatch(FAST_CANONICAL_RE, na=False)
+    canon = s.where(fast, s[~fast].map(canonicalize_url))
+    return pdf.drop(columns=raw).assign(**{out: canon})[canon.notna()]
+
 
 _HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/@?#]*@)?([^/:?#]+)"
 
@@ -118,30 +135,6 @@ def url_hash(col: Column | str) -> Column:
     """64-bit identity of a canonical URL (Spark builtin xxhash64, JVM-side)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.xxhash64(c)
-
-
-def canonicalize_split(df, raw: str, out: str):
-    """Canonicalize ``raw`` into ``out`` with the fast path JVM-SIDE: rows
-    already full-matching FAST_CANONICAL_RE (a fixed point of
-    canonicalize_url — the overwhelming majority in a steady crawl, since
-    extracted links are well-formed) pass through as pure Column
-    expressions and NEVER enter the Python UDF. Only irregular rows pay
-    the Arrow round-trip + per-row canonicalization.
-
-    Why a split + union instead of when(fast, col).otherwise(udf(col)):
-    ArrowEvalPython evaluates a Python UDF for EVERY input row before the
-    projection branches — a conditional does not prune UDF evaluation, so
-    the whole column would still ship Python→JVM and back. The split keeps
-    the multi-GB link stream entirely JVM-side (at 8 saturated cores the
-    Arrow round-trip is memory-bus traffic, the non-scaling resource)."""
-    from pyspark.sql import functions as F
-
-    pat = f"^(?:{FAST_CANONICAL_RE})$"
-    fast = df.filter(F.col(raw).rlike(pat)).withColumn(out, F.col(raw))
-    slow = df.filter(~F.coalesce(F.col(raw).rlike(pat), F.lit(False))).withColumn(
-        out, canonicalize_url_expr(F.col(raw))
-    )
-    return fast.unionByName(slow)
 
 
 # ---------------------------------------------------------------------------

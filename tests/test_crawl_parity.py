@@ -195,14 +195,164 @@ def test_probe_filters_modes_agree(spark, monkeypatch):
             results[mode] = {
                 r["url"]: (r["__shard__"], r["__maybe__"]) for r in probed.collect()
             }
-            if cleanup is not None:
-                cleanup()
+            cleanup()
         assert results["broadcast"] == results["sharded"]
         # sanity: every indexed url is maybe-seen, absent shards all-new
         assert all(results["sharded"][u][1] for u in indexed)
         assert not any(
             results["sharded"][u][1] for u in urls if shard[u] in (1, 3)
         )
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
+
+
+# -- executed-plan shape: where the crawl's Python runs ----------------------
+
+_PYTHON_NODES = {"ArrowEvalPythonExec", "MapInPandasExec", "FlatMapCoGroupsInPandasExec"}
+# a node below one of these runs in another task than the node above it
+_STAGE_EDGES = {
+    "ShuffleExchangeExec", "BroadcastExchangeExec", "ShuffleQueryStageExec",
+    "BroadcastQueryStageExec", "ReusedExchangeExec",
+}
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _plan_children(node) -> list:
+    """A physical plan node's children, looking through adaptive plans,
+    query stages and cached relations (to the plan that fills the cache)."""
+    kind = _kind(node)
+    if kind == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if kind.endswith("QueryStageExec"):
+        return [node.plan()]
+    if kind == "InMemoryTableScanExec":
+        return [node.relation().cachedPlan()]
+    seq = node.children()
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _plan_nodes(spark, plan) -> list:
+    """Every node of a physical plan, the plan behind each cache once
+    (however many scans read that cache)."""
+    identity = spark._jvm.java.lang.System.identityHashCode
+    caches, out, todo = set(), [], [plan]
+    while todo:
+        node = todo.pop()
+        if _kind(node) == "InMemoryTableScanExec":
+            key = identity(node.relation().cacheBuilder())
+            if key in caches:
+                continue
+            caches.add(key)
+        out.append(node)
+        todo.extend(_plan_children(node))
+    return out
+
+
+def _same_task_nodes(node) -> list:
+    """The nodes below ``node`` that run in the same task as it."""
+    out, todo = [], _plan_children(node)
+    while todo:
+        child = todo.pop()
+        if _kind(child) not in _STAGE_EDGES:
+            out.append(child)
+            todo.extend(_plan_children(child))
+    return out
+
+
+def _scans_table(node, table_dir: str) -> bool:
+    if _kind(node) != "FileSourceScanExec":
+        return False
+    roots = node.relation().location().rootPaths()
+    prefix = os.path.join(table_dir, "")
+    return any(prefix in roots.apply(i).toString() for i in range(roots.size()))
+
+
+def _python_nodes(spark, plan) -> list:
+    return [n for n in _plan_nodes(spark, plan) if _kind(n) in _PYTHON_NODES]
+
+
+def _record_write_plans(monkeypatch) -> dict:
+    """Patch ``SparkCrawler._write_and_fold`` to keep the executed plan of
+    each write-and-fold job, by its stage tag."""
+    plans = {}
+    write_and_fold = SparkCrawler._write_and_fold
+
+    def recording(self, state, table, rows, key_col, n_parts, tag, **kw):
+        cls = type(rows)
+        collect = cls.collect
+
+        def collect_and_record(df):
+            out = collect(df)
+            plans[tag] = df._jdf.queryExecution().executedPlan()
+            return out
+
+        with monkeypatch.context() as m:
+            m.setattr(cls, "collect", collect_and_record)
+            return write_and_fold(self, state, table, rows, key_col, n_parts, tag, **kw)
+
+    monkeypatch.setattr(SparkCrawler, "_write_and_fold", recording)
+    return plans
+
+
+@pytest.mark.parametrize("delivery", ["broadcast", "sharded"])
+def test_probe_runs_once_and_never_over_exact_tables(spark, monkeypatch, delivery):
+    """``FilterState.new_rows`` probes each deduplicated key once: in the
+    executed seen and image writes of a steady WEB round, in either
+    delivery mode, exactly one node evaluates the filter probe, and no
+    Python node runs in the same task as a scan of the exact ``seen`` or
+    ``images`` table (a probe copied onto those scans runs over every key
+    the table holds)."""
+    if delivery == "sharded":
+        monkeypatch.setattr(filterstate, "FILTER_BROADCAST_MAX_BYTES", -1)
+    probe_fn = {"broadcast": "maybe(", "sharded": "probe_pair("}[delivery]
+    wd = tempfile.mkdtemp(prefix=f"probe_plan_{delivery}_")
+    try:
+        cr = SparkCrawler(spark, wd, CrawlConfig(web=WEB))
+        cr.init_from_seeds(seed_urls(WEB, n_per_host=2))
+        cr.run_round()
+        assert cr.images.current_version() is not None
+        plans = _record_write_plans(monkeypatch)
+        m = cr.run_round()
+        assert m["new_urls"] > 0 and m["new_images"] > 0
+        exact = [os.path.join(wd, "seen"), os.path.join(wd, "images")]
+        for tag in ("seen", "images"):
+            py = _python_nodes(spark, plans[tag])
+            probes = [n for n in py if probe_fn in n.simpleString(25)]
+            assert len(probes) == 1, (tag, [n.simpleString(25) for n in py])
+            for node in py:
+                below = _same_task_nodes(node)
+                assert not any(_scans_table(b, d) for b in below for d in exact), (
+                    tag, node.simpleString(25)
+                )
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
+
+
+def test_canonicalization_is_one_python_node(spark, monkeypatch):
+    """Seeds and recrawl/forget url lists are canonicalized by one Python
+    node (a ``mapInPandas`` that also drops invalid urls), not a UDF that
+    Catalyst evaluates once for the null filter and again for the value."""
+    wd = tempfile.mkdtemp(prefix="canon_plan_")
+    try:
+        cr = SparkCrawler(spark, wd, CrawlConfig(web=WEB))
+        urls = cr._urls_df(["HTTP://Host1.example:80/cat0/p1", "not a url"])
+        assert [r.url for r in urls.collect()] == ["http://host1.example/cat0/p1"]
+        assert len(_python_nodes(spark, urls._jdf.queryExecution().executedPlan())) == 1
+
+        seed_plans = []
+        commit_seen = SparkCrawler._commit_seen
+
+        def recording(self, rows):
+            seed_plans.append(rows._jdf.queryExecution().executedPlan())
+            return commit_seen(self, rows)
+
+        monkeypatch.setattr(SparkCrawler, "_commit_seen", recording)
+        cr.init_from_seeds(seed_urls(WEB, n_per_host=2))
+        assert len(seed_plans) == 1
+        assert len(_python_nodes(spark, seed_plans[0])) == 1
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 
@@ -349,7 +499,7 @@ def test_rollback_time_travel(spark):
 def test_steady_round_job_count(spark):
     """Per-round fixed cost is Spark jobs: a steady WEB round (seen table
     and filter state already committed, frontier compaction included)
-    runs at most 29 of them. Each new url is written by one job (the seen
+    runs at most 27 of them. Each new url is written by one job (the seen
     write-and-fold, whose data dir the frontier appends), and every
     layout-table read takes its declared schema, so no read runs a
     schema-inference job."""
@@ -368,7 +518,7 @@ def test_steady_round_job_count(spark):
             sc.setLocalProperty("spark.job.description", None)
         assert m["round"] == 1 and m["fetched"] > 0 and m["new_urls"] > 0
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert 0 < n_jobs <= 29, n_jobs
+        assert 0 < n_jobs <= 27, n_jobs
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 

@@ -161,13 +161,16 @@ def test_prase_url_and_para2dict_packaged(spark):
     assert m == {"Accept": "text/html", "Host": "example.com"}
 
 
-def test_canonicalize_split_matches_pure(spark):
-    """The JVM-rlike fast path (canonicalize_split) must agree with the
-    pure-Python canonicalizer row-for-row — including urls straddling the
-    fast-canonical boundary (uppercase, ports, dot-segments, %-escapes,
-    unicode, trailing slash) — so Java-regex vs pandas-fullmatch dialect
-    drift would fail here."""
-    from etlpy_spark.functions.url import canonicalize_split, canonicalize_url
+def test_canonicalize_rows_matches_pure(spark):
+    """The batch canonicalizer (canonicalize_rows, the fast-shape match
+    plus the per-row slow path, run in a mapInPandas as the crawl runs it)
+    must agree with the pure-Python canonicalizer row-for-row — including
+    urls straddling the fast-canonical boundary (uppercase, ports,
+    dot-segments, %-escapes, unicode, trailing slash) — and drop exactly
+    the urls that do not canonicalize."""
+    import pandas as pd
+
+    from etlpy_spark.functions.url import canonicalize_rows, canonicalize_url
 
     urls = [
         "http://host1.example/cat1/p3",               # fast fixed point
@@ -185,9 +188,16 @@ def test_canonicalize_split_matches_pure(spark):
         "",
     ]
     df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)], "i long, raw string")
-    got = {
-        r.i: r.url
-        for r in canonicalize_split(df, "raw", "url").select("i", "url").collect()
-    }
+    canon = df.mapInPandas(
+        lambda batches: (canonicalize_rows(pdf, "raw", "url") for pdf in batches),
+        schema="i long, url string",
+    )
+    rows = canon.collect()
+    got = {r.i: r.url for r in rows}
+    assert None not in got.values() and len(got) == len(rows)
     for i, u in enumerate(urls):
         assert got.get(i) == canonicalize_url(u), (u, got.get(i))
+    # a frame built from empty lists (a fetch batch without links) has
+    # float64 columns
+    empty = canonicalize_rows(pd.DataFrame({"i": [], "raw": []}), "raw", "url")
+    assert list(empty.columns) == ["i", "url"] and empty.empty

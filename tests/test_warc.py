@@ -4,6 +4,7 @@ archive-replay pipeline over the synthetic web."""
 
 import gzip
 import os
+import re
 import shutil
 import tempfile
 
@@ -191,6 +192,59 @@ def test_archive_replay_crawl_parity(spark, tmp_path):
         assert (a.w, a.h, a.fmt, a.phash, a.caption, a.decode_error) == (
             b.w, b.h, b.fmt, b.phash, b.caption, b.decode_error
         ), iid
+
+
+def test_archive_replay_canonicalizes_dirty_hrefs(spark, tmp_path):
+    """Archived pages whose hrefs are non-canonical spellings of the
+    synthetic links, with invalid hrefs between them: the fetch task
+    canonicalizes every link (``canonicalize_url``'s slow path) and drops
+    the invalid ones, so the crawl order and seen set equal the serial
+    oracle's over the clean web."""
+    from xml.sax.saxutils import quoteattr
+
+    from etlpy_spark.crawl.frontier import CrawlConfig, SparkCrawler
+    from etlpy_spark.crawl.oracle import crawl_oracle
+    from etlpy_spark.functions.url import FAST_CANONICAL_RE, canonicalize_url
+    from etlpy_spark.sources.synthetic_web import WebConfig, make_url, page, seed_urls
+
+    dirty = [
+        lambda u: u.replace("http://", "HTTP://").replace("host", "HoSt"),
+        lambda u: u.replace(".example/", ".example:80/"),
+        lambda u: u.replace("/cat", "/x/../cat"),
+        lambda u: u.replace("/p", "/%70") + "?",
+        lambda u: u + "#frag",
+    ]
+    invalid = ["", "not a url", "mailto:a@host0.example", "/cat0/p1", "http://", "http://[::1"]
+    assert all(canonicalize_url(h) is None for h in invalid)
+    web = WebConfig(n_hosts=3, n_cats=2, pages_per_cat=6, politeness_budget=2)
+    recs = []
+    for k in range(web.n_hosts):
+        for c in range(web.n_cats):
+            for n in range(1, web.pages_per_cat + 1):
+                u = make_url(k, c, n)
+                hrefs = []
+                for i, link in enumerate(page(u, web)["links"]):
+                    hrefs += [dirty[(n + i) % len(dirty)](link), invalid[(n + i) % len(invalid)]]
+                    assert re.fullmatch(FAST_CANONICAL_RE, hrefs[-2]) is None
+                    assert canonicalize_url(hrefs[-2]) == link
+                body = "".join(f"<a href={quoteattr(h)}>l</a>" for h in hrefs)
+                recs.append({
+                    "warc_type": "response", "url": u, "http_status": 200,
+                    "http_content_type": "text/html", "date": "2026-01-01T00:00:00Z",
+                    "payload": f"<html><body>{body}</body></html>".encode(),
+                })
+    write_warc(str(tmp_path / "dirty.warc.gz"), recs)
+
+    seeds = seed_urls(web, n_per_host=2)
+    oracle = crawl_oracle(seeds, web, max_rounds=3)
+    cr = SparkCrawler(
+        spark, str(tmp_path / "crawl"),
+        CrawlConfig(web=web, archive_path=str(tmp_path / "dirty.warc.gz")),
+    )
+    cr.run(seeds, max_rounds=3)
+    assert cr.crawl_log_list() == oracle.crawl_log
+    assert cr.seen_urls_list() == set(oracle.seen)
+    assert len(oracle.seen) > len(set(map(canonicalize_url, seeds)))  # links found
 
 
 def test_warc_to_documents_feeds_corpus_pipeline(spark, tmp_path):
