@@ -10,6 +10,11 @@ persisted table the filter authority instead:
   (``BITS_LAYOUT``), one tiny parquet file per (shard, sub) pair with a
   DETERMINISTIC name, committed as a new snapshot version per crawl round
   (mode=overwrite).
+- The state only GROWS: only the write-and-fold commits that add keys
+  to its exact table change it, so it is a pure function of that table's
+  commit history. ``forget`` tombstones the table and leaves the filter
+  alone; extra keys only add false positives (``new_rows`` anti-joins the
+  positives), so a state ahead of its table needs no rollback.
 - Fold-forward is DISTRIBUTED: the same executor task that writes a
   round's seen/image part files reads ITS pairs' previous-version files
   (pyarrow, a few KB-MB each), adds the round's new keys, and writes the
@@ -144,7 +149,6 @@ class FilterState:
         self.n_shards = n_shards
         self.n_sub = max(1, n_sub)
         self.sub_seed = sub_seed
-        self._stale = False
 
     # -- geometry / expressions
 
@@ -167,26 +171,19 @@ class FilterState:
     # -- state inspection (meta only)
 
     def exists(self) -> bool:
-        return (not self._stale) and self.table.current_version() is not None
+        return self.table.current_version() is not None
 
     def latest_dir(self) -> str | None:
         v = self.table.current_version()
-        if v is None or self._stale:
+        if v is None:
             return None
         return self.table.snapshot(v).data_dirs[-1]
 
     def total_bytes(self) -> int:
         v = self.table.current_version()
-        if v is None or self._stale:
+        if v is None:
             return 0
         return int(self.table.snapshot(v).meta.get("total_bytes", 0))
-
-    def invalidate(self) -> None:
-        """Mark state stale (e.g. after ``forget`` retracts seen rows):
-        the next ensure() rebuilds from the exact table. A stale filter
-        is never WRONG (extra keys = false positives only), so a process
-        restart that loses this flag degrades FP rate, not correctness."""
-        self._stale = True
 
     # -- commit protocol
 
@@ -225,7 +222,6 @@ class FilterState:
             version, new_dir, mode="overwrite",
             meta={**(meta or {}), "total_bytes": total, "n_pairs": len(files)},
         )
-        self._stale = False
 
     # -- probe-side access
 
@@ -261,9 +257,8 @@ class FilterState:
 
     def rebuild_from(self, keys_df: DataFrame, key_col: str) -> None:
         """One distributed pass over the exact table → a fresh state
-        version (resume over a pre-filter-table workdir, or a ``forget``
-        invalidation). Tasks write their own pair files; the driver sees
-        only a count row per partition."""
+        version (see :meth:`ensure`). Tasks write their own pair files;
+        the driver sees only a count row per partition."""
         v, new_dir = self.begin()
         spec = self.spec
         nb = self.n_shards * self.n_sub
@@ -284,13 +279,13 @@ class FilterState:
         self.finish(v, new_dir, prev_dir=None)
 
     def ensure(self, table: SnapshotTable, key_col: str) -> "FilterState":
-        """Guarantee the state matches ``table``, the exact key table it
-        filters. The common case (state committed last round) is a META
-        check — zero Spark jobs, zero bytes. A pre-filter-table workdir
-        (resume across layouts) or a ``forget`` invalidation pays ONE
-        distributed :meth:`rebuild_from` pass; a table with no snapshot
-        has nothing to rebuild (its first commit's fold creates the
-        state)."""
+        """Guarantee a state exists for ``table``, the exact key table it
+        filters: a META check — zero Spark jobs, zero bytes — whenever the
+        state has a snapshot. Its one remaining job is recovery: a state
+        table that is missing while ``table`` has a snapshot (deleted, or
+        a workdir from before filter tables) pays ONE distributed
+        :meth:`rebuild_from` pass. A table with no snapshot has nothing to
+        rebuild (its first commit's fold creates the state)."""
         if not self.exists() and table.current_version() is not None:
             self.rebuild_from(table.read(), key_col)
         return self

@@ -123,11 +123,10 @@ class CrawlConfig:
     n_shards: int = 8  # seen-set shards
     n_buckets: int = 8  # politeness fetch buckets
     bloom_capacity: int = 1 << 16  # per (shard, sub) filter unit, sandbox-sized
-    # seen-set fast-path structure: "bloom" (OR-mergeable bitsets) or
-    # "cuckoo" (cuckoo filter — supports delete_many for recrawl
-    # scheduling, ~30-40% less space at <=1% fpp under load; merged by
-    # fingerprint re-insertion). Both have NO false negatives; the exact
-    # seen table remains the authority either way (north_star: "sharded
+    # seen-set fast-path structure: "bloom" (bitsets) or "cuckoo"
+    # (fingerprint buckets, ~30-40% less space at <=1% fpp under load).
+    # Both only grow and have NO false negatives; the exact seen table
+    # remains the authority either way (north_star: "sharded
     # Bloom/cuckoo-filter URL-seen set").
     seen_filter: str = "bloom"
     # starvation protection: each deferred round improves a URL's
@@ -988,17 +987,17 @@ class SparkCrawler:
         the same merge-on-read primitive the frontier commits use) instead
         of the r2 full anti-join rewrite — at a 10^10-row seen set a
         rewrite per takedown request is not a thing. Accumulated tombstones
-        auto-compact past the threshold. The filter state is invalidated
-        and lazily rebuilt from the updated table by the next round's
-        ``FilterState.ensure`` (one distributed pass).
+        auto-compact past the threshold.
 
-        The rebuild — not ``CuckooFilter.delete_many`` — is the correct path
-        for the SHARED filters: ``add_many``/``merge`` collapse colliding
-        (bucket, fingerprint) pairs to a single copy, so deleting URL X
-        could also un-represent a colliding URL Y, a false negative the
-        contract forbids. ``delete_many`` stays sound for privately built
-        filters that never dedupe. Returns how many seen rows were
-        retracted."""
+        The filter state is left alone: a forgotten URL stays
+        filter-positive, so when a link rediscovers it, the residue
+        anti-join of ``FilterState.new_rows`` against the tombstoned table
+        finds it new. Filters promise no false negatives, not no false
+        positives, so the result is exact and no rebuild is needed.
+        Returns how many seen rows were retracted (0 before the seen
+        table's first commit)."""
+        if self.seen.current_version() is None:
+            return 0
         tgt = self._urls_df(urls)
         seen = self.seen.read()
         # cache the semi-join RESULT, not the target list: the join scans
@@ -1011,7 +1010,6 @@ class SparkCrawler:
             # tombstone exactly the urls that ARE in the table (tombstone
             # stats drive compaction; phantom keys would skew them)
             self.seen.append_with_deletes(None, hits, key="url")
-            self.seen_bits.invalidate()  # rebuilt distributed, on demand
         hits.unpersist()
         return int(removed)
 

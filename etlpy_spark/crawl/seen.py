@@ -104,9 +104,8 @@ class CuckooFilter:
     """Cuckoo filter (Fan et al., CoNEXT'14): the seen-set fast path the
     north_star names alongside Bloom ("sharded Bloom/cuckoo-filter URL-seen
     set"). Same contract as :class:`BloomFilter` — NO false negatives, so
-    the exact seen table stays the authority — plus what Bloom cannot do:
-    ``delete_many`` (retract URLs, e.g. recrawl scheduling) and ~30-40% less
-    space at fpp ≤ 1% under high load.
+    the exact seen table stays the authority — in ~30-40% less space at
+    fpp ≤ 1% under high load.
 
     Layout: ``n_buckets`` (power of two) × 4 slots of uint16 fingerprints
     (0 = empty). fp(x) ∈ [1, 2^fp_bits-1]; bucket i1 = h1 & (n_buckets-1);
@@ -117,10 +116,6 @@ class CuckooFilter:
     per round — are fully numpy-vectorized; inserts run once per *new* URL
     inside the per-shard executor build, where a short Python kick loop is
     acceptable (vectorized empty-slot fast path handles the bulk).
-
-    Merging re-inserts the other filter's occupied fingerprints at their
-    recorded buckets — correct because the partner bucket is derivable
-    from (bucket, fp) by the XOR involution.
     """
 
     SLOTS = 4
@@ -227,49 +222,7 @@ class CuckooFilter:
     def might_contain(self, key: str) -> bool:
         return bool(self.might_contain_many([key])[0])
 
-    def delete_many(self, keys) -> int:
-        """Remove one stored fingerprint per key (standard cuckoo contract:
-        only delete keys that were inserted). Returns how many were found.
-        This is the operation Blooms cannot support at all."""
-        if len(keys) == 0:
-            return 0
-        fps, i1 = self._fp_i1(keys)
-        i2 = self._alt(i1, fps)
-        removed = 0
-        for a, b, fp in zip(i1.tolist(), i2.tolist(), fps.tolist()):
-            hit = False
-            for cand in (a, b):
-                row = self.table[cand]
-                j = np.nonzero(row == fp)[0]
-                if len(j):
-                    row[j[0]] = 0
-                    hit = True
-                    break
-            if not hit and fp in self.stash:
-                self.stash.remove(fp)
-                hit = True
-            removed += hit
-        return removed
-
-    # -- merge / serialization ------------------------------------------------
-
-    def merge(self, other: "CuckooFilter") -> None:
-        assert (self.n_buckets, self.fp_bits) == (other.n_buckets, other.fp_bits)
-        occ = np.nonzero(other.table)  # (bucket_idx, slot)
-        fps = other.table[occ]
-        buckets = occ[0].astype(np.int64)
-        alts = self._alt(buckets, fps)
-        present = (self.table[buckets] == fps[:, None]).any(axis=1) | (
-            self.table[alts] == fps[:, None]
-        ).any(axis=1)
-        for i, fp in zip(buckets[~present].tolist(), fps[~present].tolist()):
-            self._insert(i, fp)
-        for fp in other.stash:
-            if not self.might_contain_fp(fp):
-                self.stash.append(fp)
-
-    def might_contain_fp(self, fp: int) -> bool:
-        return fp in self.stash or bool((self.table == np.uint16(fp)).any())
+    # -- serialization --------------------------------------------------------
 
     def to_bytes(self) -> bytes:
         st = np.asarray(self.stash, dtype=np.uint16)

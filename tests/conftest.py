@@ -17,6 +17,23 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def rebuilds(monkeypatch):
+    """The state-table path of every ``FilterState.rebuild_from`` call the
+    test makes, in call order."""
+    from etlpy_spark.crawl.filterstate import FilterState
+
+    calls = []
+    rebuild_from = FilterState.rebuild_from
+
+    def counting_rebuild(self, keys_df, key_col):
+        calls.append(self.table.path)
+        return rebuild_from(self, keys_df, key_col)
+
+    monkeypatch.setattr(FilterState, "rebuild_from", counting_rebuild)
+    return calls
+
+
 @pytest.fixture(scope="session")
 def reference():
     """Import the reference engine (read-only oracle for differential tests).

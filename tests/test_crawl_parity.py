@@ -82,18 +82,27 @@ def test_metrics_parity(crawler, oracle):
     assert got == oracle.metrics
 
 
-def test_resume_from_checkpoint(spark, oracle):
+@pytest.mark.parametrize("drop_filter_state", [False, True])
+def test_resume_from_checkpoint(spark, oracle, rebuilds, drop_filter_state):
     """Kill after round 2, resume with a fresh crawler instance (fresh
-    process semantics: snapshot state only), final state identical."""
+    process semantics: snapshot state only), final state identical. With
+    the filter-state tables deleted before the resume, ``ensure`` rebuilds
+    each once from its exact table and parity still holds; with them
+    kept, nothing is rebuilt."""
     wd = tempfile.mkdtemp(prefix="crawl_resume_")
     try:
         cr1 = SparkCrawler(spark, wd, CrawlConfig(web=WEB))
         cr1.run(seed_urls(WEB, n_per_host=2), max_rounds=2)
         assert int(cr1.state()["round"]) == 2
         del cr1  # "crash"
+        states = [os.path.join(wd, d) for d in ("image_bits", "seen_bits")]
+        if drop_filter_state:
+            for d in states:
+                shutil.rmtree(d)
         cr2 = SparkCrawler(spark, wd, CrawlConfig(web=WEB))
         assert cr2.initialized()
         cr2.run(None, max_rounds=ROUNDS)
+        assert sorted(rebuilds) == (states if drop_filter_state else [])
         assert cr2.crawl_log_list() == oracle.crawl_log
         assert cr2.seen_urls_list() == set(oracle.seen)
         imgs = {r.image_id for r in cr2.images.read().collect()}

@@ -1,7 +1,8 @@
 """Refresh/retraction APIs: ``recrawl`` re-enqueues URLs for refetch
 without touching the seen set (it gates discovery, not fetching);
-``forget`` retracts seen rows so URLs become discoverable again and
-forces a distributed rebuild of the shard filters. Composing the two
+``forget`` retracts seen rows so URLs become discoverable again, and
+leaves the shard filters as they are (a forgotten URL stays
+filter-positive and the exact anti-join settles it). Composing the two
 (purge-and-recrawl) must refetch both the parent page and its forgotten
 link while every frontier invariant holds."""
 
@@ -56,7 +57,7 @@ def test_recrawl_refetches_without_seen_change(spark, drained):
     assert cr.seen_urls_list() == seen_before
 
 
-def test_forget_then_recrawl_rediscovers(spark, drained):
+def test_forget_then_recrawl_rediscovers(spark, drained, rebuilds):
     cr = drained
     # parent page with at least one outgoing link that isn't itself
     before = _fetch_counts(cr)
@@ -69,9 +70,11 @@ def test_forget_then_recrawl_rediscovers(spark, drained):
             parent, link = u, ls[0]
             break
     assert parent is not None, "fixture web must contain a linking page"
+    bits_version = cr.seen_bits.table.current_version()
     assert cr.forget([link]) == 1
     assert link not in cr.seen_urls_list()
-    assert cr.seen_bits._stale  # filter state invalidated → distributed rebuild
+    # the filter state only grows: forget commits no version of it
+    assert cr.seen_bits.table.current_version() == bits_version
     # retraction is O(changed): an equality-delete tombstone commit
     # (merge-on-read), never a full-table rewrite
     snap = cr.seen.snapshot(cr.seen.current_version())
@@ -81,8 +84,11 @@ def test_forget_then_recrawl_rediscovers(spark, drained):
 
     assert cr.recrawl([parent]) == 1
     rnd = int(cr.state()["round"])
-    # round 1: refetch parent, rediscover link as new; round 2: fetch link
-    cr.run(None, max_rounds=rnd + 2)
+    # round 1, in this process: refetch parent, rediscover link as new;
+    # round 2, in a crawler reopened on the workdir: fetch link
+    cr.run(None, max_rounds=rnd + 1)
+    SparkCrawler(spark, cr.workdir, CrawlConfig(web=WEB)).run(None, max_rounds=rnd + 2)
+    assert rebuilds == [], "no round after forget rebuilds a filter state"
 
     after = _fetch_counts(cr)
     assert after[parent] == before[parent] + 1
@@ -97,13 +103,15 @@ def test_forget_unknown_is_noop(spark, drained):
 
 
 def test_seedless_crawl_runs_recrawled_urls(spark, tmp_path):
-    """A crawl opened with no seeds has no seen snapshot yet: its first
-    round after ``recrawl`` takes every extracted link as new instead of
-    anti-joining against the absent seen table, and later rounds run."""
+    """A crawl opened with no seeds has no seen snapshot yet: ``forget``
+    retracts nothing, its first round after ``recrawl`` takes every
+    extracted link as new instead of anti-joining against the absent seen
+    table, and later rounds run."""
     cr = SparkCrawler(spark, str(tmp_path), CrawlConfig(web=WEB))
     cr.init_from_seeds([])
     assert cr.seen.current_version() is None
     urls = [make_url(1, 0, n) for n in range(1, 7)]  # host1: robots-allowed
+    assert cr.forget(urls[:1]) == 0
     assert cr.recrawl(urls) == len(urls)
 
     m = cr.run_round()
