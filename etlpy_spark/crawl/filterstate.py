@@ -37,12 +37,16 @@ filter bytes; the transient broadcast-mode read is gated by
 ``FILTER_BROADCAST_MAX_BYTES`` and at the design point the auto mode is
 sharded, where the driver handles zero filter bytes.
 
-Key routing: a key belongs to pair ``(pmod(xxhash64(key), n_shards),
-pmod(xxhash64(key, sub_seed), n_sub))``. The sub hash MUST use the same
-seed on the write and probe sides — unlike r4's replicated-full-shard
-delivery, each sub-filter only contains its own sub's keys. No false
-negatives (the exact table stays the authority; filters only short-cut
-the definitely-new case), so filter contents never change crawl results.
+Key routing: a key belongs to pair ``p = pmod(hash(key), n_shards *
+n_sub)``, i.e. shard ``p % n_shards`` and sub ``p // n_shards``. ``hash``
+is the murmur3 hash Spark's hash partitioner uses, so the write and
+rebuild jobs' ``repartition(n_shards * n_sub, key)`` puts exactly pair
+``p`` in task ``p``: one pair per task, however the pairs' hashes fall.
+Write and probe sides MUST route alike — each sub-filter only contains
+its own sub's keys — so the state's meta records the routing and
+``ensure`` rebuilds a state written under another. No false negatives
+(the exact table stays the authority; filters only short-cut the
+definitely-new case), so filter contents never change crawl results.
 """
 
 from __future__ import annotations
@@ -138,27 +142,29 @@ class PairFolder:
 
 class FilterState:
     """Handle on one filter-state table (seen URLs or image ids). Holds
-    geometry only — spec tuple, shard/sub counts, sub-hash seed; byte
-    totals come from snapshot meta, never from reading filter data."""
+    geometry only — spec tuple, shard/sub counts; byte totals come from
+    snapshot meta, never from reading filter data."""
 
     def __init__(self, spark: SparkSession, path: str, spec: tuple,
-                 n_shards: int, n_sub: int, sub_seed: int):
+                 n_shards: int, n_sub: int):
         self.spark = spark
         self.table = SnapshotTable(spark, path, BITS_LAYOUT)
         self.spec = spec
         self.n_shards = n_shards
         self.n_sub = max(1, n_sub)
-        self.sub_seed = sub_seed
+        # recorded in the state's meta (see the module docstring)
+        self.routing = f"pmod(hash(key), {n_shards}*{self.n_sub})"
 
     # -- geometry / expressions
 
+    def _pair_expr(self, key_col: str):
+        return F.pmod(F.hash(key_col), F.lit(self.n_shards * self.n_sub))
+
     def shard_expr(self, key_col: str):
-        return F.pmod(F.xxhash64(key_col), F.lit(self.n_shards)).cast("int")
+        return (self._pair_expr(key_col) % self.n_shards).cast("int")
 
     def sub_expr(self, key_col: str):
-        return F.pmod(
-            F.xxhash64(key_col, F.lit(self.sub_seed)), F.lit(self.n_sub)
-        ).cast("int")
+        return (self._pair_expr(key_col) / self.n_shards).cast("int")
 
     def routed(self, df: DataFrame, key_col: str) -> DataFrame:
         """``df`` plus its keys' ``__shard__`` / ``__sub__`` columns — the
@@ -166,6 +172,15 @@ class FilterState:
         reads."""
         return df.withColumn("__shard__", self.shard_expr(key_col)).withColumn(
             "__sub__", self.sub_expr(key_col)
+        )
+
+    def by_pair(self, df: DataFrame, key_col: str) -> DataFrame:
+        """``routed(df)`` with partition ``p`` holding exactly pair ``p``'s
+        rows: a task's fold is the COMPLETE new state of its one pair. Not
+        a groupBy, whose shuffle AQE would coalesce by input bytes: key
+        rows are narrow while the per-key work is not."""
+        return self.routed(df, key_col).repartition(
+            self.n_shards * self.n_sub, key_col
         )
 
     # -- state inspection (meta only)
@@ -220,7 +235,8 @@ class FilterState:
         total = sum(os.path.getsize(os.path.join(new_dir, fn)) for fn in files)
         self.table.commit_external(
             version, new_dir, mode="overwrite",
-            meta={**(meta or {}), "total_bytes": total, "n_pairs": len(files)},
+            meta={**(meta or {}), "total_bytes": total, "n_pairs": len(files),
+                  "routing": self.routing},
         )
 
     # -- probe-side access
@@ -261,7 +277,6 @@ class FilterState:
         the driver sees only a count row per partition."""
         v, new_dir = self.begin()
         spec = self.spec
-        nb = self.n_shards * self.n_sub
 
         def build(batches):
             folder = PairFolder(None, new_dir, spec)
@@ -269,24 +284,22 @@ class FilterState:
             folder.flush()
             yield pd.DataFrame({"n": [n]})
 
-        rows = self.routed(keys_df.select(key_col), key_col)
-        # explicit repartition (AQE-exempt): the rows are narrow but the
-        # per-key hashing work is not — a groupBy shuffle would coalesce
-        # by input bytes and serialize the build
-        rows.repartition(nb, "__shard__", "__sub__").mapInPandas(
+        self.by_pair(keys_df.select(key_col), key_col).mapInPandas(
             build, schema="n long"
         ).collect()
         self.finish(v, new_dir, prev_dir=None)
 
     def ensure(self, table: SnapshotTable, key_col: str) -> "FilterState":
-        """Guarantee a state exists for ``table``, the exact key table it
-        filters: a META check — zero Spark jobs, zero bytes — whenever the
-        state has a snapshot. Its one remaining job is recovery: a state
-        table that is missing while ``table`` has a snapshot (deleted, or
-        a workdir from before filter tables) pays ONE distributed
-        :meth:`rebuild_from` pass. A table with no snapshot has nothing to
-        rebuild (its first commit's fold creates the state)."""
-        if not self.exists() and table.current_version() is not None:
+        """Guarantee a state routed like this handle exists for ``table``,
+        the exact key table it filters: a META check — zero Spark jobs,
+        zero bytes — whenever it does. Its one remaining job is recovery:
+        a state that is missing (deleted, or a workdir from before filter
+        tables) or routed another way (older routing or geometry: keys
+        would probe the wrong pair) while ``table`` has a snapshot pays
+        ONE distributed :meth:`rebuild_from` pass. A table with no snapshot
+        has nothing to rebuild (its first commit's fold creates the state)."""
+        if table.current_version() is not None and \
+                self.table.latest_meta().get("routing") != self.routing:
             self.rebuild_from(table.read(), key_col)
         return self
 
@@ -352,9 +365,8 @@ class FilterState:
           point where the full filter set is tens of GB. The cleanup does
           nothing.
 
-        The sub hash uses the state's seed (the same one its write jobs
-        partition by): each pair's sub-filter contains only its own sub's
-        keys, so routing must agree bit-for-bit."""
+        Keys route as the state's write jobs route them: each pair's
+        sub-filter contains only its own sub's keys."""
         spec = self.spec
         keyed = self.routed(df, key_col)
 

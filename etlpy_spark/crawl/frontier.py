@@ -44,7 +44,7 @@ locals (web config, round, dirs, filter spec), never ``self``, which holds
 the SparkSession.
 
 Scale notes (the 1000-executor story):
-  - every join against `seen` is key-sharded (pmod(xxhash64(url), S));
+  - the seen filter is key-sharded (pair = pmod(hash(url), S*U));
     the Bloom-negative short-circuit keeps the anti-join's link side ~the
     true-new fraction. The probe runs once per deduplicated key and never
     over the seen table (new_rows reads both branches from one cache);
@@ -79,7 +79,7 @@ from etlpy_spark.sources.synthetic_web import WebConfig
 
 # Storage schemas are DERIVABLE-COLUMN-FREE: host and priority are pure
 # functions of the url (synthetic_web.host_expr / priority_expr), and the
-# seen shard / url_hash are pmod(xxhash64(url), S) / xxhash64(url) — so
+# seen filter's (shard, sub) pair is pmod(hash(url), S*U) — so
 # none of them is written to disk. Recomputing them on read costs scalable
 # in-partition CPU; storing them costs bytes through the write path (the
 # non-scaling resource on a shared bus — and 8-byte random hashes do not
@@ -224,8 +224,7 @@ def _image_rows(sub: pd.DataFrame, web: WebConfig, rnd: int) -> dict:
 def global_rank(
     df: DataFrame, order_cols: list[str], out_col: str, base: int,
     npart: int, small: bool, caches: list | None = None,
-    count: bool = True,
-) -> tuple[DataFrame, int]:
+) -> DataFrame:
     """Total-order 0-based sequence ``base + rank`` over ``order_cols``
     (assumed a unique key) WITHOUT a single-partition sort at scale:
     range-partition by the key, rank within each partition in parallel,
@@ -233,13 +232,12 @@ def global_rank(
     over npart integers). Range partitions are ordered, so per-partition
     rank + offset == the global rank — the 10^10-row form of row_number.
 
-    Returns (ranked df cached, total rows). ``small=True`` keeps the plain
-    global window (cheaper below ~20k rows). ``count=False`` skips the
-    materializing count job and returns -1 — for callers that already know
-    the row count (or get it later from parquet footers); every driver
-    action is a full Spark job, and the per-round job count is what caps
-    URLs/s at the 10^10 design point. The large path always counts: its
-    partition-size collect IS the offset computation."""
+    Returns the ranked df (cached on the small path). ``small=True`` keeps
+    the plain global window (cheaper below ~20k rows) and runs no job;
+    callers count the ranked rows from the write that consumes them
+    (every driver action is a full Spark job, and the per-call job count
+    is what caps URLs/s at the 10^10 design point). The large path's
+    partition-size collect IS its offset computation."""
     if small:
         w = Window.orderBy(*order_cols)
         out = df.withColumn(
@@ -247,7 +245,7 @@ def global_rank(
         ).cache()
         if caches is not None:
             caches.append(out)
-        return out, (out.count() if count else -1)
+        return out
     d = (
         df.repartitionByRange(npart, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
@@ -265,16 +263,15 @@ def global_rank(
         offsets[pid] = acc
         acc += counts[pid]
     if not counts:
-        return d.withColumn(out_col, F.lit(None).cast("long")), 0
+        return d.withColumn(out_col, F.lit(None).cast("long"))
     m = F.create_map(
         *[x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
     )
     wp = Window.partitionBy("__pid__").orderBy(*order_cols)
-    out = d.withColumn(
+    return d.withColumn(
         out_col,
         (F.row_number().over(wp).cast("long") - 1 + F.element_at(m, F.col("__pid__"))).cast("long"),
     ).drop("__pid__")
-    return out, acc - base
 
 
 class SparkCrawler:
@@ -293,17 +290,12 @@ class SparkCrawler:
         # filter AUTHORITY = persisted (shard, sub, bits) state tables;
         # the driver holds these handles (geometry + snapshot meta), never
         # filter bytes — fold-forward and probes are distributed
-        # (crawl/filterstate.py). sub seeds match the respective write
-        # jobs' sub-partitioning hashes: a pair's sub-filter only contains
-        # its own sub's keys, so probe and write routing MUST agree.
+        # (crawl/filterstate.py), one (shard, sub) pair per write task
         n_sub = max(1, max(cfg.n_buckets, cfg.n_shards) // cfg.n_shards)
-        self.seen_bits = FilterState(
-            spark, os.path.join(workdir, "seen_bits"), self._filter_geom(),
-            cfg.n_shards, n_sub, sub_seed=7,
-        )
-        self.image_bits = FilterState(
-            spark, os.path.join(workdir, "image_bits"), self._filter_geom(),
-            cfg.n_shards, n_sub, sub_seed=1,
+        self.seen_bits, self.image_bits = (
+            FilterState(spark, os.path.join(workdir, name), self._filter_geom(),
+                        cfg.n_shards, n_sub)
+            for name in ("seen_bits", "image_bits")
         )
         self._archive_ready = False
 
@@ -395,10 +387,9 @@ class SparkCrawler:
         # expressions over the url, re-derived by read_frontier each round.
         first = df.groupBy("url").agg(F.min("seed_seq").alias("seed_seq"))
         init_caches: list = []
-        ranked, _ = global_rank(
+        ranked = global_rank(
             first, ["seed_seq"], "discovered_seq", 0, self.cfg.n_buckets,
             small=len(seeds) <= RANK_THRESHOLD, caches=init_caches,
-            count=False,
         )
         frontier = ranked.select(
             "url", "discovered_seq",
@@ -426,28 +417,24 @@ class SparkCrawler:
         """Commit new frontier rows to the seen table and fold their URLs
         into the seen filter state; returns the number committed and the
         data dir (None if none), which the frontier commits as its own."""
-        cfg = self.cfg
-        return self._write_and_fold(
-            self.seen_bits, self.seen, rows, "url",
-            max(cfg.n_buckets, cfg.n_shards), "seen",
-        )
+        return self._write_and_fold(self.seen_bits, self.seen, rows, "url", "seen")
 
     def _write_and_fold(
         self, state: FilterState, table: SnapshotTable, rows: DataFrame,
-        key_col: str, n_parts: int, tag: str, meta: dict | None = None,
+        key_col: str, tag: str, meta: dict | None = None,
         make_rows: Callable[[pd.DataFrame], dict] | None = None,
         chunk: int | None = None,
     ) -> tuple[int, str | None]:
         """Commit ``rows`` to a keyed ``table`` and fold their keys into its
         filter ``state`` in ONE Spark job; returns the rows committed and
         the committed data dir (None when no row was written). Each
-        task writes its partition as ONE ``part-{pid:05d}.parquet`` through
-        ``write_part``, reads its (shard, sub) pairs' previous-version
-        filter files, folds its keys in and writes the new-version pair
-        files. The driver collects only a count row per task, then
-        manifest-commits both tables (``FilterState.finish`` hard-links
-        untouched pairs forward, an O(#files) metadata pass). No filter
-        bytes reach the driver.
+        task holds one (shard, sub) pair (``FilterState.by_pair``), writes
+        its partition as ONE ``part-{pid:05d}.parquet`` through
+        ``write_part``, reads its pair's previous-version filter file,
+        folds its keys in and writes the new-version pair file. The driver
+        collects only a count row per task, then manifest-commits both
+        tables (``FilterState.finish`` hard-links untouched pairs forward,
+        an O(#files) metadata pass). No filter bytes reach the driver.
 
         The part file's chunks are ``make_rows`` (default: the rows as
         they are) of ``chunk``-row slices of each input batch, or of the
@@ -465,12 +452,6 @@ class SparkCrawler:
         spec = state.spec
         fail_dir = os.environ.get("ETLPY_FAIL_ONCE_DIR")
 
-        # explicit repartition, NOT groupBy: AQE would coalesce the
-        # groupBy shuffle by input bytes and serialize the stage (key
-        # rows are narrow while the per-key work — parquet, filters, the
-        # image fetch + decode — is not). The (shard, sub) partitioner
-        # puts every pair wholly in one task, so the task's fold is the
-        # COMPLETE new state for its pairs.
         def write_and_fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from pyspark import TaskContext
 
@@ -495,9 +476,9 @@ class SparkCrawler:
                 folder.flush()
                 yield pd.DataFrame({"n": [n]})
 
-        state.routed(rows, key_col).repartition(
-            n_parts, "__shard__", "__sub__"
-        ).mapInPandas(write_and_fold, schema="n long").collect()
+        state.by_pair(rows, key_col).mapInPandas(
+            write_and_fold, schema="n long"
+        ).collect()
         state.finish(bv, bits_dir, prev_dir)
         n = table.commit_external(v, data_dir, meta=meta)[1]
         return n, data_dir if n else None
@@ -564,19 +545,22 @@ class SparkCrawler:
     # -- one round ----------------------------------------------------------
 
     def run_round(self) -> dict:
-        """Run one crawl round and return its metrics row. Spark actions
-        run in this order: the schedule's stats job, the large rank path's
-        offset collects (fetch order, then discovered order), the fused
-        seen write (it materializes the fetch cache and the whole link
-        path), then the image write, which reads that fetch cache. So the
-        seen + crawl-log commit precedes the image phase and the frontier
-        + metrics commit follows it."""
+        """Run one crawl round and return its metrics row. No Spark job
+        only counts: ``scheduled`` is the frontier manifest's live-row
+        count, and every other count comes from the write that produced
+        it. Spark actions run in this order: the large rank path's offset
+        collects (fetch order, then discovered order), the fused seen
+        write (it materializes the robots-annotated frontier and fetch
+        caches and the whole link path), the image write, which reads
+        that fetch cache, then the frontier tombstone write. So the seen +
+        crawl-log commit precedes the image phase and the frontier +
+        metrics commit follows it."""
         st = self.state()
         rnd = int(st["round"])
-        base, selected, scheduled, robots_blocked = self._schedule(rnd)
+        scheduled = self.frontier.live_rows()
         if scheduled == 0:
-            base.unpersist()
             return {"round": rnd, "fetched": 0, "scheduled": 0}
+        base, selected = self._schedule(rnd)
         caches: list = [base]
         small = scheduled <= RANK_THRESHOLD
         selected, extracted, log_txn = self._fetch(
@@ -589,26 +573,25 @@ class SparkCrawler:
         n_images = self._image_path(extracted, rnd)
         m = self._commit_round(
             st, base, selected, new_dir, scheduled=scheduled,
-            robots_blocked=robots_blocked, fetched=fetched, n_new=n_new,
-            n_images=n_images,
+            fetched=fetched, n_new=n_new, n_images=n_images,
         )
         for c in caches:
             c.unpersist()
         probe_cleanup()
         return m
 
-    def _schedule(self, rnd: int) -> tuple[DataFrame, DataFrame, int, int]:
+    def _schedule(self, rnd: int) -> tuple[DataFrame, DataFrame]:
         """Schedule phase: robots gate + politeness selection. Returns the
-        cached robots-annotated frontier, the (lazy) selected rows, and the
-        scheduled and robots-blocked counts from one stats job."""
+        cached robots-annotated frontier and the (lazy) selected rows; no
+        Spark job runs here."""
         cfg = self.cfg
         frontier = self.read_frontier()
 
         # robots gate: broadcast join + any-prefix match (pure expressions).
-        # The robots-annotated frontier is cached ONCE; the scheduled +
-        # blocked counts, the politeness window, the fetch ranking and the
-        # MoR tombstones all read the cache (each driver action is a full
-        # Spark job; round fixed cost is what caps URLs/s).
+        # The robots-annotated frontier is cached ONCE; the politeness
+        # window, the fetch ranking and the MoR tombstones all read the
+        # cache (each driver action is a full Spark job; round fixed cost
+        # is what caps URLs/s).
         robots = self._robots_df()
         path = F.regexp_extract(F.col("url"), r"^[a-z]+://[^/]+(/.*)$", 1)
         blocked_pred = F.exists(
@@ -645,10 +628,6 @@ class SparkCrawler:
             .drop("disallow", "crawl_delay")
             .cache()
         )
-        stats = base.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.col("__blocked__").cast("long")), F.lit(0)).alias("blk"),
-        ).first()
         # politeness selection: per-host top-budget by (eprio, seq). The
         # rank filter leads with the LITERAL bound K so Catalyst's
         # InferWindowGroupLimit inserts a WindowGroupLimit on BOTH sides of
@@ -666,7 +645,7 @@ class SparkCrawler:
             )
             .drop("__blocked__", "__hk__", "__budget__")
         )
-        return base, selected, int(stats["n"]), int(stats["blk"])
+        return base, selected
 
     def _fetch(
         self, selected: DataFrame, rnd: int, fetch_base: int, small: bool,
@@ -682,9 +661,9 @@ class SparkCrawler:
         # selected-row count is NOT aggregated up front (that would force a
         # full un-pruned window pass): it arrives free from the crawl-log
         # commit's parquet footers.
-        selected, _ = global_rank(
+        selected = global_rank(
             selected, ["__eprio__", "discovered_seq"], "fetch_seq", fetch_base,
-            cfg.n_buckets, small=small, caches=caches, count=False,
+            cfg.n_buckets, small=small, caches=caches,
         )
         selected = selected.drop("__eprio__")
 
@@ -793,9 +772,9 @@ class SparkCrawler:
         # the filter-positive residue against the exact seen table
         new_links, cleanup = self.seen_bits.new_rows(links, "url", self.seen)
 
-        ranked_links, _ = global_rank(
+        ranked_links = global_rank(
             new_links, ["fetch_seq", "pos"], "discovered_seq", seq_base,
-            cfg.n_buckets, small=small, caches=caches, count=False,
+            cfg.n_buckets, small=small, caches=caches,
         )
         new_frontier = ranked_links.select(
             "url", "discovered_seq",
@@ -849,8 +828,8 @@ class SparkCrawler:
         # input batch of 280 KB images in one frame OOMs at high task
         # concurrency — memory must not scale with parallelism)
         n_imgs, _ = self._write_and_fold(
-            self.image_bits, self.images, refs, "image_id", cfg.n_buckets,
-            "images", meta={"round": rnd},
+            self.image_bits, self.images, refs, "image_id", "images",
+            meta={"round": rnd},
             make_rows=lambda sub: _image_rows(sub, web, rnd), chunk=CHUNK,
         )
         cleanup()
@@ -858,42 +837,47 @@ class SparkCrawler:
 
     def _commit_round(
         self, st: dict, base: DataFrame, selected: DataFrame,
-        new_dir: str | None, scheduled: int, robots_blocked: int,
-        fetched: int, n_new: int, n_images: int,
+        new_dir: str | None, scheduled: int, fetched: int, n_new: int,
+        n_images: int,
     ) -> dict:
         """Round commit: one merge-on-read frontier commit appends the
         seen commit's data dir ``new_dir`` (None: tombstones only) and
         tombstones the consumed URLs (fetched + robots-blocked) —
-        O(round-sized files), never O(pending); its
-        snapshot meta is the crawl's resume state. Tombstones compact
-        automatically past SnapshotTable's threshold (one distributed
-        rewrite). Then the round's one metrics row, written in-process
-        under a fixed part name (no Spark job): a crashed-round re-run
-        rewrites the identical file under the identical name, which keeps
-        the metrics table inside the streaming bridge's exactly-once
-        contract. Returns the metrics."""
+        O(round-sized files), never O(pending); its snapshot meta is the
+        crawl's resume state, and its metrics take ``robots_blocked`` from
+        the tombstone write's count (every selected url was fetched, so
+        the rest were blocked). Tombstones compact automatically past
+        SnapshotTable's threshold (one distributed rewrite). Then the
+        round's one metrics row, written in-process under a fixed part
+        name (no Spark job): a crashed-round re-run rewrites the identical
+        file under the identical name, which keeps the metrics table
+        inside the streaming bridge's exactly-once contract. Returns the
+        metrics."""
         rnd = int(st["round"])
-        m = {
-            "round": rnd,
-            "scheduled": scheduled,
-            "robots_blocked": robots_blocked,
-            "fetched": fetched,
-            "deferred": scheduled - robots_blocked - fetched,
-            "new_urls": n_new,
-            "new_images": n_images,
-        }
-        state_meta = {
-            "round": rnd + 1,
-            "next_fetch_seq": int(st["next_fetch_seq"]) + fetched,
-            "next_discovered_seq": int(st["next_discovered_seq"]) + n_new,
-            "metrics": m,
-        }
+
+        def state_meta(_, n_tombstoned: int) -> dict:
+            return {
+                "round": rnd + 1,
+                "next_fetch_seq": int(st["next_fetch_seq"]) + fetched,
+                "next_discovered_seq": int(st["next_discovered_seq"]) + n_new,
+                "metrics": {
+                    "round": rnd,
+                    "scheduled": scheduled,
+                    "robots_blocked": n_tombstoned - fetched,
+                    "fetched": fetched,
+                    "deferred": scheduled - n_tombstoned,
+                    "new_urls": n_new,
+                    "new_images": n_images,
+                },
+            }
+
         removed = selected.select("url").unionByName(
             base.filter(F.col("__blocked__")).select("url")
         )
         self.frontier.append_with_deletes(
             new_dir, removed, key="url", meta=state_meta
         )
+        m = self.state()["metrics"]
         mv, metrics_dir = self.metrics.begin_external()
         write_part(
             self.metrics.layout, {k: [v] for k, v in m.items()},
@@ -944,7 +928,7 @@ class SparkCrawler:
         DataFrame and deterministic) and ``lineage_part = -2`` so recrawled
         lineage is distinguishable from seed (-1) and link parts (≥0).
         Returns the number of URLs enqueued (already-pending ones are
-        skipped)."""
+        skipped), as the append write counted them."""
         # list inputs below the threshold take the cheap global-window rank;
         # DataFrame inputs are assumed big → two-phase ranged rank
         is_small = not isinstance(urls, DataFrame) and len(urls) <= RANK_THRESHOLD
@@ -955,7 +939,7 @@ class SparkCrawler:
         st = self.state()
         rnd, seq_base = int(st["round"]), int(st["next_discovered_seq"])
         caches: list = []
-        ranked, n = global_rank(
+        ranked = global_rank(
             tgt, ["url"], "discovered_seq", seq_base, self.cfg.n_buckets,
             small=is_small, caches=caches,
         )
@@ -968,7 +952,7 @@ class SparkCrawler:
         # is NOT re-deleted by old tombstones, so re-enqueue always lands
         self.frontier.append(
             rows,
-            meta={
+            meta=lambda n, _: {
                 "round": rnd,
                 "next_fetch_seq": int(st["next_fetch_seq"]),
                 "next_discovered_seq": seq_base + n,
@@ -977,7 +961,7 @@ class SparkCrawler:
         )
         for c in caches:
             c.unpersist()
-        return n
+        return int(self.state()["recrawled"])
 
     def forget(self, urls) -> int:
         """Retract URLs from the seen set so they become *discoverable*
@@ -994,24 +978,19 @@ class SparkCrawler:
         anti-join of ``FilterState.new_rows`` against the tombstoned table
         finds it new. Filters promise no false negatives, not no false
         positives, so the result is exact and no rebuild is needed.
-        Returns how many seen rows were retracted (0 before the seen
-        table's first commit)."""
-        if self.seen.current_version() is None:
+
+        One write, no count job: the tombstone write counts the retracted
+        rows, and the manifest's live-row count drops by that many.
+        Returns it (0 before the seen table's first commit, and when no
+        url is seen: then no snapshot is committed)."""
+        before = self.seen.live_rows()
+        if not before:
             return 0
-        tgt = self._urls_df(urls)
-        seen = self.seen.read()
-        # cache the semi-join RESULT, not the target list: the join scans
-        # the (10^10-row design point) seen table, and both the count and
-        # the tombstone write read `hits` — caching tgt alone would pay
-        # that full scan twice
-        hits = tgt.join(seen, on="url", how="left_semi").cache()
-        removed = hits.count()
-        if removed:
-            # tombstone exactly the urls that ARE in the table (tombstone
-            # stats drive compaction; phantom keys would skew them)
-            self.seen.append_with_deletes(None, hits, key="url")
-        hits.unpersist()
-        return int(removed)
+        # tombstone exactly the urls that ARE in the table: the live-row
+        # count subtracts one row per tombstone
+        hits = self._urls_df(urls).join(self.seen.read(), on="url", how="left_semi")
+        self.seen.append_with_deletes(None, hits, key="url")
+        return before - self.seen.live_rows()
 
     # -- results for parity checks ------------------------------------------
 

@@ -12,7 +12,7 @@ Layout (one directory per table):
     data/v{N:06d}/part-*.parquet   -- one data dir per committed snapshot
     data/v{N:06d}.del/             -- equality-delete (tombstone) keys
     snapshots/v{N:06d}.json        -- manifest: mode, data dirs, tombstones,
-                                      merge-on-read stats, meta
+                                      live rows, merge-on-read stats, meta
     _current                       -- name of latest snapshot (atomic rename)
 
 This module is the only code that knows how a table's bytes reach disk.
@@ -35,10 +35,11 @@ Two rules, each written once:
   ``SnapshotTable._commit_manifest``. Every commit (Spark-written,
   externally written, merge-on-read) builds its manifest there: an append
   carries the previous data dirs, tombstones and live-row stats forward, an
-  overwrite starts a fresh chain. The manifest is written first, then
-  ``_current`` is swapped atomically (os.replace): a crashed writer leaves
-  the table at the previous snapshot, which is exactly the resume point
-  (generalizes the reference master's ``skip=`` job resume,
+  overwrite starts a fresh chain, and each records the live row count its
+  writes counted (no Spark job counts a table). The manifest is written
+  first, then ``_current`` is swapped atomically (os.replace): a crashed
+  writer leaves the table at the previous snapshot, which is exactly the
+  resume point (generalizes the reference master's ``skip=`` job resume,
   distributed.py:42,62-63). A multi-table commit record (every table
   version one crawl round wrote, rolled back together with
   ``rollback_to``) hooks in at that one helper.
@@ -54,41 +55,29 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+# compaction writes at most one file per this many live rows
+COMPACT_ROWS_PER_FILE = 1 << 20
 
-# Spark DDL simple-string → pyarrow type, for the declared table layouts
-def _pa_types() -> dict:
+
+def _pa_type(name: str):
+    """Spark DDL simple-string → pyarrow type, for the declared layouts."""
     import pyarrow as pa
 
-    return {
-        "string": pa.string(),
-        "bigint": pa.int64(),
-        "long": pa.int64(),
-        "int": pa.int32(),
-        "smallint": pa.int16(),
-        "tinyint": pa.int8(),
-        "double": pa.float64(),
-        "float": pa.float32(),
-        "boolean": pa.bool_(),
-        "binary": pa.binary(),
-        "date": pa.date32(),
+    types = {
+        "string": pa.string(), "bigint": pa.int64(), "long": pa.int64(),
+        "int": pa.int32(), "smallint": pa.int16(), "tinyint": pa.int8(),
+        "double": pa.float64(), "float": pa.float32(), "boolean": pa.bool_(),
+        "binary": pa.binary(), "date": pa.date32(),
     }
-
-
-class _LazyPaTypes:
-    def __getitem__(self, key: str):
-        try:
-            return _pa_types()[key]
-        except KeyError:
-            raise KeyError(
-                f"no pyarrow mapping for Spark type {key!r}; extend _pa_types"
-            ) from None
-
-
-_PA_TYPES = _LazyPaTypes()
+    if name not in types:
+        raise KeyError(f"no pyarrow mapping for Spark type {name!r}; extend _pa_type")
+    return types[name]
 
 
 @dataclass
@@ -121,7 +110,7 @@ class TableLayout:
     def pa_schema(self):
         import pyarrow as pa
 
-        return pa.schema([(n, _PA_TYPES[t]) for n, t in self.columns()])
+        return pa.schema([(n, _pa_type(t)) for n, t in self.columns()])
 
     def tombstones(self, key: str) -> "TableLayout":
         """Layout of the key-only equality-delete files: the key column,
@@ -205,6 +194,7 @@ class Snapshot:
     mode: str  # 'append' | 'overwrite'
     data_dirs: list[str]
     meta: dict
+    rows: int  # live rows: what a read of this snapshot returns
     # merge-on-read state (Iceberg equality-delete files): entries of
     # {"dir": <key-only parquet dir>, "upto": <data-dir index bound>} —
     # a tombstone deletes ONLY from data dirs with index < upto (the
@@ -264,10 +254,14 @@ class SnapshotTable:
     def snapshot(self, version: int) -> Snapshot:
         with open(self._snap_path(version)) as f:
             d = json.load(f)
+        st, rows = d.get("mor_stats"), d.get("rows")
+        if rows is None:  # a manifest written before live rows were recorded
+            rows = st["data"] - st["tomb"] if st else sum(
+                self._footer_rows(x) for x in d["data_dirs"])
         return Snapshot(
             version=d["version"], mode=d["mode"], data_dirs=d["data_dirs"],
-            meta=d["meta"], delete_dirs=d.get("delete_dirs"),
-            delete_key=d.get("delete_key"), mor_stats=d.get("mor_stats"),
+            meta=d["meta"], rows=rows, delete_dirs=d.get("delete_dirs"),
+            delete_key=d.get("delete_key"), mor_stats=st,
         )
 
     def history(self) -> list[Snapshot]:
@@ -284,17 +278,18 @@ class SnapshotTable:
 
     def _write_data_dir(
         self, df: DataFrame, data_dir: str, layout: TableLayout | None = None
-    ) -> None:
+    ) -> int:
         """Write ``df``'s rows as parquet under ``data_dir`` with ``layout``
-        (default: the table's). Without a layout this is the Spark writer.
-        With one, each task buffers its partition and writes ONE
-        ``part-{pid:05d}.parquet`` through :func:`write_part`, so a retried
-        or speculated task replaces its own identical output instead of
-        duplicating rows. An empty ``df`` leaves an empty dir."""
+        (default: the table's); returns the rows written. Without a layout
+        this is the Spark writer. With one, each task buffers its partition
+        and writes ONE ``part-{pid:05d}.parquet`` through
+        :func:`write_part`, so a retried or speculated task replaces its
+        own identical output instead of duplicating rows, and returns its
+        count row. An empty ``df`` leaves an empty dir."""
         layout = layout or self.layout
         if layout is None:
             df.write.mode("overwrite").parquet(data_dir)
-            return
+            return self._footer_rows(data_dir)
         os.makedirs(data_dir, exist_ok=True)
 
         def write(batches):
@@ -309,54 +304,56 @@ class SnapshotTable:
             path = os.path.join(data_dir, f"part-{pid:05d}.parquet")
             yield pd.DataFrame({"n": [write_part(layout, pdf, path)]})
 
-        df.mapInPandas(write, schema="n long").collect()
+        return sum(r.n for r in df.mapInPandas(write, schema="n long").collect())
 
     def _commit_manifest(
-        self, v: int, mode: str, data_dir: str | None, meta: dict | None,
-        rows: int | None = None, tombstones: tuple[str, str] | None = None,
+        self, v: int, mode: str, data_dir: str | None,
+        meta: dict | Callable[[int, int], dict] | None, rows: int | None = None,
+        tombstones: tuple[str, str, int] | None = None,
     ) -> dict:
         """Make snapshot ``v`` (``data_dir`` already written; None adds
         none) the current one — the single place a snapshot chains on.
 
         ``append`` carries the previous data dirs forward, and with them
         the tombstones (they delete from those old dirs only) and the
-        merge-on-read stats. The stats must COUNT the appended ``rows``
-        (footer total of ``data_dir``, read when not given): a frozen
-        live-row count makes a later tiny retraction trip a full
-        compaction. ``overwrite`` starts a fresh chain: no old data, no
-        tombstones. ``tombstones=(key, del_dir)`` adds an equality-delete
-        dir that applies to the data dirs committed BEFORE this one
+        merge-on-read stats, which COUNT the appended ``rows`` (footer
+        total of ``data_dir`` when not given): a frozen live-row count
+        makes a later tiny retraction trip a full compaction. ``overwrite``
+        starts a fresh chain: no old data, no tombstones.
+        ``tombstones=(key, del_dir, n)`` adds an equality-delete dir of
+        ``n`` keys that applies to the data dirs committed BEFORE this one
         (Iceberg sequence numbers: rows appended in this commit or a later
-        one with a deleted key stay live). Returns the manifest."""
+        one with a deleted key stay live). The manifest's ``rows`` = live
+        rows before + ``rows`` - ``n``. A callable ``meta`` gets
+        (``rows``, ``n``). Returns the manifest."""
         ps = None
         if mode == "append" and (prev := self.current_version()):
             ps = self.snapshot(prev)
         prev_dirs = ps.data_dirs if ps else []
         new_dirs = [data_dir] if data_dir else []
+        if rows is None:
+            rows = sum(self._footer_rows(d) for d in new_dirs)
+        _, del_dir, n_tomb = tombstones or (None, None, 0)
+        if callable(meta):
+            meta = meta(rows, n_tomb)
+        live = (ps.rows if ps else 0) + rows - n_tomb
         snap = {"version": v, "mode": mode, "data_dirs": prev_dirs + new_dirs,
-                "meta": dict(meta or {})}
+                "meta": dict(meta or {}), "rows": live}
         dels = list(ps.delete_dirs or []) if ps else []
         key = ps.delete_key if ps else None
         stats = ps.mor_stats if ps else None
         if tombstones:
-            tkey, del_dir = tombstones
-            if key not in (None, tkey):
+            if key not in (None, tombstones[0]):
                 raise ValueError(f"table already has tombstones keyed by {key!r}")
-            key = tkey
+            key = tombstones[0]
             dels.append({"dir": del_dir, "upto": len(prev_dirs)})
-            if stats is None:
-                # first MoR commit on this table: seed the live-row count
-                # from the pre-existing data files (footer metadata only)
-                stats = {"data": sum(self._footer_rows(d) for d in prev_dirs),
-                         "tomb": 0}
-            stats = {**stats, "tomb": stats["tomb"] + self._footer_rows(del_dir)}
+            # the first MoR commit on this table seeds the stats
+            stats = stats or {"data": ps.rows if ps else 0, "tomb": 0}
+            stats = {**stats, "tomb": stats["tomb"] + n_tomb}
         if dels:
             snap["delete_dirs"] = dels
             snap["delete_key"] = key
-            if stats:
-                if rows is None:
-                    rows = sum(self._footer_rows(d) for d in new_dirs)
-                snap["mor_stats"] = {**stats, "data": stats["data"] + rows}
+            snap["mor_stats"] = {**stats, "data": stats["data"] + rows}
         tmp = self._snap_path(v) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(snap, f)
@@ -373,18 +370,15 @@ class SnapshotTable:
     def _commit(self, df: DataFrame, mode: str, meta: dict | None) -> int:
         v = (self.current_version() or 0) + 1
         data_dir = self._data_dir(v)
-        self._write_data_dir(df, data_dir)
-        self._commit_manifest(v, mode, data_dir, meta)
+        rows = self._write_data_dir(df, data_dir)
+        self._commit_manifest(v, mode, data_dir, meta, rows=rows)
         return v
 
-    def append(self, df: DataFrame, meta: dict | None = None) -> int:
+    def append(self, df: DataFrame, meta: dict | Callable | None = None) -> int:
         return self._commit(df, "append", meta)
 
     def append_counted(self, df: DataFrame, meta: dict | None = None) -> tuple[int, int]:
-        """Append and return (version, rows written). The count comes from
-        the freshly written parquet footers (metadata-only scan) — cheaper
-        than caching the input just to count it (matters when rows carry
-        image bytes)."""
+        """Append and return (version, rows written by the append)."""
         v = self._commit(df, "append", meta)
         return v, self._footer_rows(self.snapshot(v).data_dirs[-1])
 
@@ -421,8 +415,6 @@ class SnapshotTable:
         files only. What a killed task can leave behind is its ``.tmp-*``
         file: this commit removes those, and the manifest counts committed
         names only."""
-        import shutil
-
         for f in os.listdir(data_dir):
             if f.startswith(".tmp-"):
                 with contextlib.suppress(FileNotFoundError):
@@ -438,14 +430,17 @@ class SnapshotTable:
 
     def append_with_deletes(
         self, data: DataFrame | str | None, delete_keys: DataFrame | None,
-        key: str, meta: dict | None = None, compact_threshold: float = 0.3,
+        key: str, meta: dict | Callable[[int, int], dict] | None = None,
+        compact_threshold: float = 0.3,
     ) -> int:
         """One atomic commit = append ``data`` + equality-delete every
         existing row whose ``key`` appears in ``delete_keys`` (Iceberg
         merge-on-read DELETE semantics: a ~key-only tombstone file, no
         data-file rewrite). ``read()`` applies tombstones as an anti-join.
         ``data`` may also be a written data dir (shared, not copied) or
-        None, and ``delete_keys`` None (no tombstones).
+        None, and ``delete_keys`` None (no tombstones). Each delete key
+        must match one live row: the live-row count drops by one per key.
+        A tombstone-only commit with no delete key is not made.
 
         This turns a mutate-in-place table (the crawl frontier) from an
         O(table) rewrite per commit into O(changed rows): at a 10^10-URL
@@ -455,38 +450,52 @@ class SnapshotTable:
         equivalent of Iceberg's rewrite_data_files) so read-side anti-join
         cost stays bounded; amortized cost is O(changed) per commit."""
         v = (self.current_version() or 0) + 1
-        data_dir = data
+        data_dir, rows = data, None
         if isinstance(data, DataFrame):
             data_dir = self._data_dir(v)
-            self._write_data_dir(data, data_dir)
+            rows = self._write_data_dir(data, data_dir)
         tombstones = None
         if delete_keys is not None:
             del_dir = self._data_dir(v) + ".del"
             # tombstones are URL-heavy too: the key column keeps the table's
             # sorted layout + encoding
-            self._write_data_dir(
+            n = self._write_data_dir(
                 delete_keys.select(key), del_dir,
                 self.layout.tombstones(key) if self.layout else None,
             )
-            tombstones = (key, del_dir)
-        stats = self._commit_manifest(
-            v, "append", data_dir, meta, tombstones=tombstones
-        ).get("mor_stats")
-        if stats and stats["tomb"] > compact_threshold * max(stats["data"] - stats["tomb"], 1):
-            return self.compact(meta=meta)
+            tombstones = (key, del_dir, n)
+            if not n and data_dir is None:
+                shutil.rmtree(del_dir, ignore_errors=True)
+                return self.current_version() or 0
+        snap = self._commit_manifest(
+            v, "append", data_dir, meta, rows=rows, tombstones=tombstones
+        )
+        stats = snap.get("mor_stats")
+        if stats and stats["tomb"] > compact_threshold * max(snap["rows"], 1):
+            return self.compact(meta=snap["meta"])
         return v
 
     def compact(self, meta: dict | None = None) -> int:
         """Materialize the post-delete view into one fresh snapshot (the
         moral equivalent of Iceberg rewrite_data_files): one distributed
         rewrite clears all tombstones so read-side anti-join cost stays
-        bounded. Carries ``meta`` (defaults to the current snapshot's)."""
+        bounded. Its input coalesces to at most ceil(live rows /
+        COMPACT_ROWS_PER_FILE) files. Carries ``meta`` (defaults to the
+        current snapshot's)."""
         cur = self.current_version()
         if cur is None:
             return 0
-        if meta is None:
-            meta = self.snapshot(cur).meta
-        return self._commit(self.read(), "overwrite", meta)
+        snap = self.snapshot(cur)
+        n_files = max(1, -(-snap.rows // COMPACT_ROWS_PER_FILE))
+        return self._commit(
+            self.read().coalesce(n_files), "overwrite",
+            snap.meta if meta is None else meta,
+        )
+
+    def live_rows(self) -> int:
+        """The current snapshot's row count from its manifest (no job)."""
+        v = self.current_version()
+        return 0 if v is None else self.snapshot(v).rows
 
     def _footer_rows(self, data_dir: str) -> int:
         import pyarrow.parquet as pq

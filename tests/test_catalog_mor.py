@@ -176,3 +176,29 @@ def test_append_with_deletes_takes_a_written_dir_or_none(spark):
     assert empty.snapshot(empty.current_version()).data_dirs == []
     df = empty.read()
     assert df.count() == 0 and df.columns == ["k", "v"]
+
+
+def test_compaction_sizes_its_files_by_live_rows(spark, monkeypatch):
+    """Compaction coalesces a many-file input into ceil(live rows /
+    COMPACT_ROWS_PER_FILE) files, taking the live rows from the manifest;
+    every manifest's live-row count is what a read returns."""
+    from etlpy_spark.sources import catalog
+
+    layout = TableLayout("k string, v int", sort=("k",))
+    tbl = SnapshotTable(spark, tempfile.mkdtemp(prefix="mor_"), layout)
+
+    def compacted_files(rows_per_file: int) -> int:
+        monkeypatch.setattr(catalog, "COMPACT_ROWS_PER_FILE", rows_per_file)
+        tbl.overwrite(_t(spark, [(f"k{i:02d}", i) for i in range(20)]).repartition(5))
+        (first,) = tbl.snapshot(tbl.current_version()).data_dirs
+        assert len(catalog.parquet_files(first)) == 5
+        tbl.append_with_deletes(_t(spark, [("x", 99)]), _keys(spark, ["k00", "k01"]),
+                                key="k", compact_threshold=100.0)
+        assert tbl.live_rows() == 19 == tbl.read().count()
+        (out,) = tbl.snapshot(tbl.compact()).data_dirs
+        assert tbl.live_rows() == 19
+        assert _read_set(tbl) == {(f"k{i:02d}", i) for i in range(2, 20)} | {("x", 99)}
+        return len(catalog.parquet_files(out))
+
+    assert compacted_files(catalog.COMPACT_ROWS_PER_FILE) == 1
+    assert compacted_files(8) == 3  # ceil(19 / 8)

@@ -289,7 +289,7 @@ def _record_write_plans(monkeypatch) -> dict:
     plans = {}
     write_and_fold = SparkCrawler._write_and_fold
 
-    def recording(self, state, table, rows, key_col, n_parts, tag, **kw):
+    def recording(self, state, table, rows, key_col, tag, **kw):
         cls = type(rows)
         collect = cls.collect
 
@@ -300,7 +300,7 @@ def _record_write_plans(monkeypatch) -> dict:
 
         with monkeypatch.context() as m:
             m.setattr(cls, "collect", collect_and_record)
-            return write_and_fold(self, state, table, rows, key_col, n_parts, tag, **kw)
+            return write_and_fold(self, state, table, rows, key_col, tag, **kw)
 
     monkeypatch.setattr(SparkCrawler, "_write_and_fold", recording)
     return plans
@@ -505,29 +505,45 @@ def test_rollback_time_travel(spark):
         shutil.rmtree(wd, ignore_errors=True)
 
 
+def _job_count(sc, name: str, fn, *args):
+    """``fn(*args)`` and the number of Spark jobs it ran."""
+    group = f"{name}-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, name)
+    try:
+        out = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_steady_round_job_count(spark):
-    """Per-round fixed cost is Spark jobs: a steady WEB round (seen table
-    and filter state already committed, frontier compaction included)
-    runs at most 27 of them. Each new url is written by one job (the seen
-    write-and-fold, whose data dir the frontier appends), and every
-    layout-table read takes its declared schema, so no read runs a
-    schema-inference job."""
+    """Per-call fixed cost is Spark jobs, and no job only counts: a steady
+    WEB round (seen table and filter state already committed, frontier
+    compaction included) runs at most 25 of them, a ``recrawl`` at most
+    5 and a ``forget`` that compacts ``seen`` at most 8. Each new url is
+    written by one job (the seen write-and-fold, whose data dir the
+    frontier appends), every layout-table read takes its declared
+    schema, so no read runs a schema-inference job, and every count
+    comes from a write or a snapshot manifest."""
     sc = spark.sparkContext
     wd = tempfile.mkdtemp(prefix="crawl_jobs_")
     try:
         cr = SparkCrawler(spark, wd, CrawlConfig(web=WEB))
         cr.init_from_seeds(seed_urls(WEB, n_per_host=2))
         cr.run_round()
-        group = f"steady-round-{os.path.basename(wd)}"
-        sc.setJobGroup(group, "steady WEB round")
-        try:
-            m = cr.run_round()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+        m, n_jobs = _job_count(sc, "steady WEB round", cr.run_round)
         assert m["round"] == 1 and m["fetched"] > 0 and m["new_urls"] > 0
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert 0 < n_jobs <= 27, n_jobs
+        assert 0 < n_jobs <= 25, n_jobs
+
+        fetched = [u for _, u in cr.crawl_log_list()]
+        n, n_jobs = _job_count(sc, "recrawl", cr.recrawl, fetched[:4])
+        assert n == 4 and 0 < n_jobs <= 5, (n, n_jobs)
+        # enough urls to trip seen's compaction, the costlier forget
+        forgotten = sorted(cr.seen_urls_list())[:12]
+        n, n_jobs = _job_count(sc, "forget", cr.forget, forgotten)
+        assert cr.seen.snapshot(cr.seen.current_version()).mode == "overwrite"
+        assert n == 12 and 0 < n_jobs <= 8, (n, n_jobs)
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 

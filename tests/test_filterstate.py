@@ -123,7 +123,7 @@ def test_fold_forward_carries_untouched_pairs(spark, tmp_path):
     old + new keys."""
     spec = filter_spec("bloom", 1 << 12, 0.01)
     state = FilterState(spark, str(tmp_path / "bits"), spec,
-                        n_shards=4, n_sub=2, sub_seed=7)
+                        n_shards=4, n_sub=2)
     base = [f"http://h{i}.x/{i}" for i in range(400)]
     state.rebuild_from(
         spark.createDataFrame([(u,) for u in base], "url string"), "url"
@@ -179,7 +179,7 @@ def test_cuckoo_state_folds_forward(spark, tmp_path):
     same pair-file protocol."""
     spec = filter_spec("cuckoo", 1 << 10, 0.01)
     state = FilterState(spark, str(tmp_path / "cbits"), spec,
-                        n_shards=2, n_sub=1, sub_seed=7)
+                        n_shards=2, n_sub=1)
     a = [f"http://a.x/{i}" for i in range(100)]
     b = [f"http://b.x/{i}" for i in range(100)]
     state.rebuild_from(spark.createDataFrame([(u,) for u in a], "url string"), "url")
@@ -208,3 +208,72 @@ def test_cuckoo_state_folds_forward(spark, tmp_path):
         for k, (s, u) in ra.items():
             f = read_pair(d, s, u, spec)
             assert f is not None and f.might_contain(k), k
+
+
+def test_write_partitions_hold_one_pair_each(spark, tmp_path):
+    """The write and rebuild jobs' partitioner IS the routing: partition
+    ``p`` of ``by_pair`` holds exactly the keys of pair ``p`` (shard
+    ``p % S``, sub ``p // S``), so every pair is folded whole by one task
+    and every task gets one pair, however the pairs' hashes fall."""
+    from pyspark.sql import functions as F
+
+    state = FilterState(spark, str(tmp_path / "bits"), filter_spec("bloom", 1 << 10, 0.01),
+                        n_shards=8, n_sub=2)
+    keys = spark.createDataFrame([(f"http://h{i % 13}.x/{i}",) for i in range(4000)], "url string")
+    rows = state.by_pair(keys, "url").select(
+        F.spark_partition_id().alias("p"), F.col("__shard__").alias("s"),
+        F.col("__sub__").alias("u"),
+    ).groupBy("p", "s", "u").count().collect()
+    assert sorted(r.p for r in rows) == list(range(16))
+    assert all(r.p == r.s + 8 * r.u for r in rows)
+    assert sum(r["count"] for r in rows) == 4000
+
+
+def test_ensure_rebuilds_a_state_of_the_old_routing(spark, tmp_path, rebuilds):
+    """A workdir whose filter state was written under the former xxhash64
+    routing (shard ``pmod(xxhash64(key), S)``, sub ``pmod(xxhash64(key,
+    7), U)``, no routing in the state's meta) probes its keys in the wrong
+    pairs, i.e. has false negatives. A crawler reopened on it rebuilds the
+    state once, records the routing, and resumes in parity with the
+    serial oracle."""
+    from pyspark.sql import functions as F
+
+    from etlpy_spark.crawl.oracle import crawl_oracle
+
+    seeds = seed_urls(WEB, n_per_host=2)
+    cr = SparkCrawler(spark, str(tmp_path), CrawlConfig(web=WEB))
+    cr.run(seeds, max_rounds=1)
+    state = cr.seen_bits
+    # rewrite the seen state as the old routing built it
+    old = cr.seen.read().select(
+        "url",
+        F.pmod(F.xxhash64("url"), F.lit(state.n_shards)).alias("s"),
+        F.pmod(F.xxhash64("url", F.lit(7)), F.lit(state.n_sub)).alias("u"),
+    ).collect()
+    v, d = state.begin()
+    folder = PairFolder(None, d, state.spec)
+    for r in old:
+        folder.add(r.s, r.u, [r.url])
+    folder.flush()
+    state.table.commit_external(v, d, mode="overwrite", meta={
+        "total_bytes": sum(os.path.getsize(os.path.join(d, f)) for f in os.listdir(d)),
+        "n_pairs": len(os.listdir(d)),
+    })
+    routed = cr.seen.read().select(
+        "url", state.shard_expr("url").alias("s"), state.sub_expr("url").alias("u")
+    ).collect()
+
+    def negatives():
+        d = state.latest_dir()
+        return [r.url for r in routed
+                if not (f := read_pair(d, r.s, r.u, state.spec)) or not f.might_contain(r.url)]
+
+    assert negatives(), "the old routing must give false negatives here"
+
+    cr2 = SparkCrawler(spark, str(tmp_path), CrawlConfig(web=WEB))
+    cr2.run(None, max_rounds=3)
+    assert rebuilds == [state.table.path]
+    assert state.table.latest_meta()["routing"] == state.routing
+    oracle = crawl_oracle(seeds, WEB, max_rounds=3)
+    assert cr2.crawl_log_list() == oracle.crawl_log
+    assert cr2.seen_urls_list() == set(oracle.seen)

@@ -98,8 +98,44 @@ def test_forget_then_recrawl_rediscovers(spark, drained, rebuilds):
 
 
 def test_forget_unknown_is_noop(spark, drained):
+    """A ``forget`` that matches no seen url retracts nothing and commits
+    no snapshot."""
     cr = drained
+    v = cr.seen.current_version()
     assert cr.forget(["http://host0.example/cat0/p999999"]) == 0
+    assert cr.seen.current_version() == v
+
+
+def test_manifest_live_rows_match_reads(spark, tmp_path):
+    """Differential: the live-row count every manifest records (what the
+    round reads as ``scheduled`` and ``forget`` as its result, with no
+    Spark job) equals the row count a read of the table returns — after
+    init, each round, ``recrawl``, ``forget``, a compaction, and in a
+    crawler reopened on the workdir."""
+    def check(cr, what):
+        for t in (cr.frontier, cr.seen):
+            assert t.live_rows() == t.read().count(), (what, t.path)
+
+    cfg = CrawlConfig(web=WEB)
+    cr = SparkCrawler(spark, str(tmp_path), cfg)
+    cr.init_from_seeds(seed_urls(WEB, n_per_host=2))
+    check(cr, "init")
+    for rnd in range(2):
+        pending = cr.frontier.read().count()
+        m = cr.run_round()
+        assert m["scheduled"] == pending
+        check(cr, f"round {rnd}")
+    fetched = [u for _, u in cr.crawl_log_list()]
+    assert cr.recrawl(fetched[:3]) == 3
+    check(cr, "recrawl")
+    assert cr.forget(fetched[3:5]) == 2
+    check(cr, "forget")
+    cr.frontier.compact()
+    check(cr, "compaction")
+    cr = SparkCrawler(spark, str(tmp_path), cfg)
+    check(cr, "reopen")
+    cr.run_round()
+    check(cr, "round after reopen")
 
 
 def test_seedless_crawl_runs_recrawled_urls(spark, tmp_path):
