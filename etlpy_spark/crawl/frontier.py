@@ -552,9 +552,9 @@ class SparkCrawler:
         collects (fetch order, then discovered order), the fused seen
         write (it materializes the robots-annotated frontier and fetch
         caches and the whole link path), the image write, which reads
-        that fetch cache, then the frontier tombstone write. So the seen +
-        crawl-log commit precedes the image phase and the frontier +
-        metrics commit follows it."""
+        that fetch cache, then the fetched-url broadcast and the frontier
+        tombstone write. So the seen + crawl-log commit precedes the image
+        phase and the frontier + metrics commit follows it."""
         st = self.state()
         rnd = int(st["round"])
         scheduled = self.frontier.live_rows()
@@ -842,42 +842,41 @@ class SparkCrawler:
     ) -> dict:
         """Round commit: one merge-on-read frontier commit appends the
         seen commit's data dir ``new_dir`` (None: tombstones only) and
-        tombstones the consumed URLs (fetched + robots-blocked) —
-        O(round-sized files), never O(pending); its snapshot meta is the
+        tombstones the consumed rows (robots-blocked, and every row of a
+        fetched url) — O(round-sized files); its snapshot meta is the
         crawl's resume state, and its metrics take ``robots_blocked`` from
-        the tombstone write's count (every selected url was fetched, so
-        the rest were blocked). Tombstones compact automatically past
-        SnapshotTable's threshold (one distributed rewrite). Then the
-        round's one metrics row, written in-process under a fixed part
-        name (no Spark job): a crashed-round re-run rewrites the identical
-        file under the identical name, which keeps the metrics table
-        inside the streaming bridge's exactly-once contract. Returns the
-        metrics."""
+        the tombstone write's count of blocked rows. Tombstones compact
+        automatically past SnapshotTable's threshold (one distributed
+        rewrite). Then the round's one metrics row, written in-process
+        under a fixed part name (no Spark job): a crashed-round re-run
+        rewrites the identical file under the identical name, which keeps
+        the metrics table inside the streaming bridge's exactly-once
+        contract. Returns the metrics."""
         rnd = int(st["round"])
+        m: dict = {}
 
-        def state_meta(_, n_tombstoned: int) -> dict:
+        def state_meta(_, __, blocked: int) -> dict:
+            m.update(round=rnd, scheduled=scheduled, robots_blocked=blocked,
+                     fetched=fetched, deferred=scheduled - blocked - fetched,
+                     new_urls=n_new, new_images=n_images)
             return {
                 "round": rnd + 1,
                 "next_fetch_seq": int(st["next_fetch_seq"]) + fetched,
                 "next_discovered_seq": int(st["next_discovered_seq"]) + n_new,
-                "metrics": {
-                    "round": rnd,
-                    "scheduled": scheduled,
-                    "robots_blocked": n_tombstoned - fetched,
-                    "fetched": fetched,
-                    "deferred": scheduled - n_tombstoned,
-                    "new_urls": n_new,
-                    "new_images": n_images,
-                },
+                "metrics": m,
             }
 
-        removed = selected.select("url").unionByName(
-            base.filter(F.col("__blocked__")).select("url")
+        # one tombstone per consumed ROW, so the frontier's live-row count
+        # stays exact: a url can be pending twice (recrawled, or forgotten
+        # while pending, then rediscovered), and its key deletes both rows
+        # even when the politeness budget selected only one
+        consumed = base.filter(F.col("__blocked__")).unionByName(
+            base.join(selected.select("url"), "url", "left_semi")
         )
         self.frontier.append_with_deletes(
-            new_dir, removed, key="url", meta=state_meta
+            new_dir, consumed.select("url", "__blocked__"), key="url",
+            meta=state_meta, flag="__blocked__",
         )
-        m = self.state()["metrics"]
         mv, metrics_dir = self.metrics.begin_external()
         write_part(
             self.metrics.layout, {k: [v] for k, v in m.items()},
@@ -947,21 +946,21 @@ class SparkCrawler:
             "url", "discovered_seq",
             F.lit(rnd).alias("round"), F.lit(-2).alias("lineage_part"),
         )
+        n = 0
+
+        def state_meta(appended: int, *_) -> dict:
+            nonlocal n
+            n = appended
+            return {"round": rnd, "next_fetch_seq": int(st["next_fetch_seq"]),
+                    "next_discovered_seq": seq_base + n, "recrawled": n}
+
         # append-only enqueue (pending rows stay in their files): with
         # sequence-aware tombstones a previously-fetched url appended here
         # is NOT re-deleted by old tombstones, so re-enqueue always lands
-        self.frontier.append(
-            rows,
-            meta=lambda n, _: {
-                "round": rnd,
-                "next_fetch_seq": int(st["next_fetch_seq"]),
-                "next_discovered_seq": seq_base + n,
-                "recrawled": n,
-            },
-        )
+        self.frontier.append(rows, meta=state_meta)
         for c in caches:
             c.unpersist()
-        return int(self.state()["recrawled"])
+        return n
 
     def forget(self, urls) -> int:
         """Retract URLs from the seen set so they become *discoverable*
@@ -986,9 +985,8 @@ class SparkCrawler:
         before = self.seen.live_rows()
         if not before:
             return 0
-        # tombstone exactly the urls that ARE in the table: the live-row
-        # count subtracts one row per tombstone
-        hits = self._urls_df(urls).join(self.seen.read(), on="url", how="left_semi")
+        # one tombstone per seen row of a target url
+        hits = self.seen.read().join(self._urls_df(urls), on="url", how="left_semi")
         self.seen.append_with_deletes(None, hits, key="url")
         return before - self.seen.live_rows()
 

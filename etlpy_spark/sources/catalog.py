@@ -61,9 +61,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# compaction writes at most one file per this many live rows
-COMPACT_ROWS_PER_FILE = 1 << 20
-
 
 def _pa_type(name: str):
     """Spark DDL simple-string → pyarrow type, for the declared layouts."""
@@ -277,19 +274,24 @@ class SnapshotTable:
     # -- commits
 
     def _write_data_dir(
-        self, df: DataFrame, data_dir: str, layout: TableLayout | None = None
-    ) -> int:
+        self, df: DataFrame, data_dir: str, layout: TableLayout | None = None,
+        flag: str | None = None,
+    ) -> tuple[int, int]:
         """Write ``df``'s rows as parquet under ``data_dir`` with ``layout``
-        (default: the table's); returns the rows written. Without a layout
-        this is the Spark writer. With one, each task buffers its partition
-        and writes ONE ``part-{pid:05d}.parquet`` through
-        :func:`write_part`, so a retried or speculated task replaces its
-        own identical output instead of duplicating rows, and returns its
-        count row. An empty ``df`` leaves an empty dir."""
+        (default: the table's); returns the rows written and how many of
+        them have the boolean column ``flag`` set (a column of ``df`` the
+        layout does not write; 0 without one). Without a layout this is
+        the Spark writer. With one, each task buffers its partition and
+        writes ONE ``part-{pid:05d}.parquet`` through :func:`write_part`,
+        so a retried or speculated task replaces its own identical output
+        instead of duplicating rows, and returns its count row. An empty
+        ``df`` leaves an empty dir."""
         layout = layout or self.layout
         if layout is None:
+            if flag is not None:
+                raise ValueError("a flag count needs a table layout")
             df.write.mode("overwrite").parquet(data_dir)
-            return self._footer_rows(data_dir)
+            return self._footer_rows(data_dir), 0
         os.makedirs(data_dir, exist_ok=True)
 
         def write(batches):
@@ -302,14 +304,15 @@ class SnapshotTable:
             pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
             pid = TaskContext.get().partitionId()
             path = os.path.join(data_dir, f"part-{pid:05d}.parquet")
-            yield pd.DataFrame({"n": [write_part(layout, pdf, path)]})
+            n = write_part(layout, pdf, path)
+            yield pd.DataFrame({"n": [n], "f": [int(pdf[flag].sum()) if flag else 0]})
 
-        return sum(r.n for r in df.mapInPandas(write, schema="n long").collect())
+        counts = df.mapInPandas(write, schema="n long, f long").collect()
+        return sum(r.n for r in counts), sum(r.f for r in counts)
 
     def _commit_manifest(
-        self, v: int, mode: str, data_dir: str | None,
-        meta: dict | Callable[[int, int], dict] | None, rows: int | None = None,
-        tombstones: tuple[str, str, int] | None = None,
+        self, v: int, mode: str, data_dir: str | None, meta: dict | Callable | None,
+        rows: int | None = None, tombstones: tuple | None = None,
     ) -> dict:
         """Make snapshot ``v`` (``data_dir`` already written; None adds
         none) the current one — the single place a snapshot chains on.
@@ -320,12 +323,13 @@ class SnapshotTable:
         total of ``data_dir`` when not given): a frozen live-row count
         makes a later tiny retraction trip a full compaction. ``overwrite``
         starts a fresh chain: no old data, no tombstones.
-        ``tombstones=(key, del_dir, n)`` adds an equality-delete dir of
-        ``n`` keys that applies to the data dirs committed BEFORE this one
-        (Iceberg sequence numbers: rows appended in this commit or a later
-        one with a deleted key stay live). The manifest's ``rows`` = live
-        rows before + ``rows`` - ``n``. A callable ``meta`` gets
-        (``rows``, ``n``). Returns the manifest."""
+        ``tombstones=(key, del_dir, n, flagged)`` adds an equality-delete
+        dir of ``n`` keys, one per row it deletes, that applies to the data
+        dirs committed BEFORE this one (Iceberg sequence numbers: rows
+        appended in this commit or a later one with a deleted key stay
+        live). The manifest's ``rows`` = live rows before + ``rows`` -
+        ``n``. A callable ``meta`` gets (``rows``, ``n``, ``flagged``).
+        Returns the manifest."""
         ps = None
         if mode == "append" and (prev := self.current_version()):
             ps = self.snapshot(prev)
@@ -333,9 +337,9 @@ class SnapshotTable:
         new_dirs = [data_dir] if data_dir else []
         if rows is None:
             rows = sum(self._footer_rows(d) for d in new_dirs)
-        _, del_dir, n_tomb = tombstones or (None, None, 0)
+        _, del_dir, n_tomb, flagged = tombstones or (None, None, 0, 0)
         if callable(meta):
-            meta = meta(rows, n_tomb)
+            meta = meta(rows, n_tomb, flagged)
         live = (ps.rows if ps else 0) + rows - n_tomb
         snap = {"version": v, "mode": mode, "data_dirs": prev_dirs + new_dirs,
                 "meta": dict(meta or {}), "rows": live}
@@ -367,23 +371,23 @@ class SnapshotTable:
             f.write(str(version))
         os.replace(cur_tmp, os.path.join(self.path, "_current"))
 
-    def _commit(self, df: DataFrame, mode: str, meta: dict | None) -> int:
+    def _commit(self, df: DataFrame, mode: str, meta) -> tuple[int, int]:
+        """Commit ``df`` as a new data dir; returns (version, rows written)."""
         v = (self.current_version() or 0) + 1
         data_dir = self._data_dir(v)
-        rows = self._write_data_dir(df, data_dir)
+        rows, _ = self._write_data_dir(df, data_dir)
         self._commit_manifest(v, mode, data_dir, meta, rows=rows)
-        return v
+        return v, rows
 
     def append(self, df: DataFrame, meta: dict | Callable | None = None) -> int:
-        return self._commit(df, "append", meta)
+        return self._commit(df, "append", meta)[0]
 
     def append_counted(self, df: DataFrame, meta: dict | None = None) -> tuple[int, int]:
         """Append and return (version, rows written by the append)."""
-        v = self._commit(df, "append", meta)
-        return v, self._footer_rows(self.snapshot(v).data_dirs[-1])
+        return self._commit(df, "append", meta)
 
     def overwrite(self, df: DataFrame, meta: dict | None = None) -> int:
-        return self._commit(df, "overwrite", meta)
+        return self._commit(df, "overwrite", meta)[0]
 
     # -- externally-written data (executor-side writers)
 
@@ -430,17 +434,20 @@ class SnapshotTable:
 
     def append_with_deletes(
         self, data: DataFrame | str | None, delete_keys: DataFrame | None,
-        key: str, meta: dict | Callable[[int, int], dict] | None = None,
-        compact_threshold: float = 0.3,
+        key: str, meta: dict | Callable | None = None,
+        compact_threshold: float = 0.3, flag: str | None = None,
     ) -> int:
         """One atomic commit = append ``data`` + equality-delete every
         existing row whose ``key`` appears in ``delete_keys`` (Iceberg
         merge-on-read DELETE semantics: a ~key-only tombstone file, no
         data-file rewrite). ``read()`` applies tombstones as an anti-join.
         ``data`` may also be a written data dir (shared, not copied) or
-        None, and ``delete_keys`` None (no tombstones). Each delete key
-        must match one live row: the live-row count drops by one per key.
-        A tombstone-only commit with no delete key is not made.
+        None, and ``delete_keys`` None (no tombstones). ``delete_keys``
+        holds one row per live row it deletes: the live-row count drops by
+        one per row. ``flag`` names a boolean column of ``delete_keys``
+        whose set rows the tombstone write counts for a callable ``meta``.
+        A commit that would add no data, no tombstone and no meta changes
+        nothing and is not made.
 
         This turns a mutate-in-place table (the crawl frontier) from an
         O(table) rewrite per commit into O(changed rows): at a 10^10-URL
@@ -453,18 +460,18 @@ class SnapshotTable:
         data_dir, rows = data, None
         if isinstance(data, DataFrame):
             data_dir = self._data_dir(v)
-            rows = self._write_data_dir(data, data_dir)
+            rows, _ = self._write_data_dir(data, data_dir)
         tombstones = None
         if delete_keys is not None:
             del_dir = self._data_dir(v) + ".del"
             # tombstones are URL-heavy too: the key column keeps the table's
             # sorted layout + encoding
-            n = self._write_data_dir(
-                delete_keys.select(key), del_dir,
-                self.layout.tombstones(key) if self.layout else None,
+            n, flagged = self._write_data_dir(
+                delete_keys.select(key, *([flag] if flag else [])), del_dir,
+                self.layout.tombstones(key) if self.layout else None, flag,
             )
-            tombstones = (key, del_dir, n)
-            if not n and data_dir is None:
+            tombstones = (key, del_dir, n, flagged)
+            if not n and data_dir is None and meta is None:
                 shutil.rmtree(del_dir, ignore_errors=True)
                 return self.current_version() or 0
         snap = self._commit_manifest(
@@ -479,18 +486,13 @@ class SnapshotTable:
         """Materialize the post-delete view into one fresh snapshot (the
         moral equivalent of Iceberg rewrite_data_files): one distributed
         rewrite clears all tombstones so read-side anti-join cost stays
-        bounded. Its input coalesces to at most ceil(live rows /
-        COMPACT_ROWS_PER_FILE) files. Carries ``meta`` (defaults to the
-        current snapshot's)."""
+        bounded. Carries ``meta`` (defaults to the current snapshot's)."""
         cur = self.current_version()
         if cur is None:
             return 0
-        snap = self.snapshot(cur)
-        n_files = max(1, -(-snap.rows // COMPACT_ROWS_PER_FILE))
-        return self._commit(
-            self.read().coalesce(n_files), "overwrite",
-            snap.meta if meta is None else meta,
-        )
+        if meta is None:
+            meta = self.snapshot(cur).meta
+        return self._commit(self.read(), "overwrite", meta)[0]
 
     def live_rows(self) -> int:
         """The current snapshot's row count from its manifest (no job)."""
@@ -508,18 +510,18 @@ class SnapshotTable:
         rows win unless prefer_new. The anti-join is the only shuffle; at
         Iceberg this is a real MERGE with file-level pruning."""
         if self.current_version() is None:
-            return self._commit(df.dropDuplicates([key]), "overwrite", meta)
+            return self._commit(df.dropDuplicates([key]), "overwrite", meta)[0]
         cur = self.read()
         if prefer_new:
             merged = df.dropDuplicates([key]).unionByName(
                 cur.join(df.select(key).distinct(), on=key, how="left_anti")
             )
-            return self._commit(merged, "overwrite", meta)
+            return self._commit(merged, "overwrite", meta)[0]
         new_rows = df.dropDuplicates([key]).join(
             cur.select(key).distinct(), on=key, how="left_anti"
         )
         # append-only commit: existing files untouched, one new data dir
-        return self._commit(new_rows, "append", meta)
+        return self._commit(new_rows, "append", meta)[0]
 
     # -- reads
 

@@ -178,27 +178,25 @@ def test_append_with_deletes_takes_a_written_dir_or_none(spark):
     assert df.count() == 0 and df.columns == ["k", "v"]
 
 
-def test_compaction_sizes_its_files_by_live_rows(spark, monkeypatch):
-    """Compaction coalesces a many-file input into ceil(live rows /
-    COMPACT_ROWS_PER_FILE) files, taking the live rows from the manifest;
-    every manifest's live-row count is what a read returns."""
-    from etlpy_spark.sources import catalog
-
+def test_live_rows_and_flag_count_come_from_the_writes(spark):
+    """Each manifest records its live rows (before + appended - tombstone
+    rows, counted by the writes), the tombstone write counts the set rows
+    of a ``flag`` column for a callable meta, and a commit that would add
+    nothing is skipped unless it carries meta."""
     layout = TableLayout("k string, v int", sort=("k",))
     tbl = SnapshotTable(spark, tempfile.mkdtemp(prefix="mor_"), layout)
-
-    def compacted_files(rows_per_file: int) -> int:
-        monkeypatch.setattr(catalog, "COMPACT_ROWS_PER_FILE", rows_per_file)
-        tbl.overwrite(_t(spark, [(f"k{i:02d}", i) for i in range(20)]).repartition(5))
-        (first,) = tbl.snapshot(tbl.current_version()).data_dirs
-        assert len(catalog.parquet_files(first)) == 5
-        tbl.append_with_deletes(_t(spark, [("x", 99)]), _keys(spark, ["k00", "k01"]),
-                                key="k", compact_threshold=100.0)
-        assert tbl.live_rows() == 19 == tbl.read().count()
-        (out,) = tbl.snapshot(tbl.compact()).data_dirs
-        assert tbl.live_rows() == 19
-        assert _read_set(tbl) == {(f"k{i:02d}", i) for i in range(2, 20)} | {("x", 99)}
-        return len(catalog.parquet_files(out))
-
-    assert compacted_files(catalog.COMPACT_ROWS_PER_FILE) == 1
-    assert compacted_files(8) == 3  # ceil(19 / 8)
+    tbl.overwrite(_t(spark, [("a", 1), ("b", 2), ("c", 3)]))
+    assert tbl.live_rows() == 3
+    counts = []
+    dels = spark.createDataFrame([("a", True), ("b", False)], "k string, f boolean")
+    v = tbl.append_with_deletes(
+        _t(spark, [("d", 4)]), dels, key="k", flag="f", compact_threshold=100.0,
+        meta=lambda *c: counts.append(c) or {"round": 1},
+    )
+    assert counts == [(1, 2, 1)]  # (appended, tombstone rows, flagged)
+    assert tbl.live_rows() == 2 == tbl.read().count()
+    assert tbl.append_with_deletes(None, _keys(spark, []), key="k") == v
+    v2 = tbl.append_with_deletes(None, _keys(spark, []), key="k", meta={"round": 2},
+                                 compact_threshold=100.0)
+    assert v2 == v + 1 and tbl.latest_meta() == {"round": 2}
+    assert tbl.live_rows() == 2

@@ -520,12 +520,14 @@ def _job_count(sc, name: str, fn, *args):
 def test_steady_round_job_count(spark):
     """Per-call fixed cost is Spark jobs, and no job only counts: a steady
     WEB round (seen table and filter state already committed, frontier
-    compaction included) runs at most 25 of them, a ``recrawl`` at most
+    compaction included) runs at most 26 of them, a ``recrawl`` at most
     5 and a ``forget`` that compacts ``seen`` at most 8. Each new url is
     written by one job (the seen write-and-fold, whose data dir the
     frontier appends), every layout-table read takes its declared
     schema, so no read runs a schema-inference job, and every count
-    comes from a write or a snapshot manifest."""
+    comes from a write or a snapshot manifest. (One of the round's jobs
+    broadcasts the fetched urls, so its tombstones can name every row of
+    a url pending twice.)"""
     sc = spark.sparkContext
     wd = tempfile.mkdtemp(prefix="crawl_jobs_")
     try:
@@ -534,7 +536,7 @@ def test_steady_round_job_count(spark):
         cr.run_round()
         m, n_jobs = _job_count(sc, "steady WEB round", cr.run_round)
         assert m["round"] == 1 and m["fetched"] > 0 and m["new_urls"] > 0
-        assert 0 < n_jobs <= 25, n_jobs
+        assert 0 < n_jobs <= 26, n_jobs
 
         fetched = [u for _, u in cr.crawl_log_list()]
         n, n_jobs = _job_count(sc, "recrawl", cr.recrawl, fetched[:4])

@@ -158,3 +158,36 @@ def test_seedless_crawl_runs_recrawled_urls(spark, tmp_path):
 
     m2 = cr.run_round()
     assert m2["round"] == 1 and m2["scheduled"] == m["new_urls"]
+
+
+def test_url_pending_twice_keeps_counts_exact(spark, tmp_path):
+    """A url can be pending twice: recrawled while the seen set never held
+    it, then rediscovered through a link before its fetch. When the
+    per-host budget selects one of its rows, the round's tombstones delete
+    both, and every count stays what a read returns: ``scheduled`` is the
+    pending row count, ``robots_blocked`` the robots-blocked pending rows,
+    the manifest's live rows match the frontier, and the crawl drains."""
+    # a backlog of 16 pages a host at 2 fetches a host per round keeps
+    # most rounds below the compaction threshold (a compaction recounts)
+    web = WebConfig(n_hosts=2, n_cats=1, pages_per_cat=16, politeness_budget=2,
+                    max_links=3, max_images=1)
+    cr = SparkCrawler(spark, str(tmp_path), CrawlConfig(web=web))
+    cr.init_from_seeds([])
+    assert cr.recrawl([make_url(k, 0, n) for k in range(2) for n in range(1, 17)]) == 32
+    doubled = 0
+    for _ in range(20):
+        pending = cr.frontier.read()
+        n_pending = pending.count()
+        doubled = max(doubled, n_pending - pending.select("url").distinct().count())
+        base, _ = cr._schedule(int(cr.state()["round"]))
+        blocked = base.filter("__blocked__").count()
+        base.unpersist()
+        m = cr.run_round()
+        assert m["scheduled"] == n_pending, m
+        assert cr.frontier.live_rows() == cr.frontier.read().count(), m
+        if not n_pending:
+            break
+        assert m["robots_blocked"] == blocked, m
+        assert m["deferred"] == n_pending - blocked - m["fetched"], m
+    assert doubled > 0, "the web must leave some url pending twice"
+    assert m["scheduled"] == 0 and cr.frontier.read().count() == 0
