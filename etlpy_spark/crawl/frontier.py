@@ -74,6 +74,7 @@ from pyspark.sql import functions as F
 
 from etlpy_spark.crawl.filterstate import FilterState, PairFolder
 from etlpy_spark.crawl.seen import filter_spec
+from etlpy_spark.functions.url import canonicalize_rows
 from etlpy_spark.sources.catalog import SnapshotTable, TableLayout, write_part
 from etlpy_spark.sources.synthetic_web import WebConfig
 
@@ -170,16 +171,20 @@ def _fail_once(fail_dir: str | None, tag: str, pid: int) -> None:
         raise RuntimeError(f"injected one-shot task failure ({tag}, pid={pid})")
 
 
-def _canonicalized(df: DataFrame, schema: str) -> DataFrame:
-    """``df`` with its ``raw`` url column canonicalized into ``url`` and
-    the invalid urls dropped, in one ``mapInPandas`` (one Python runner
-    per task) — seeds and recrawl/forget lists."""
-    from etlpy_spark.functions.url import canonicalize_rows
+def _canonical(urls: list[str]) -> list[str]:
+    """The distinct canonical forms of ``urls``, sorted, invalid urls
+    dropped — on the driver, with the helper the fetch and seed tasks use."""
+    raw = pd.DataFrame({"raw": pd.Series(urls, dtype=object)})
+    return sorted(set(canonicalize_rows(raw, "raw", "url")["url"]))
 
-    return df.mapInPandas(
-        lambda batches: (canonicalize_rows(pdf, "raw", "url") for pdf in batches),
-        schema=schema,
-    )
+
+def _held(table: SnapshotTable, urls: list[str]) -> list[str]:
+    """One url per live row of ``table`` whose url is in ``urls``, from one
+    filtered scan (the IN list reaches the Parquet reader); no job when
+    either side is empty."""
+    if not urls or not table.live_rows():
+        return []
+    return [r.url for r in table.read().filter(F.col("url").isin(urls)).select("url").collect()]
 
 
 def _image_rows(sub: pd.DataFrame, web: WebConfig, rnd: int) -> dict:
@@ -232,20 +237,18 @@ def global_rank(
     over npart integers). Range partitions are ordered, so per-partition
     rank + offset == the global rank — the 10^10-row form of row_number.
 
-    Returns the ranked df (cached on the small path). ``small=True`` keeps
-    the plain global window (cheaper below ~20k rows) and runs no job;
-    callers count the ranked rows from the write that consumes them
-    (every driver action is a full Spark job, and the per-call job count
-    is what caps URLs/s at the 10^10 design point). The large path's
+    ``small=True`` keeps the plain global window (cheaper below ~20k rows),
+    uncached and lazy: a second reader recomputes the same ranks, since
+    the order is a unique key. Callers count the ranked rows from the
+    write that consumes them (every driver action is a full Spark job,
+    and the per-call job count is what caps URLs/s at the 10^10 design
+    point). The large path caches its range partitions, and its
     partition-size collect IS its offset computation."""
     if small:
         w = Window.orderBy(*order_cols)
-        out = df.withColumn(
+        return df.withColumn(
             out_col, F.row_number().over(w).cast("long") + F.lit(base) - 1
-        ).cache()
-        if caches is not None:
-            caches.append(out)
-        return out
+        )
     d = (
         df.repartitionByRange(npart, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
@@ -380,7 +383,10 @@ class SparkCrawler:
         raw = spark.createDataFrame(
             seed_pdf, schema="seed_seq long, raw string"
         ).repartition(self.cfg.n_buckets)
-        df = _canonicalized(raw, "seed_seq long, url string")
+        df = raw.mapInPandas(
+            lambda batches: (canonicalize_rows(pdf, "raw", "url") for pdf in batches),
+            schema="seed_seq long, url string",
+        )
         # keep-first per url (min seed_seq) via map-side-combinable agg;
         # dispatch order = seed order (reference distributed.py:60-66).
         # host/priority are NOT materialized anywhere: they are pure
@@ -665,7 +671,11 @@ class SparkCrawler:
             selected, ["__eprio__", "discovered_seq"], "fetch_seq", fetch_base,
             cfg.n_buckets, small=small, caches=caches,
         )
-        selected = selected.drop("__eprio__")
+        # cached: the fetch and _commit_round's tombstone semi-join both
+        # read it (uncached, the semi-join re-runs the politeness window:
+        # perfbench round_s +3 % on 4 cores)
+        selected = selected.drop("__eprio__").cache()
+        caches.append(selected)
 
         # fetch inside politeness buckets (salted by host hash). Archive
         # replay joins the page HTML in BEFORE bucketing (left join: a
@@ -691,7 +701,6 @@ class SparkCrawler:
         def fetch_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from pyspark import TaskContext
 
-            from etlpy_spark.functions.url import canonicalize_rows
             from etlpy_spark.sources.synthetic_web import page, parse_page
 
             part = TaskContext.get().partitionId() if TaskContext.get() else -1
@@ -902,20 +911,7 @@ class SparkCrawler:
 
     # -- refresh / retraction APIs --------------------------------------------
 
-    def _urls_df(self, urls) -> DataFrame:
-        """Canonical, distinct url column from a list (Arrow path, like
-        seeds) or a DataFrame with a ``url`` column (the scale path — a
-        10^10-scale recrawl set never rides the driver)."""
-        if isinstance(urls, DataFrame):
-            raw = urls.select(F.col("url").cast("string").alias("raw"))
-        else:
-            raw = self.spark.createDataFrame(
-                pd.DataFrame({"raw": pd.array(urls, dtype="string")}),
-                schema="raw string",
-            )
-        return _canonicalized(raw, "url string").distinct()
-
-    def recrawl(self, urls) -> int:
+    def recrawl(self, urls: list[str]) -> int:
         """Stale-page refresh: re-enqueue URLs into the frontier so the next
         round refetches them. The seen set is NOT touched — it gates link
         *discovery*, not fetching, so a direct enqueue refetches regardless
@@ -923,54 +919,50 @@ class SparkCrawler:
         anti-joins, politeness/robots/priority ordering) holds unchanged.
         Newly appearing links on the refetched page are discovered normally.
 
-        Rows get fresh ``discovered_seq`` values (ranked by url — pure-
-        DataFrame and deterministic) and ``lineage_part = -2`` so recrawled
-        lineage is distinguishable from seed (-1) and link parts (≥0).
-        Returns the number of URLs enqueued (already-pending ones are
-        skipped), as the append write counted them."""
-        # list inputs below the threshold take the cheap global-window rank;
-        # DataFrame inputs are assumed big → two-phase ranged rank
-        is_small = not isinstance(urls, DataFrame) and len(urls) <= RANK_THRESHOLD
-        pending = self.frontier.read()
-        tgt = self._urls_df(urls).join(
-            pending.select("url"), on="url", how="left_anti"
-        )
+        A point operation on a driver-held list (no DataFrame form): the
+        list is canonicalized and deduplicated on the driver (O(list)),
+        one filtered scan finds the urls already pending, and the rest are
+        written in-process as one frontier part file — the only Spark job
+        is the scan. Rows get fresh ``discovered_seq`` values (ranked by
+        url) and ``lineage_part = -2`` so recrawled lineage is
+        distinguishable from seed (-1) and link parts (≥0). Returns the
+        number of URLs enqueued (already-pending ones are skipped); when
+        it is 0 no snapshot is committed."""
+        if not self.initialized():
+            raise ValueError("recrawl needs an initialized crawl (init_from_seeds)")
+        canon = _canonical(urls)
+        pending = set(_held(self.frontier, canon))
+        new = [u for u in canon if u not in pending]
+        if not new:
+            return 0
         st = self.state()
-        rnd, seq_base = int(st["round"]), int(st["next_discovered_seq"])
-        caches: list = []
-        ranked = global_rank(
-            tgt, ["url"], "discovered_seq", seq_base, self.cfg.n_buckets,
-            small=is_small, caches=caches,
-        )
-        rows = ranked.select(
-            "url", "discovered_seq",
-            F.lit(rnd).alias("round"), F.lit(-2).alias("lineage_part"),
-        )
-        n = 0
-
-        def state_meta(appended: int, *_) -> dict:
-            nonlocal n
-            n = appended
-            return {"round": rnd, "next_fetch_seq": int(st["next_fetch_seq"]),
-                    "next_discovered_seq": seq_base + n, "recrawled": n}
-
+        rnd, seq_base, n = int(st["round"]), int(st["next_discovered_seq"]), len(new)
         # append-only enqueue (pending rows stay in their files): with
         # sequence-aware tombstones a previously-fetched url appended here
         # is NOT re-deleted by old tombstones, so re-enqueue always lands
-        self.frontier.append(rows, meta=state_meta)
-        for c in caches:
-            c.unpersist()
+        v, data_dir = self.frontier.begin_external()
+        write_part(
+            self.frontier.layout,
+            {"url": new, "discovered_seq": list(range(seq_base, seq_base + n)),
+             "round": [rnd] * n, "lineage_part": [-2] * n},
+            os.path.join(data_dir, "part-00000.parquet"),
+        )
+        self.frontier.commit_external(v, data_dir, meta={
+            "round": rnd, "next_fetch_seq": int(st["next_fetch_seq"]),
+            "next_discovered_seq": seq_base + n, "recrawled": n,
+        })
         return n
 
-    def forget(self, urls) -> int:
+    def forget(self, urls: list[str]) -> int:
         """Retract URLs from the seen set so they become *discoverable*
-        again through links (domain purge-and-recrawl, takedown-then-allow).
-        Retraction is O(changed rows), not O(table): the exact table gets
-        equality-delete TOMBSTONES (``SnapshotTable.append_with_deletes``,
-        the same merge-on-read primitive the frontier commits use) instead
-        of the r2 full anti-join rewrite — at a 10^10-row seen set a
-        rewrite per takedown request is not a thing. Accumulated tombstones
-        auto-compact past the threshold.
+        again through links (takedown-then-allow). A point operation on a
+        driver-held list (no DataFrame form): the list is canonicalized on
+        the driver (O(list)), one filtered scan finds the seen rows, and
+        their equality-delete TOMBSTONES (``SnapshotTable.append_with_deletes``,
+        the merge-on-read primitive the frontier commits use) are written
+        in-process, one per seen row — O(changed rows), never a rewrite
+        per takedown request. Accumulated tombstones auto-compact past the
+        threshold.
 
         The filter state is left alone: a forgotten URL stays
         filter-positive, so when a link rediscovers it, the residue
@@ -978,17 +970,13 @@ class SparkCrawler:
         finds it new. Filters promise no false negatives, not no false
         positives, so the result is exact and no rebuild is needed.
 
-        One write, no count job: the tombstone write counts the retracted
-        rows, and the manifest's live-row count drops by that many.
-        Returns it (0 before the seen table's first commit, and when no
-        url is seen: then no snapshot is committed)."""
-        before = self.seen.live_rows()
-        if not before:
-            return 0
-        # one tombstone per seen row of a target url
-        hits = self.seen.read().join(self._urls_df(urls), on="url", how="left_semi")
-        self.seen.append_with_deletes(None, hits, key="url")
-        return before - self.seen.live_rows()
+        Returns the number of seen rows retracted (0 before the seen
+        table's first commit, and when no url is seen: then no snapshot is
+        committed)."""
+        held = _held(self.seen, _canonical(urls))
+        if held:
+            self.seen.append_with_deletes(None, held, key="url")
+        return len(held)
 
     # -- results for parity checks ------------------------------------------
 

@@ -52,22 +52,11 @@ def get_spark(
         # each could start a concurrent mark cycle; call times varied with it
         .config("spark.buffer.pageSize", "1m")
         .config("spark.broadcast.blockSize", "1m")
+        # Fork Python workers from a daemon that stops every task re-reading
+        # pyspark.zip's directory (see spark_daemon.py); the package root is
+        # on the workers' PYTHONPATH above, so it imports at daemon start.
+        .config("spark.python.daemon.module", "etlpy_spark.spark_daemon")
     )
-    codec = os.environ.get("ETLPY_IO_CODEC")
-    if codec:
-        # One knob for byte-heavy paths: shuffle/broadcast/spill blocks
-        # (spark.io.*) and parquet table files. On a single box with
-        # tmpfs workdirs every written byte is DRAM traffic; on a real
-        # cluster it is network+disk — either way fewer bytes relieves
-        # the non-scaling resource at the cost of (scalable) CPU.
-        b = (
-            b.config("spark.io.compression.codec", codec)
-            .config("spark.sql.parquet.compression.codec", codec)
-        )
-    # Fork Python workers from a daemon that stops every task re-reading
-    # pyspark.zip's directory (see spark_daemon.py); the package root is on
-    # the workers' PYTHONPATH above, so the module imports at daemon start.
-    b = b.config("spark.python.daemon.module", "etlpy_spark.spark_daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -433,7 +433,7 @@ class SnapshotTable:
     # -- merge-on-read deletes (Iceberg equality-delete files + compaction)
 
     def append_with_deletes(
-        self, data: DataFrame | str | None, delete_keys: DataFrame | None,
+        self, data: DataFrame | str | None, delete_keys: DataFrame | list | None,
         key: str, meta: dict | Callable | None = None,
         compact_threshold: float = 0.3, flag: str | None = None,
     ) -> int:
@@ -442,9 +442,11 @@ class SnapshotTable:
         merge-on-read DELETE semantics: a ~key-only tombstone file, no
         data-file rewrite). ``read()`` applies tombstones as an anti-join.
         ``data`` may also be a written data dir (shared, not copied) or
-        None, and ``delete_keys`` None (no tombstones). ``delete_keys``
-        holds one row per live row it deletes: the live-row count drops by
-        one per row. ``flag`` names a boolean column of ``delete_keys``
+        None, and ``delete_keys`` None (no tombstones) or a list of key
+        values, written in-process as one tombstone file (layout tables
+        only; no Spark job). ``delete_keys`` holds one row (or list item)
+        per live row it deletes: the live-row count drops by one per row.
+        ``flag`` names a boolean column of a DataFrame ``delete_keys``
         whose set rows the tombstone write counts for a callable ``meta``.
         A commit that would add no data, no tombstone and no meta changes
         nothing and is not made.
@@ -466,10 +468,18 @@ class SnapshotTable:
             del_dir = self._data_dir(v) + ".del"
             # tombstones are URL-heavy too: the key column keeps the table's
             # sorted layout + encoding
-            n, flagged = self._write_data_dir(
-                delete_keys.select(key, *([flag] if flag else [])), del_dir,
-                self.layout.tombstones(key) if self.layout else None, flag,
-            )
+            tomb_layout = self.layout.tombstones(key) if self.layout else None
+            if isinstance(delete_keys, list):
+                os.makedirs(del_dir, exist_ok=True)
+                n, flagged = write_part(
+                    tomb_layout, {key: delete_keys},
+                    os.path.join(del_dir, "part-00000.parquet"),
+                ), 0
+            else:
+                n, flagged = self._write_data_dir(
+                    delete_keys.select(key, *([flag] if flag else [])), del_dir,
+                    tomb_layout, flag,
+                )
             tombstones = (key, del_dir, n, flagged)
             if not n and data_dir is None and meta is None:
                 shutil.rmtree(del_dir, ignore_errors=True)

@@ -341,16 +341,14 @@ def test_probe_runs_once_and_never_over_exact_tables(spark, monkeypatch, deliver
 
 
 def test_canonicalization_is_one_python_node(spark, monkeypatch):
-    """Seeds and recrawl/forget url lists are canonicalized by one Python
-    node (a ``mapInPandas`` that also drops invalid urls), not a UDF that
-    Catalyst evaluates once for the null filter and again for the value."""
+    """Seeds are canonicalized by one Python node (a ``mapInPandas`` that
+    also drops invalid urls), not a UDF that Catalyst evaluates once for
+    the null filter and again for the value. ``recrawl`` and ``forget``
+    canonicalize their lists on the driver, so their one lookup job's
+    plan holds no Python node."""
     wd = tempfile.mkdtemp(prefix="canon_plan_")
     try:
         cr = SparkCrawler(spark, wd, CrawlConfig(web=WEB))
-        urls = cr._urls_df(["HTTP://Host1.example:80/cat0/p1", "not a url"])
-        assert [r.url for r in urls.collect()] == ["http://host1.example/cat0/p1"]
-        assert len(_python_nodes(spark, urls._jdf.queryExecution().executedPlan())) == 1
-
         seed_plans = []
         commit_seen = SparkCrawler._commit_seen
 
@@ -362,6 +360,25 @@ def test_canonicalization_is_one_python_node(spark, monkeypatch):
         cr.init_from_seeds(seed_urls(WEB, n_per_host=2))
         assert len(seed_plans) == 1
         assert len(_python_nodes(spark, seed_plans[0])) == 1
+
+        lookups = []
+        cls = type(spark.range(1))
+        collect = cls.collect
+
+        def collect_and_record(df):
+            out = collect(df)
+            lookups.append(df._jdf.queryExecution().executedPlan())
+            return out
+
+        with monkeypatch.context() as m:
+            m.setattr(cls, "collect", collect_and_record)
+            assert cr.recrawl(["HTTP://Host1.example:80/cat0/p1", "not a url"]) == 1
+            assert cr.forget(["HTTP://HOST1.example:80/cat1/p9#top"]) == 1
+        assert len(lookups) == 2
+        assert [_python_nodes(spark, p) for p in lookups] == [[], []]
+        assert "http://host1.example/cat0/p1" in {
+            r.url for r in cr.frontier.read().collect()
+        }
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 
@@ -520,14 +537,16 @@ def _job_count(sc, name: str, fn, *args):
 def test_steady_round_job_count(spark):
     """Per-call fixed cost is Spark jobs, and no job only counts: a steady
     WEB round (seen table and filter state already committed, frontier
-    compaction included) runs at most 26 of them, a ``recrawl`` at most
-    5 and a ``forget`` that compacts ``seen`` at most 8. Each new url is
-    written by one job (the seen write-and-fold, whose data dir the
-    frontier appends), every layout-table read takes its declared
-    schema, so no read runs a schema-inference job, and every count
-    comes from a write or a snapshot manifest. (One of the round's jobs
-    broadcasts the fetched urls, so its tombstones can name every row of
-    a url pending twice.)"""
+    compaction included) runs at most 25 of them; a ``recrawl`` runs one
+    (the filtered scan of the frontier; its rows are written in-process),
+    a ``forget`` one (the filtered scan of ``seen``; its tombstones are
+    written in-process) and a ``forget`` that compacts ``seen`` at most 5.
+    Each new url is written by one job (the seen write-and-fold, whose
+    data dir the frontier appends), every layout-table read takes its
+    declared schema, so no read runs a schema-inference job, and every
+    count comes from a write or a snapshot manifest. (One of the round's
+    jobs broadcasts the fetched urls, so its tombstones can name every
+    row of a url pending twice.)"""
     sc = spark.sparkContext
     wd = tempfile.mkdtemp(prefix="crawl_jobs_")
     try:
@@ -536,16 +555,21 @@ def test_steady_round_job_count(spark):
         cr.run_round()
         m, n_jobs = _job_count(sc, "steady WEB round", cr.run_round)
         assert m["round"] == 1 and m["fetched"] > 0 and m["new_urls"] > 0
-        assert 0 < n_jobs <= 26, n_jobs
+        assert 0 < n_jobs <= 25, n_jobs
 
         fetched = [u for _, u in cr.crawl_log_list()]
         n, n_jobs = _job_count(sc, "recrawl", cr.recrawl, fetched[:4])
-        assert n == 4 and 0 < n_jobs <= 5, (n, n_jobs)
+        assert n == 4 and n_jobs == 1, (n, n_jobs)
+        seen = sorted(cr.seen_urls_list())
+        v = cr.seen.current_version()
+        n, n_jobs = _job_count(sc, "forget", cr.forget, seen[:1])
+        assert cr.seen.snapshot(cr.seen.current_version()).mode == "append"
+        assert cr.seen.current_version() == v + 1
+        assert n == 1 and n_jobs == 1, (n, n_jobs)
         # enough urls to trip seen's compaction, the costlier forget
-        forgotten = sorted(cr.seen_urls_list())[:12]
-        n, n_jobs = _job_count(sc, "forget", cr.forget, forgotten)
+        n, n_jobs = _job_count(sc, "forget", cr.forget, seen[1:13])
         assert cr.seen.snapshot(cr.seen.current_version()).mode == "overwrite"
-        assert n == 12 and 0 < n_jobs <= 8, (n, n_jobs)
+        assert n == 12 and 0 < n_jobs <= 5, (n, n_jobs)
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 

@@ -191,3 +191,59 @@ def test_url_pending_twice_keeps_counts_exact(spark, tmp_path):
         assert m["deferred"] == n_pending - blocked - m["fetched"], m
     assert doubled > 0, "the web must leave some url pending twice"
     assert m["scheduled"] == 0 and cr.frontier.read().count() == 0
+
+
+def test_point_path_semantics(spark, tmp_path):
+    """``recrawl`` and ``forget`` take a driver-held list: non-canonical
+    forms, duplicates and invalid urls collapse to the distinct canonical
+    urls; already-pending urls are skipped; the appended rows are ranked
+    by url from ``next_discovered_seq``; a call that changes nothing
+    commits no snapshot; and every manifest's live rows match a read."""
+    def check():
+        for t in (cr.frontier, cr.seen):
+            if t.current_version() is not None:
+                assert t.live_rows() == t.read().count(), t.path
+
+    cr = SparkCrawler(spark, str(tmp_path), CrawlConfig(web=WEB))
+    # no frontier yet: an enqueue would commit a state init_from_seeds skips
+    with pytest.raises(ValueError):
+        cr.recrawl([make_url(1, 0, 1)])
+    cr.init_from_seeds([])
+    assert cr.forget([make_url(1, 0, 1)]) == 0  # seedless: nothing is seen
+    assert cr.seen.current_version() is None
+    pending = make_url(1, 0, 3)
+    assert cr.recrawl([pending]) == 1
+    check()
+
+    st = cr.state()
+    seq = int(st["next_discovered_seq"])
+    batch = [
+        "HTTP://Host1.example:80/cat0/p2", make_url(1, 0, 1) + "#fragment",
+        make_url(1, 0, 2), "not a url", pending, make_url(1, 0, 1),
+    ]
+    assert cr.recrawl(batch) == 2
+    check()
+    rows = sorted(
+        (r.url, r.discovered_seq, r.round, r.lineage_part)
+        for r in cr.frontier.read().collect()
+    )
+    rnd = int(st["round"])
+    assert rows == [
+        (make_url(1, 0, 1), seq, rnd, -2),
+        (make_url(1, 0, 2), seq + 1, rnd, -2),
+        (pending, seq - 1, rnd, -2),
+    ]
+    assert cr.state()["next_discovered_seq"] == seq + 2
+
+    v = cr.frontier.current_version()
+    assert cr.recrawl(batch) == 0  # all pending: no snapshot
+    assert cr.recrawl([]) == 0
+    assert cr.frontier.current_version() == v
+
+    assert cr.run_round()["new_urls"] > 0
+    check()
+    seen = sorted(cr.seen_urls_list())[0]
+    loud = seen.replace("http://host", "HTTP://Host").replace(".example/", ".example:80/")
+    assert cr.forget([loud, seen + "#x", "not a url"]) == 1
+    assert seen not in cr.seen_urls_list()
+    check()
